@@ -1,17 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // plan-shape metrics per query (contention-IMMUNE, unlike seconds):
     // total shuffle bytes (read + write) and completed-stage count, via a
     // listener + per-query deltas. Stage-completed events are async, so
@@ -86,20 +77,13 @@ object Bench {
     // SPARK_GRAFT_ONLY=q1,q2 restricts the run to named queries — a local
     // iteration knob (per-query cpuSecs without the full 20-minute sweep);
     // the driver never sets it, so driver rounds keep the full registry.
-    // Unknown names fail LOUDLY (a typo would otherwise run an empty
-    // bench that reads as a result), and a restricted run writes its
-    // partial artifact to bench_stats_only.json so it can never clobber
-    // the tracked full-registry bench_stats.json diff base
+    // Unknown names fail LOUDLY (SparkEntry.select), and a restricted run
+    // writes its partial artifact to bench_stats_only.json so it can never
+    // clobber the tracked full-registry bench_stats.json diff base
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in the registry: ${unknown.toSeq.sorted.mkString(",")}")
-    }
+    val selected = SparkEntry.select(only)
     def runPass(): Seq[(String, PassRow)] =
-      SparkEntry.queries.toSeq.filter(q => only.forall(_.contains(q._1)))
-        .sortBy(_._1).map { case (name, fn) =>
+      selected.map { case (name, fn) =>
         val preDrained = drainListenerBus()
         val s0 = stagesAcc.get
         val b0 = shuffleBytesAcc.get
@@ -155,15 +139,6 @@ object Bench {
       // way (drain waits run outside the timed window).
       (name, win.secs, (win.cpuSecs, win.gcSecs), p1, p2)
     }
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val qs = results.map { case (k, v, _, _, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // a query is FAILED only when BOTH passes threw (the headline secs then
@@ -174,9 +149,9 @@ object Bench {
       .map { case (k, v, (cpu, gc), p1, p2) =>
         val (e1, e2) = (p1.err, p2.err)
         val errField =
-          if (e1.nonEmpty && e2.nonEmpty) s""","err":${jstr(e1.get)}""" else ""
-        val perPass = e1.map(m => s""","err_p1":${jstr(m)}""").getOrElse("") +
-          e2.map(m => s""","err_p2":${jstr(m)}""").getOrElse("")
+          if (e1.nonEmpty && e2.nonEmpty) s""","err":${Verify.jsonString(e1.get)}""" else ""
+        val perPass = e1.map(m => s""","err_p1":${Verify.jsonString(m)}""").getOrElse("") +
+          e2.map(m => s""","err_p2":${Verify.jsonString(m)}""").getOrElse("")
         val flakyField =
           if (e1.nonEmpty != e2.nonEmpty) s""","flaky":true""" else ""
         s"\"" + k +
@@ -205,20 +180,15 @@ object Bench {
       s""""queryStats":$qstats,"cpuSecs":$totalCpu,"gcSecs":$totalGc,""" +
       s""""drainTimeouts":$drainTimeouts,""" +
       s""""errors":$errCount,"flaky":$flakyCount,"sf":"$sfDir"}"""
-    // Write the file copies FIRST: a tail-limited stdout capture window has
-    // twice clipped the full per-query line from the front (r2, r6 verdicts),
-    // so the complete telemetry must exist on disk regardless of what
-    // survives the capture. bench_stats.json is the tracked artifact name;
-    // bench_result.json stays for compatibility with earlier tooling. A
-    // file-write failure (read-only cwd) must not suppress the printed
-    // result.
-    val statsFiles =
-      if (only.isDefined) Seq("bench_stats_only.json")
-      else Seq("bench_stats.json", "bench_result.json")
-    for (f <- statsFiles)
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get(f), (json + "\n").getBytes("UTF-8"))
-      catch { case e: Throwable => System.err.println(s"[bench] $f write failed: ${e.getMessage}") }
+    // Write the file FIRST: a tail-limited stdout capture window has twice
+    // clipped the full per-query line from the front (r2, r6 verdicts), so
+    // the complete telemetry must exist on disk regardless of what survives
+    // the capture. A file-write failure (read-only cwd) must not suppress
+    // the printed result.
+    val statsFile = if (only.isDefined) "bench_stats_only.json" else "bench_stats.json"
+    try java.nio.file.Files.write(
+      java.nio.file.Paths.get(statsFile), (json + "\n").getBytes("UTF-8"))
+    catch { case e: Throwable => System.err.println(s"[bench] $statsFile write failed: ${e.getMessage}") }
     // sbt wraps stdout in [info] prefixes, which broke the driver's JSON
     // parse in round 1 — print to stdout + a bare stderr line.
     println(json)

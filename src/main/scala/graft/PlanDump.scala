@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dump `.explain("formatted")` for named registry queries to files —
-  * the plan evidence the optimization rounds commit under `plans/rNN/`.
+  * the plan evidence an optimization round cites.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> [q1,q2,...]
   * Writes `<outDir>/<query>_<suffix>.txt` per query (all queries when the
@@ -16,30 +15,17 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDump <sfDir> <outDir> <suffix> [q1,q2,...]")
     val Array(sfDir, outDir, suffix) = args.take(3)
-    val names: Seq[String] =
-      if (args.length > 3) args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = SparkEntry.select(args.lift(3))
+    val spark = Session.local()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    names.foreach { name =>
+    selected.foreach { case (name, fn) =>
       // cold-memo plans: without the reset, a fit-consumer query dumped
       // after another fit-family query captures the warm-memo shape
       // (estimates → static SMJ) and the committed plan evidence becomes
       // dump-order-dependent — RegistryPlanLintSpec pins the cold shape,
       // so the dumps must match it
       graft.ops.Fits.reset()
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val txt = df.queryExecution.explainString(FormattedMode)
+      val txt = fn(spark, sfDir).queryExecution.explainString(FormattedMode)
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
         txt.getBytes("UTF-8"))

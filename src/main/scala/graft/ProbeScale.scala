@@ -13,18 +13,13 @@ import org.apache.spark.sql.functions._
   *   runMain graft.ProbeScale dsir 75000 300000
   *   runMain graft.ProbeScale mine 500 1000
   * Each arg after the probe name is a size; each size runs 1 warm + 2
-  * timed rounds and prints one PROBE line per round plus the min.
+  * timed rounds and prints one PROBE line per round plus the min. The
+  * session is [[Session.local]]'s (4 cores unless `SPARK_GRAFT_CPUS` says
+  * otherwise) — anchors taken at 32 cores pass `SPARK_GRAFT_CPUS=32`.
   */
 object ProbeScale {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val probe = args.head
     val sizes = args.tail.map(_.toLong)
     val run: Long => (Double, String) = probe match {

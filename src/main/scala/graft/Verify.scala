@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,24 +7,9 @@ object Verify {
     // optional 3rd arg: comma-separated query names — dump (and emit
     // oracle SQL for) just those, for fast iteration on a new operator
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    // a typo'd name would otherwise dump nothing and compare.py would
-    // print a vacuous "0 pass / 0 fail" that reads as success
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
-    }
-    def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only = args.lift(2)
+    val selected = SparkEntry.select(only)
+    val spark = Session.local()
     // both flagships smoke-checked up front (the driver's entry contract):
     // a broken events OR documents table fails loudly here, before the
     // full dump burns an hour. Skipped under a query filter (fast-iteration
@@ -42,7 +26,7 @@ object Verify {
     // (query → error) is written even when empty so its absence is itself a
     // signal that Verify died before finishing.
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -54,27 +38,30 @@ object Verify {
       // let 60+ queries' worth of cached blocks pile up in this one session
       graft.ops.Caches.releaseAll()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val failedJson = failed
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/_failed.json"), failedJson)
+    def obj(kvs: Iterable[(String, String)]): String =
+      kvs.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
+    val names = selected.map(_._1).toSet
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      obj(SparkEntry.oracleSql.filter(kv => names(kv._1))))
+    Files.writeString(Paths.get(s"$outDir/_failed.json"), obj(failed))
     if (failed.nonEmpty)
       System.err.println(s"[verify] ${failed.size} queries FAILED: " +
         failed.keys.mkString(", "))
     spark.stop()
   }
+
+  /** JSON string literal for Verify's and Bench's artifacts: escapes
+    * backslash, quote and ALL control chars (<0x20) — a tab or CR in
+    * oracle SQL would otherwise make a reader's json.load fail and
+    * silently zero the correctness check.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

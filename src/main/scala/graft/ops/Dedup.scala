@@ -399,7 +399,7 @@ object Dedup {
       .select(
         col(idCol),
         posexplode(graft.functions.ShingleKeys(toks, k)).as(Seq("pos", "gram")))
-    val grams0 =
+    val grams =
       if (maxGramDf == Int.MaxValue) allGrams
       else {
         // persisted: feeds the df aggregation AND the anti-join input
@@ -416,7 +416,6 @@ object Dedup {
     // side, so the repartition was a pure added exchange of the position
     // bag. Left unpersisted: each join side's anti-join over the cached g
     // is cheap
-    val grams = grams0
     val a = grams.select(col(idCol).as("a_id"), col("pos").as("a_pos"), col("gram"))
     val b = grams.select(col(idCol).as("b_id"), col("pos").as("b_pos"), col("gram"))
     val pairs = a.join(b, Seq("gram")).filter(col("a_id") < col("b_id"))

@@ -548,11 +548,8 @@ object Stats {
       predCol: String): DataFrame = {
     // three count branches over the same scored frame — persist the
     // two-column projection once (m11's prediction pipeline otherwise
-    // runs per branch); streaming micro-batch callers pass through (a
-    // foreachBatch frame is batch — only a genuinely streaming plan,
-    // which cannot persist, skips the cache)
-    val base0 = df.select(col(actualCol), col(predCol))
-    val base = if (base0.isStreaming) base0 else Caches.trackPersist(base0)
+    // runs per branch); a streaming plan passes through unpersisted
+    val base = Caches.trackPersistBatch(df.select(col(actualCol), col(predCol)))
     val nt = base.groupBy(col(actualCol).as("class")).agg(count(lit(1)).as("n_true"))
     val np = base.filter(col(predCol).isNotNull)
       .groupBy(col(predCol).as("class")).agg(count(lit(1)).as("n_pred"))

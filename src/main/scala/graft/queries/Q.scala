@@ -35,8 +35,8 @@ object Q {
     * three are accepted and produce identical `ts_us` (pinned by
     * `EventsSchemaSpec`):
     *   - TIMESTAMP(NANOS): Spark 4 only reads it with
-    *     `spark.sql.legacy.parquet.nanosAsLong=true` (Verify/Bench and
-    *     `SparkEntry.entry` set it) — ts arrives as a nanos BIGINT and the
+    *     `spark.sql.legacy.parquet.nanosAsLong=true` (`graft.Session`
+    *     sets it) — ts arrives as a nanos BIGINT and the
     *     µs key is an integer DIV (ns magnitudes exceed 2^53, so double
     *     division would corrupt);
     *   - TIMESTAMP (µs, with tz): `unix_micros` is exact — the data has no
@@ -44,8 +44,8 @@ object Q {
     *   - TIMESTAMP_NTZ (µs, no tz — the shape since round 7's regen):
     *     `unix_micros` rejects NTZ at analysis time, so cast to TIMESTAMP
     *     first. The cast interprets the naive value in the SESSION timezone,
-    *     so callers must pin `spark.sql.session.timeZone=UTC` (Verify/Bench
-    *     and `entry` do) — then it matches the oracle's `epoch_us(ts)`,
+    *     so callers must pin `spark.sql.session.timeZone=UTC`
+    *     (`graft.Session` does) — then it matches the oracle's `epoch_us(ts)`,
     *     which also treats naive timestamps as UTC.
     */
   def events(s: SparkSession, dir: String): DataFrame = {

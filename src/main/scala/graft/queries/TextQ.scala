@@ -1437,12 +1437,8 @@ object TextQ {
       // only (bit-identical in both engines by the t13 contract)
       (s, d) => {
         val docs = t(s, d, "documents")
-        // persisted: rankBuckets' chunkedScan reads its input from three
-        // plan branches — unpersisted, the whole unigram-LM scoring
-        // pipeline re-ran per branch (the multi-branch rule)
-        val scored = graft.ops.Caches.trackPersist(
-          Text.unigramLogProb(docs, "doc_id", "text")
-            .join(docs.select("doc_id", "lang"), "doc_id"))
+        val scored = Text.unigramLogProb(docs, "doc_id", "text")
+          .join(docs.select("doc_id", "lang"), "doc_id")
         Sampling.rankBuckets(
             scored,
             strata = Seq("lang"),

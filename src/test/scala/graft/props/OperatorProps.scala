@@ -11,12 +11,7 @@ import graft.ops._
   */
 object OperatorProps extends Properties("graft.ops") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = graft.Session.local(4)
   import spark.implicits._
 
   private val series: Gen[List[Option[Double]]] =

@@ -762,9 +762,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("nearDupDedupStream: green under the RocksDB state-store provider (the cluster pick)") {
-    // the round-8 probe (tools/rocksdb_probe.scala, BASELINE.md) named
-    // RocksDB the cluster provider: ~1.6× faster ingest and no in-heap
-    // state OOM risk. The switch is one session conf read at query start —
+    // the round-8 probe (`git show 1352e6c:tools/rocksdb_probe.scala`,
+    // BASELINE.md) named RocksDB the cluster provider: ~1.6× faster ingest
+    // and no in-heap state OOM risk. The switch is one session conf read at query start —
     // this run pins that the chained dual-stateful plan (dedup → windowed
     // count) stays semantically identical under it, so the toggle is a
     // supported config, not a hope.
