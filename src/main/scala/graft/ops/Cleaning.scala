@@ -16,10 +16,13 @@ import org.apache.spark.sql.functions._
   *   - leading NULLs: left NULL by interpolate, then the chained `.fillna(0)`
   *     turns them into 0 — exposed here as [[interpolateThenZero]].
   *
-  * Implementation is pure window expressions (two frames per column), no
-  * join, no UDF — one shuffle on the partition keys, incremental frames,
-  * fully whole-stage-codegen'd. Scales to any series length because nothing
-  * is collected per group.
+  * Implementation is pure window expressions, no join, no UDF: per column a
+  * running `last(…, ignoreNulls)` frame for the previous known point and a
+  * frameless `lead(…, ignoreNulls)` for the next one. Spark's frameless
+  * offset frame keeps one forward cursor to the next non-NULL row, so both
+  * halves are O(n) per series. Every window function shares one
+  * partition/order spec (a column's four sit in one `WindowExec`): one
+  * shuffle on `parts`, one sort. Nothing is collected per group.
   */
 object Cleaning {
 
@@ -42,21 +45,18 @@ object Cleaning {
       parts: Seq[String],
       xCol: String,
       valueCols: Seq[String]): DataFrame = {
-    val back = Window
-      .partitionBy(parts.map(col): _*)
-      .orderBy(col(xCol))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val fwd = Window
-      .partitionBy(parts.map(col): _*)
-      .orderBy(col(xCol))
-      .rowsBetween(0, Window.unboundedFollowing)
+    val ordered = Window.partitionBy(parts.map(col): _*).orderBy(col(xCol))
+    val back = ordered.rowsBetween(Window.unboundedPreceding, 0)
     valueCols.foldLeft(df) { (d, c) =>
       val v = col(c)
       val x = col(xCol).cast("double")
+      val knownX = when(v.isNotNull, x)
       val prevV = last(v, ignoreNulls = true).over(back)
-      val prevX = last(when(v.isNotNull, x), ignoreNulls = true).over(back)
-      val nextV = first(v, ignoreNulls = true).over(fwd)
-      val nextX = first(when(v.isNotNull, x), ignoreNulls = true).over(fwd)
+      val prevX = last(knownX, ignoreNulls = true).over(back)
+      // on a NULL row the next non-NULL after it is the first non-NULL at or
+      // after it; a known row never reads these (it keeps `v`)
+      val nextV = lead(v, 1, null, ignoreNulls = true).over(ordered)
+      val nextX = lead(knownX, 1, null, ignoreNulls = true).over(ordered)
       val interp = when(v.isNotNull, v)
         .when(prevV.isNull, lit(null).cast("double")) // leading run: stays NULL
         .when(nextV.isNull, prevV) // trailing run: forward fill
@@ -65,9 +65,6 @@ object Cleaning {
     }
   }
 
-  /** The reference's exact chain: interpolate, then fill remaining (leading)
-    * NULLs with 0 (ref `load_data.py:95`).
-    */
   /** Winsorization — clamp values into their group's [qLo, qHi] quantile
     * band, the robust-preprocessing transform that tames heavy tails
     * without dropping rows (outlier screens like [[Stats.zOutliers]] /
@@ -103,6 +100,9 @@ object Cleaning {
       .drop("__wlo", "__whi")
   }
 
+  /** The reference's exact chain: interpolate, then fill remaining (leading)
+    * NULLs with 0 (ref `load_data.py:95`).
+    */
   def interpolateThenZero(
       df: DataFrame,
       parts: Seq[String],

@@ -332,16 +332,19 @@ object Windows {
       .orderBy(col(tsMsCol))
     val v = col(valueCol)
     val p = if (prefix.isEmpty) "" else s"${prefix}_"
-    horizonsMs.foldLeft(df) { (d, h) =>
+    val named = horizonsMs.flatMap { h =>
       val back = base.rangeBetween(-h, -1)
       val fwd = base.rangeBetween(0, h - 1)
-      d.withColumn(s"${p}mean_back_$h", sum(v.cast(Exact.SumType)).over(back).cast("double") / count(v).over(back))
-        .withColumn(s"${p}min_back_$h", min(v).over(back))
-        .withColumn(s"${p}max_back_$h", max(v).over(back))
-        .withColumn(s"${p}mean_fwd_$h", sum(v.cast(Exact.SumType)).over(fwd).cast("double") / count(v).over(fwd))
-        .withColumn(s"${p}min_fwd_$h", min(v).over(fwd))
-        .withColumn(s"${p}max_fwd_$h", max(v).over(fwd))
+      Seq(
+        (sum(v.cast(Exact.SumType)).over(back).cast("double") / count(v).over(back)).as(s"${p}mean_back_$h"),
+        min(v).over(back).as(s"${p}min_back_$h"),
+        max(v).over(back).as(s"${p}max_back_$h"),
+        (sum(v.cast(Exact.SumType)).over(fwd).cast("double") / count(v).over(fwd)).as(s"${p}mean_fwd_$h"),
+        min(v).over(fwd).as(s"${p}min_fwd_$h"),
+        max(v).over(fwd).as(s"${p}max_fwd_$h"))
     }
+    // one projection, not one withColumn (and one re-analysis) per column
+    df.select(col("*") +: named: _*)
   }
 
   /** W6: up-sample by repeating each row `factor` times with a 0-based

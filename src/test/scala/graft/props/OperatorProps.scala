@@ -60,6 +60,22 @@ object OperatorProps extends Properties("graft.ops") {
       out.zip(full).forall { case (r, e) => math.abs(r - e) < 1e-9 }
     }
 
+  property("interpolation equals the plain-Scala pandas reference bit for bit (random masks, uneven x)") =
+    // forAllNoShrink: a shrunk gap could reach 0 and make the abscissa tie
+    Prop.forAllNoShrink(
+      Gen.choose(0.0, 1.0).flatMap(pNull =>
+        Gen.nonEmptyListOf(Gen.zip(
+          Gen.choose(1L, 1000L),
+          Gen.choose(0.0, 1.0).flatMap(u =>
+            if (u < pNull) Gen.const(None) else Gen.choose(-1e6, 1e6).map(Some(_))))))) { pts =>
+      val xs = pts.scanLeft(0L)(_ + _._1).tail
+      val vs = pts.map(_._2)
+      val df = xs.zip(vs).map { case (x, v) => ("k", x, v) }.toDF("k", "x", "v")
+      val out = Cleaning.interpolateLinear(df, Seq("k"), "x", Seq("v"))
+        .orderBy("x").select("v").as[Option[Double]].collect().toSeq
+      out == CleaningSpec.pandasInterpolate(xs.map(_.toDouble), vs)
+    }
+
   property("tumbling bucket law: bucket <= ts < bucket + step, step | bucket") =
     Prop.forAll(Gen.choose(0L, 1000000L), Gen.oneOf(7L, 200L, 1000L)) { (ts, step) =>
       val b = Seq(ts).toDF("ts")

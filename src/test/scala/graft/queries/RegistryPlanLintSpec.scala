@@ -20,8 +20,11 @@ import org.apache.spark.sql.execution.SparkPlan
   *   change, regenerate with `GRAFT_BLESS_GOLDEN=1 sbt test` and review
   *   the signature diff like any other golden artifact.
   *
+  * - No window aggregate over a [moving row, UNBOUNDED FOLLOWING] frame:
+  *   Spark re-aggregates the partition tail for every row (quadratic).
+  *
   * Building a plan is cheap, so ONE sweep (AQE off, for a plain statically
-  * planned tree) serves all three tests; a new query with a forgotten
+  * planned tree) serves every test; a new query with a forgotten
   * broadcast hint fails here before it ever reaches the bench. (Queries
   * with plan-time scalar probes run those tiny jobs during construction —
   * that is their documented design, and at sf0.001 the whole sweep stays
@@ -91,7 +94,27 @@ class RegistryPlanLintSpec extends SparkSpec {
       signatures: Map[String, String],
       rawFloatAggs: Map[String, Seq[String]],
       nondet: Map[String, Seq[String]],
+      slidingToEnd: Map[String, Seq[String]],
       failures: Seq[String])
+
+  /** Window aggregates whose frame runs from a moving lower bound to
+    * UNBOUNDED FOLLOWING. Spark evaluates that shape in
+    * `UnboundedFollowingWindowFunctionFrame`, which re-aggregates the rest
+    * of the partition for every row: O(n²) per partition. A running frame
+    * (UNBOUNDED PRECEDING lower bound) or a whole-partition frame is
+    * incremental and not flagged; "next non-NULL value" reads belong in
+    * `lead(…, ignoreNulls = true)`, which keeps one forward cursor.
+    */
+  private def slidingToEnd(plans: Seq[SparkPlan]): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding, WindowExpression, WindowSpecDefinition}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+    import org.apache.spark.sql.execution.window.WindowExec
+    plans.flatMap(_.collect { case w: WindowExec => w.windowExpression }).flatten.flatMap(_.collect {
+      case we @ WindowExpression(_: AggregateExpression,
+            WindowSpecDefinition(_, _, SpecifiedWindowFrame(_, lower, UnboundedFollowing)))
+          if lower != UnboundedPreceding => we.sql.take(160)
+    })
+  }
 
   /** Expressions the analyzed plan marks non-deterministic (rand(),
     * monotonically_increasing_id, shuffle(), …): any one of them makes a
@@ -129,7 +152,7 @@ class RegistryPlanLintSpec extends SparkSpec {
     hits.toList
   }
 
-  /** One planning pass over the whole registry, shared by all three tests.
+  /** One planning pass over the whole registry, shared by every test.
     * AQE is disabled for the sweep: the STATIC planner choice is the
     * deterministic, pinnable artifact (AQE's runtime re-plan can only
     * improve on it) and `AdaptiveSparkPlanExec` hides the tree from
@@ -173,16 +196,18 @@ class RegistryPlanLintSpec extends SparkSpec {
           val out =
             try {
               val qe = build().queryExecution
-              Some((name, signature(expandedPlans(qe.executedPlan)),
-                rawFloatAggs(qe.analyzed), nondetExprs(qe.analyzed)))
+              val plans = expandedPlans(qe.executedPlan)
+              Some((name, signature(plans),
+                rawFloatAggs(qe.analyzed), nondetExprs(qe.analyzed), slidingToEnd(plans)))
             } catch { case e: Throwable => failures += s"$name: ${e.getMessage}"; None }
           graft.ops.Caches.releaseAll()
           out
       }
       Sweep(
         rows.map(r => r._1 -> r._2).toMap,
-        rows.collect { case (n, _, fa, _) if fa.nonEmpty => n -> fa }.toMap,
-        rows.collect { case (n, _, _, nd) if nd.nonEmpty => n -> nd }.toMap,
+        rows.collect { case (n, _, fa, _, _) if fa.nonEmpty => n -> fa }.toMap,
+        rows.collect { case (n, _, _, nd, _) if nd.nonEmpty => n -> nd }.toMap,
+        rows.collect { case (n, _, _, _, sf) if sf.nonEmpty => n -> sf }.toMap,
         failures.toList)
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
@@ -233,6 +258,15 @@ class RegistryPlanLintSpec extends SparkSpec {
     assert((allowed -- sweep.nondet.keySet).isEmpty,
       "stale nondet whitelist (no flagged UDF anymore): " +
         s"${(allowed -- sweep.nondet.keySet).mkString(", ")} — remove")
+  }
+
+  test("no window aggregate slides its lower bound over an UNBOUNDED FOLLOWING frame (quadratic)") {
+    val bad = sweep.slidingToEnd.toSeq.sortBy(_._1)
+      .map { case (n, es) => s"$n: ${es.distinct.mkString("; ")}" }
+    assert(bad.isEmpty,
+      "window aggregate over a [moving row, UNBOUNDED FOLLOWING] frame re-aggregates the " +
+        "partition tail for every row (O(n²) per partition) — read the next non-NULL " +
+        s"value with lead(…, ignoreNulls = true) instead:\n${bad.mkString("\n")}")
   }
 
   /** Queries whose plans CONTAIN an unpartitioned WindowExec, each one
