@@ -1,9 +1,10 @@
 package graft.ml
 
-import org.apache.spark.ml.classification.{GBTClassifier, OneVsRest, RandomForestClassifier}
+import org.apache.spark.ml.classification.{GBTClassificationModel, GBTClassifier, OneVsRest, RandomForestClassifier}
 import org.apache.spark.ml.feature.VectorAssembler
+import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.{col, udf}
 
 import scala.util.Random
 
@@ -13,6 +14,11 @@ import scala.util.Random
   * (`/root/reference/generate_submission.py:47-130`, draws `:89-99,111-121`,
   * vote `:493-502`). LightGBM is unavailable offline; MLlib's
   * RandomForestClassifier is the native-multiclass stand-in (SURVEY §7.3).
+  *
+  * Each fitted member is a `Vector => Int` predictor that reproduces
+  * MLlib's own prediction rule, and the test frame is scored in one
+  * projection: one UDF runs every member on the row's feature vector and
+  * votes.
   *
   * Determinism: a seeded scala.util.Random drives the param draws in a fixed
   * sequence; each member gets seed SEED+i; the vote is the deterministic
@@ -37,9 +43,9 @@ object Ensemble {
   }
 
   /** Fit the ensemble on (featureCols → labelCol), score `test`, and return
-    * it with per-member `pred_i` columns plus the majority-vote `outCol`
-    * (ties → lowest class). Weights column optional (the reference doubles
-    * s05, `generate_submission.py:61-64`).
+    * it with one added column: the majority-vote `outCol` (int, ties →
+    * lowest class). Weights column optional (the reference doubles s05,
+    * `generate_submission.py:61-64`).
     */
   def fitPredictVote(
       train: DataFrame,
@@ -50,20 +56,19 @@ object Ensemble {
       outCol: String,
       weightCol: Option[String] = None): DataFrame =
     fitScoreVote(train, test, featureCols, nModels, outCol,
-      i => Seq(s"__p_$i", s"__prob_$i", s"__raw_$i"),
-      (m, i, trainVec) => {
+      (m, trainVec) => {
         val est = new RandomForestClassifier()
           .setFeaturesCol("__features")
           .setLabelCol(labelCol)
-          .setPredictionCol(s"__p_$i")
-          .setProbabilityCol(s"__prob_$i")
-          .setRawPredictionCol(s"__raw_$i")
           .setNumTrees(m.numTrees)
           .setMaxDepth(m.maxDepth)
           .setMinInstancesPerNode(m.minInstances)
           .setSeed(m.seed)
         weightCol.foreach(est.setWeightCol)
-        est.fit(trainVec)
+        val model = est.fit(trainVec)
+        // MLlib predicts the argmax of the probability vector, not of the raw
+        // one, when a probability column is configured (its default)
+        v => model.predictProbability(v).argmax
       })
 
   /** Boosted-trees flavor of [[fitPredictVote]] — the closest offline MLlib
@@ -84,8 +89,7 @@ object Ensemble {
       outCol: String,
       weightCol: Option[String] = None): DataFrame =
     fitScoreVote(train, test, featureCols, nModels, outCol,
-      i => Seq(s"__p_$i", s"__raw_$i"),
-      (m, i, trainVec) => {
+      (m, trainVec) => {
         val gbt = new GBTClassifier()
           .setFeaturesCol("__features")
           .setLabelCol(labelCol)
@@ -103,18 +107,20 @@ object Ensemble {
           .setParallelism(8)
           .setFeaturesCol("__features")
           .setLabelCol(labelCol)
-          .setPredictionCol(s"__p_$i")
-          .setRawPredictionCol(s"__raw_$i")
         weightCol.foreach(est.setWeightCol)
-        est.fit(trainVec)
+        val binary = est.fit(trainVec).models.map(_.asInstanceOf[GBTClassificationModel])
+        // OneVsRestModel predicts the first class whose binary model has the
+        // largest raw(1); maxBy also keeps the first maximum
+        v => binary.indices.maxBy(c => binary(c).predictRaw(v)(1))
       })
 
   /** Shared ensemble skeleton: assemble features, cache the training frame,
     * fit the seeded members as CONCURRENT Spark jobs (each fit is
     * independently seeded, so per-model results are scheduling-invariant —
-    * the sequential version serialized nModels × MLlib job latency), score
-    * the test frame with each model, vote. The cache is released even when
-    * a fit throws.
+    * the sequential version serialized nModels × MLlib job latency), then
+    * score and vote in one projection. The members travel in the UDF's
+    * closure, which Spark ships with each stage's task binary. The cache is
+    * released even when a fit throws.
     */
   private def fitScoreVote(
       train: DataFrame,
@@ -122,23 +128,17 @@ object Ensemble {
       featureCols: Seq[String],
       nModels: Int,
       outCol: String,
-      memberCols: Int => Seq[String],
-      fitMember: (Member, Int, DataFrame) => org.apache.spark.ml.Transformer): DataFrame = {
+      fitMember: (Member, DataFrame) => (Vector => Int)): DataFrame = {
     val asm = new VectorAssembler()
       .setInputCols(featureCols.toArray)
       .setOutputCol("__features")
     val trainVec = asm.transform(train).cache()
     try {
       trainVec.count() // materialize once before the concurrent fits
-      val testVec = asm.transform(test)
-      val models = parallelFits(
-        drawMembers(nModels).zipWithIndex.map { case (m, i) => () => fitMember(m, i, trainVec) })
-      val scored = models.zipWithIndex.foldLeft(testVec) { case (acc, (model, i)) =>
-        model.transform(acc)
-          .withColumn(s"pred_$i", col(s"__p_$i").cast("int"))
-          .drop(memberCols(i): _*)
-      }
-      withVote(scored, nModels, outCol)
+      val members = parallelFits(drawMembers(nModels).map(m => () => fitMember(m, trainVec)))
+      // boxed, so `outCol` stays the nullable int its callers read
+      val vote = udf((v: Vector) => Int.box(mode(members.map(_(v)))))
+      asm.transform(test).withColumn(outCol, vote(col("__features"))).drop("__features")
     } finally trainVec.unpersist()
   }
 
@@ -150,18 +150,7 @@ object Ensemble {
     Await.result(Future.sequence(thunks.map(t => Future(t()))), Duration.Inf)
   }
 
-  /** Majority vote with lowest-class tie-break (numpy bincount-argmax
-    * semantics), array-local per row: candidates whose count equals the
-    * max count, then array_min.
-    */
-  private def withVote(scored: DataFrame, nModels: Int, outCol: String): DataFrame = {
-    val arr = s"array(${(0 until nModels).map(i => s"pred_$i").mkString(",")})"
-    val voteSql =
-      s"""array_min(
-         |  filter(array_distinct($arr),
-         |    c -> size(filter($arr, x -> x = c)) =
-         |         array_max(transform(array_distinct($arr),
-         |           c2 -> size(filter($arr, x -> x = c2))))))""".stripMargin
-    scored.withColumn(outCol, expr(voteSql)).drop("__features")
-  }
+  /** Most frequent class, lowest class on ties (numpy bincount-argmax). */
+  private def mode(preds: Seq[Int]): Int =
+    preds.groupMapReduce(identity)(_ => 1)(_ + _).minBy { case (c, n) => (-n, c) }._1
 }

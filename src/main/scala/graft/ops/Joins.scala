@@ -175,51 +175,4 @@ object Joins {
     lattice.join(renamed, parts :+ "__fetch_bucket", "left")
       .withColumnRenamed("__fetch_bucket", "fetch_bucket")
   }
-
-  /** Typed input rows for [[rangeFetchTyped]]. */
-  final case class Anchor(key: Long, ts: Long)
-  final case class Sample(key: Long, ts: Long, v: Double)
-  final case class Aligned(key: Long, anchorTs: Long, sampleTs: Option[Long], v: Option[Double])
-
-  /** [[rangeFetch]] as a TYPED `cogroup` — the Dataset[T] escape hatch
-    * demonstrated on the operator family where the reference actually
-    * does imperative bucket-walking (`/root/reference/utils.py:56-76`):
-    * both sides group by the entity key, and per key a sorted
-    * binary-search walk emits every sample in `[anchor−left, anchor+right)`
-    * (or one NULL row — left-join semantics). `JoinsCogroupSpec` pins
-    * bit-equality with the declarative [[rangeFetch]].
-    *
-    * This is preference-order LAST (SURVEY §4.3): the declarative join
-    * stays the default because Catalyst can reorder/broadcast/AQE it,
-    * while cogroup is opaque — but when per-group logic genuinely cannot
-    * be expressed relationally, THIS is the shape: one shuffle per side
-    * on the key, per-group memory bounded by the group (the trade to
-    * state in review), O(log n) search per anchor instead of the
-    * equi-key pair enumeration a range-residual join risks.
-    */
-  def rangeFetchTyped(
-      anchors: org.apache.spark.sql.Dataset[Anchor],
-      samples: org.apache.spark.sql.Dataset[Sample],
-      leftMs: Long,
-      rightMs: Long): org.apache.spark.sql.Dataset[Aligned] = {
-    import anchors.sparkSession.implicits._
-    anchors.groupByKey(_.key).cogroup(samples.groupByKey(_.key)) { (k, as, ss) =>
-      val sv = ss.toArray.sortBy(s => (s.ts, s.v))
-      val tsArr = sv.map(_.ts)
-      def lowerBound(t: Long): Int = {
-        var l = 0; var r = tsArr.length
-        while (l < r) { val m = (l + r) >>> 1; if (tsArr(m) < t) l = m + 1 else r = m }
-        l
-      }
-      as.toArray.sortBy(_.ts).iterator.flatMap { a =>
-        val hi = a.ts + rightMs
-        var i = lowerBound(a.ts - leftMs)
-        if (i >= sv.length || sv(i).ts >= hi) Iterator(Aligned(k, a.ts, None, None))
-        else new Iterator[Aligned] {
-          def hasNext: Boolean = i < sv.length && sv(i).ts < hi
-          def next(): Aligned = { val s = sv(i); i += 1; Aligned(k, a.ts, Some(s.ts), Some(s.v)) }
-        }
-      }
-    }
-  }
 }

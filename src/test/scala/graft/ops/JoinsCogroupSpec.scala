@@ -3,41 +3,11 @@ package graft.ops
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** The typed cogroup range fetch must be indistinguishable from the
-  * declarative join it shadows — same rows, same left-join NULL
-  * semantics, on data with empty ranges, multi-hit ranges, and keys
-  * present on only one side.
+/** The bucketed interval join must return exactly the pairs of the
+  * brute-force inequality join, at any bucket size.
   */
 class JoinsCogroupSpec extends SparkSpec {
   import spark.implicits._
-
-  test("rangeFetchTyped == declarative rangeFetch, including empty ranges") {
-    val rnd = new scala.util.Random(7)
-    // key 5 has anchors but NO samples (guaranteed empty ranges); key 6
-    // has samples but no anchors (must not emit)
-    val anchors = (1 to 120).map(_ =>
-      Joins.Anchor(rnd.nextInt(6).toLong, rnd.nextInt(1000).toLong))
-    val samples = (1 to 400).map(_ =>
-      Joins.Sample(rnd.nextInt(5).toLong, rnd.nextInt(1000).toLong, rnd.nextInt(90) / 3.0)) :+
-      Joins.Sample(6L, 10L, 1.0)
-    val typed = Joins.rangeFetchTyped(
-        anchors.toDS(), samples.toDS(), leftMs = 30L, rightMs = 50L)
-      .collect().toSeq
-    val declarative = Joins.rangeFetch(
-        anchors.toDF(), samples.toDF().withColumnRenamed("ts", "sts"),
-        Seq("key"), "ts", "sts", 30L, 50L)
-      .select(
-        col("a.key"), col("a.ts").as("anchorTs"),
-        col("s.sts").as("sampleTs"), col("s.v"))
-      .as[(Long, Long, Option[Long], Option[Double])]
-      .map(r => Joins.Aligned(r._1, r._2, r._3, r._4))
-      .collect().toSeq
-    def canon(xs: Seq[Joins.Aligned]) =
-      xs.sortBy(a => (a.key, a.anchorTs, a.sampleTs.getOrElse(-1L), a.v.getOrElse(-1.0)))
-    assert(canon(typed) == canon(declarative))
-    // sanity: the data exercised both multi-hit and empty ranges
-    assert(typed.exists(_.sampleTs.isEmpty) && typed.count(_.sampleTs.nonEmpty) > 200)
-  }
 
   test("intervalOverlap == brute-force inequality join at any bucket size") {
     val rnd = new scala.util.Random(11)

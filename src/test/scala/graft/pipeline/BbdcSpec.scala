@@ -124,13 +124,4 @@ class BbdcSpec extends SparkSpec {
     assert(out.map(_._2.toDouble) == labels) // separable -> perfect recovery
     assert(run() == out)                     // SEED+i determinism
   }
-
-  test("ensemble majority vote breaks ties toward the lowest class") {
-    val train = (0 until 60).map { i =>
-      val cls = i % 3
-      (i.toLong, cls.toDouble, cls * 1.0 + rng.nextDouble() * 0.01, cls * 2.0)
-    }.toDF("id", "label", "f1", "f2")
-    val voted = Ensemble.fitPredictVote(train, train, Seq("f1", "f2"), "label", 3, "v")
-    assert(voted.filter(col("v") =!= col("label").cast("int")).count() == 0)
-  }
 }
