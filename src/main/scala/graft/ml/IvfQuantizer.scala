@@ -88,159 +88,8 @@ object IvfQuantizer {
     s"""SELECT greatest($kmin, CAST(ceil(sqrt(CAST(count(*) AS DOUBLE)
           / CAST($targetCell AS DOUBLE))) AS BIGINT)) AS k FROM $table"""
 
-  /** Fit k cells with `iters` Lloyd updates and return the final
-    * assignment (idCol, cell). `e` must carry the exact squared norm in
-    * `n2Col` (see [[graft.ops.Vectors.norm2Exact]]).
-    */
-  def fitAssign(
-      e: DataFrame,
-      idCol: String,
-      vecCol: String,
-      n2Col: String,
-      k: Int,
-      iters: Int,
-      sampleEvery: Int = 1,
-      grpCols: Seq[String] = Nil,
-      seedPerGroup: Boolean = false): DataFrame =
-    fitRanked(e, idCol, vecCol, n2Col, k, iters, sampleEvery, grpCols, seedPerGroup)
-      .filter(col("cell_rank") === 1)
-      .select(grpCols.map(col) ++ Seq(col(idCol), col("cell")): _*)
-
-  /** TWO-LEVEL hierarchical fit — the composition [[adaptiveK]]'s scaladoc
-    * names for cell counts past the flat regime: a k-cell coarse fit
-    * routes the corpus, then ONE grouped job fits k sub-cells inside each
-    * coarse cell (per-group seeds), giving ~k² leaf cells at per-vector
-    * routing cost 2k centroid scorings instead of k². With
-    * k = [[hierK]](n, c), leaf size stays ~c while assignment work grows
-    * n·2√(n/c) — sub-quadratic — and both levels' Lloyd passes still scan
-    * only the systematic samples. Returns (grpCols…, idCol, ccell, scell);
-    * a leaf is the (ccell, scell) PAIR (sub-cell labels are per-group seed
-    * ids, unique only within their coarse cell). Vectors whose coarse cell
-    * has no level-2 fit-sample members drop from the output (see
-    * [[fitRanked]]'s seedPerGroup contract — pick se2 ≪ n/k).
-    */
-  def fitAssignHier(
-      e: DataFrame,
-      idCol: String,
-      vecCol: String,
-      n2Col: String,
-      k: Int,
-      iters: Int,
-      se1: Int,
-      se2: Int): DataFrame = {
-    val coarse = fitAssign(e, idCol, vecCol, n2Col, k, iters, se1)
-      .withColumnRenamed("cell", "ccell")
-    val withC = e.join(coarse, idCol)
-    fitAssign(withC, idCol, vecCol, n2Col, k, iters, se2,
-      grpCols = Seq("ccell"), seedPerGroup = true)
-      .withColumnRenamed("cell", "scell")
-      .select(col(idCol), col("ccell"), col("scell"))
-  }
-
-  /** Like [[fitAssign]] but returns the FULL final cell ranking per vector
-    * (idCol, cell, cell_rank ordered by cosine desc, cell asc) — rank 1 is
-    * the assignment; ranks ≤ nprobe are a query's probe set for multi-cell
-    * IVF search (the recall knob: searching nprobe cells costs nprobe× the
-    * candidates and recovers neighbors that straddle a cell boundary).
-    */
-  /** `grpCols` turns this into a GROUPED fit: k cells per group, fitted in
-    * ONE job over the concatenated groups (product-quantization subspaces
-    * run as a single grouped fit, not G serialized fits — G× fewer jobs,
-    * same per-group math bit-for-bit because every centroid sum, cosine and
-    * argmax is keyed by the group).
-    */
-  /** `seedPerGroup`: the default seed rule takes the k lowest-id fit
-    * vectors GLOBALLY (`__id < k·sampleEvery` — correct when every group
-    * contains every id, i.e. the PQ-subspace grouping, and the rule the
-    * blessed oracles replicate). For DATA-DRIVEN groups (hierarchical
-    * fits: grpCols = the coarse cell), low ids need not appear in every
-    * group — per-group seeding takes each group's k lowest-id fit vectors
-    * via row_number instead, so every group with ≥1 fit member gets
-    * centroids. Groups with FEWER than k fit members fit that many cells;
-    * groups with ZERO fit members get none and their vectors drop from
-    * the assignment (pick sampleEvery so every group keeps samples — at
-    * coarse-cell sizes ~n/k1 this needs se ≪ n/k1).
-    */
-  def fitRanked(
-      e: DataFrame,
-      idCol: String,
-      vecCol: String,
-      n2Col: String,
-      k: Int,
-      iters: Int,
-      sampleEvery: Int = 1,
-      grpCols: Seq[String] = Nil,
-      seedPerGroup: Boolean = false): DataFrame = {
-    val f = lloydFit(e, idCol, vecCol, n2Col, k, iters, sampleEvery, grpCols, seedPerGroup)
-    f.rank(f.src, f.cent).select(
-      grpCols.map(col) ++ Seq(
-        col("__id").as(idCol), col("cell"), col("__rn").cast("long").as("cell_rank")): _*)
-  }
-
-  /** [[fitAssign]] plus the winning COSINE — the prototypicality score
-    * D4-class pruning ranks on (how close a member sits to its own
-    * centroid: the closest members are the cluster's most redundant).
-    * Returns (idCol, cell, cos_centroid); the cosine is the same
-    * exact-decimal-dot / IEEE sqrt-divide value the assignment argmax
-    * ranked, so it is bit-identical across engines and safe to ORDER by
-    * (the repo's float-for-ordering-only rule).
-    */
-  def fitAssignScored(
-      e: DataFrame,
-      idCol: String,
-      vecCol: String,
-      n2Col: String,
-      k: Int,
-      iters: Int,
-      sampleEvery: Int = 1): DataFrame = {
-    val f = lloydFit(e, idCol, vecCol, n2Col, k, iters, sampleEvery, Nil, seedPerGroup = false)
-    f.rank(f.src, f.cent)
-      .filter(col("__rn") === 1)
-      .select(col("__id").as(idCol), col("cell"), col("__cos").as("cos_centroid"))
-  }
-
-  /** The FITTED centroid table of the flat (ungrouped) quantizer —
-    * `(cell, centroid array<double>)`, exactly the `cent` frame
-    * [[fitRanked]]'s final full-corpus assignment ranks against (same
-    * Lloyd loop, same seeds, same exact-decimal sums; pinned by
-    * `IvfQuantizerSpec`: routing a corpus through this table by
-    * argmax-cosine with (cos desc, cell asc) tie-break reproduces
-    * [[fitAssign]]'s assignment bit-for-bit). This is the batch half of
-    * the stream split: a streaming admission
-    * ([[graft.streaming.Streaming.semanticDedupStream]]) routes arriving
-    * vectors through this broadcast table — the fit is batch by contract,
-    * the routing is per-row and stateless.
-    */
-  def fitCentroids(
-      e: DataFrame,
-      idCol: String,
-      vecCol: String,
-      n2Col: String,
-      k: Int,
-      iters: Int,
-      sampleEvery: Int = 1): DataFrame =
-    lloydFit(e, idCol, vecCol, n2Col, k, iters, sampleEvery, Nil, seedPerGroup = false)
-      .cent.select(col("cell").cast("long").as("cell"), col("__sv").as("centroid"))
-
-  /** [[fitCentroids]]'s output collected into the driver-side routing
-    * table `(cell, centroid, ns2)` ascending by cell — ns2 is the scale-4
-    * exact self-dot, exactly the batch ranking's `__ns2`. Sub-linear by
-    * the quantizer contract (k rows); broadcast it and route per row via
-    * [[routeVector]].
-    */
-  def collectCentroids(centroids: DataFrame): Array[(Long, Array[Double], Double)] =
-    centroids
-      .select(col("cell").cast("long"), col("centroid").cast("array<double>"))
-      .collect()
-      .map { r =>
-        val sv = r.getSeq[Double](1).toArray
-        (r.getLong(0), sv,
-          graft.functions.ExactDot.computeArrays(sv, sv, 4): Double)
-      }
-      .sortBy(_._1)
-
-  /** Route one vector through a [[collectCentroids]] table: argmax cosine
-    * with ties to the LOWEST cell — BIT-IDENTICAL to [[fitAssign]]'s
+  /** Route one vector through a [[routingTable]]: argmax cosine
+    * with ties to the LOWEST cell — BIT-IDENTICAL to [[fitAssignFrom]]'s
     * `(cos desc, cell)` row_number over the same centroids (pinned in
     * `IvfQuantizerSpec`): the scale-9 exact dot and the sqrt/divide run
     * through the same arithmetic as the batch `ExactDot` expression, an
@@ -270,15 +119,15 @@ object IvfQuantizer {
   /** A FITTED quantizer collected to the driver: the (grp…, cell,
     * centroid-sum) rows of the final Lloyd centroid frame plus their exact
     * schema — sub-linear by the quantizer contract (k rows for a flat fit,
-    * ≤ k·G for a grouped one). [[fitRankedFrom]] rebuilds the identical
-    * centroid frame as a local relation and reruns ONLY the final
-    * full-corpus ranking, BIT-FOR-BIT equal to [[fitRanked]]'s (same
-    * ExactDot scale-9 dots / scale-4 norms on the same double values —
-    * collect round-trips doubles exactly — same (cos desc, cell)
-    * row_number; pinned in `IvfQuantizerSpec`). This is the production
-    * model-reuse shape: fit ONCE per dataset, memoize the k·d-row table,
-    * serve every consumer — the Lloyd passes leave every query plan after
-    * the first, and the per-query cost drops to one broadcast
+    * ≤ k·G for a grouped one). This is the quantizer's one fitted form:
+    * [[fitRankedFrom]] rebuilds the centroid frame as a local relation and
+    * runs the final full-corpus ranking against it (collect round-trips
+    * doubles exactly, so the ExactDot scale-9 dots / scale-4 norms see the
+    * values the Lloyd passes produced), and [[routingTable]] /
+    * [[routingTables]] turn it into the driver-side tables the streaming
+    * admissions route through. Fit ONCE per dataset, memoize the k·d-row
+    * table, serve every consumer — the Lloyd passes leave every query plan
+    * after the first, and the per-query cost drops to one broadcast
     * assignment.
     */
   final case class CollectedFit(
@@ -289,10 +138,28 @@ object IvfQuantizer {
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
-  /** Run the full Lloyd fit and collect the final centroid frame (rows
-    * ordered by (grp…, cell) for a deterministic driver-side table). Same
-    * fit, seeds and sampling contract as [[fitRanked]] — only the final
-    * full-corpus assignment is deferred to [[fitRankedFrom]].
+  /** Fit k cells with `iters` Lloyd updates and collect the final centroid
+    * frame ([[centroidFrame]]; rows ordered by (grp…, cell) for a
+    * deterministic driver-side table). `e` must carry the exact squared
+    * norm in `n2Col` (see [[graft.ops.Vectors.norm2Exact]]).
+    *
+    * `grpCols` turns this into a GROUPED fit: k cells per group, fitted in
+    * ONE job over the concatenated groups (product-quantization subspaces
+    * run as a single grouped fit, not G serialized fits — G× fewer jobs,
+    * same per-group math bit-for-bit because every centroid sum, cosine and
+    * argmax is keyed by the group).
+    *
+    * `seedPerGroup`: the default seed rule takes the k lowest-id fit
+    * vectors GLOBALLY (`__id < k·sampleEvery` — correct when every group
+    * contains every id, i.e. the PQ-subspace grouping, and the rule the
+    * blessed oracles replicate). For DATA-DRIVEN groups (hierarchical
+    * fits: grpCols = the coarse cell), low ids need not appear in every
+    * group — per-group seeding takes each group's k lowest-id fit vectors
+    * via row_number instead, so every group with ≥1 fit member gets
+    * centroids. Groups with FEWER than k fit members fit that many cells;
+    * groups with ZERO fit members get none and their vectors drop from
+    * the assignment (pick sampleEvery so every group keeps samples — at
+    * coarse-cell sizes ~n/k1 this needs se ≪ n/k1).
     */
   def fitCollect(
       e: DataFrame,
@@ -304,16 +171,34 @@ object IvfQuantizer {
       sampleEvery: Int = 1,
       grpCols: Seq[String] = Nil,
       seedPerGroup: Boolean = false): CollectedFit = {
-    val f = lloydFit(e, idCol, vecCol, n2Col, k, iters, sampleEvery, grpCols, seedPerGroup)
-    val ordered = f.cent.orderBy((grpCols :+ "cell").map(col): _*)
-    CollectedFit(ordered.schema, ordered.collect(), grpCols)
+    val cent = centroidFrame(e, idCol, vecCol, n2Col, k, iters, sampleEvery, grpCols, seedPerGroup)
+    CollectedFit(cent.schema, cent.collect(), grpCols)
   }
 
-  /** [[fitRanked]]'s final full-corpus ranking served from a memoized
-    * [[CollectedFit]] instead of an inline fit: (grp…, idCol, cell,
-    * cell_rank), bit-identical to the inline form. No Lloyd pass, no
-    * sample scan, no persist — one broadcast of the k·d local centroid
-    * table and one per-vector argmax window.
+  /** The lazy frame [[fitCollect]] collects: the final Lloyd centroid
+    * frame (grp…, cell, __sv) ordered by (grp…, cell). Building it runs no
+    * job; `RegistryPlanLintSpec` plans it as `__fit_ivf_flat`.
+    */
+  private[graft] def centroidFrame(
+      e: DataFrame,
+      idCol: String,
+      vecCol: String,
+      n2Col: String,
+      k: Int,
+      iters: Int,
+      sampleEvery: Int,
+      grpCols: Seq[String],
+      seedPerGroup: Boolean): DataFrame =
+    lloydFit(e, idCol, vecCol, n2Col, k, iters, sampleEvery, grpCols, seedPerGroup)
+      .orderBy((grpCols :+ "cell").map(col): _*)
+
+  /** The full final cell ranking per vector served from a [[CollectedFit]]:
+    * (grp…, idCol, cell, cell_rank ordered by cosine desc, cell asc) —
+    * rank 1 is the assignment; ranks ≤ nprobe are a query's probe set for
+    * multi-cell IVF search (the recall knob: searching nprobe cells costs
+    * nprobe× the candidates and recovers neighbors that straddle a cell
+    * boundary). No Lloyd pass, no sample scan, no persist — one broadcast
+    * of the k·d local centroid table and one per-vector argmax window.
     */
   def fitRankedFrom(
       e: DataFrame,
@@ -327,7 +212,7 @@ object IvfQuantizer {
         col("__id").as(idCol), col("cell"), col("__rn").cast("long").as("cell_rank")): _*)
   }
 
-  /** [[fitAssign]] from a memoized fit — rank-1 rows of [[fitRankedFrom]]. */
+  /** The assignment (grp…, idCol, cell) — rank-1 rows of [[fitRankedFrom]]. */
   def fitAssignFrom(
       e: DataFrame,
       idCol: String,
@@ -338,8 +223,13 @@ object IvfQuantizer {
       .filter(col("cell_rank") === 1)
       .select(fit.grpCols.map(col) ++ Seq(col(idCol), col("cell")): _*)
 
-  /** [[fitAssignScored]] from a memoized fit — assignment plus the winning
-    * cosine, bit-identical to the inline form.
+  /** [[fitAssignFrom]] plus the winning COSINE — the prototypicality score
+    * D4-class pruning ranks on (how close a member sits to its own
+    * centroid: the closest members are the cluster's most redundant).
+    * Returns (idCol, cell, cos_centroid); the cosine is the same
+    * exact-decimal-dot / IEEE sqrt-divide value the assignment argmax
+    * ranked, so it is bit-identical across engines and safe to ORDER by
+    * (the repo's float-for-ordering-only rule).
     */
   def fitAssignScoredFrom(
       e: DataFrame,
@@ -354,12 +244,15 @@ object IvfQuantizer {
       .select(col("__id").as(idCol), col("cell"), col("__cos").as("cos_centroid"))
   }
 
-  /** The TWO-LEVEL hierarchical fit collected for memoization: the coarse
-    * flat fit plus the per-coarse-cell grouped sub-fit (grpCols =
-    * Seq("ccell"), per-group seeds). Routing both levels via
-    * [[fitAssignHierFrom]] reproduces [[fitAssignHier]] bit-for-bit (the
-    * coarse assignment is [[fitAssignFrom]]'s, and the level-2 fit runs on
-    * the identical coarse-joined frame).
+  /** TWO-LEVEL hierarchical fit — the composition [[adaptiveK]]'s scaladoc
+    * names for cell counts past the flat regime: a k-cell coarse fit
+    * routes the corpus, then ONE grouped job fits k sub-cells inside each
+    * coarse cell (per-group seeds), giving ~k² leaf cells at per-vector
+    * routing cost 2k centroid scorings instead of k². With
+    * k = [[hierK]](n, c), leaf size stays ~c while assignment work grows
+    * n·2√(n/c) — sub-quadratic — and both levels' Lloyd passes still scan
+    * only the systematic samples. Returns the collected (coarse, level-2)
+    * pair; [[fitAssignHierFrom]] serves the assignment from it.
     */
   def fitHierCollect(
       e: DataFrame,
@@ -370,17 +263,37 @@ object IvfQuantizer {
       iters: Int,
       se1: Int,
       se2: Int): (CollectedFit, CollectedFit) = {
+    val (coarseFit, level2) = hierLevel2Frame(e, idCol, vecCol, n2Col, k, iters, se1, se2)
+    (coarseFit, CollectedFit(level2.schema, level2.collect(), Seq("ccell")))
+  }
+
+  /** The coarse fit (collected — one job) and the lazy level-2 centroid
+    * frame [[fitHierCollect]] collects: the grouped (grpCols = ccell,
+    * per-group seeds) Lloyd fit over the coarse-assigned corpus.
+    * `RegistryPlanLintSpec` plans the frame as `__fit_ivf_hier`.
+    */
+  private[graft] def hierLevel2Frame(
+      e: DataFrame,
+      idCol: String,
+      vecCol: String,
+      n2Col: String,
+      k: Int,
+      iters: Int,
+      se1: Int,
+      se2: Int): (CollectedFit, DataFrame) = {
     val coarseFit = fitCollect(e, idCol, vecCol, n2Col, k, iters, se1)
     val coarse = fitAssignFrom(e, idCol, vecCol, n2Col, coarseFit)
       .withColumnRenamed("cell", "ccell")
-    val withC = e.join(coarse, idCol)
-    val subFit = fitCollect(withC, idCol, vecCol, n2Col, k, iters, se2,
-      grpCols = Seq("ccell"), seedPerGroup = true)
-    (coarseFit, subFit)
+    (coarseFit, centroidFrame(e.join(coarse, idCol), idCol, vecCol, n2Col, k, iters, se2,
+      Seq("ccell"), seedPerGroup = true))
   }
 
-  /** [[fitAssignHier]] served from a memoized [[fitHierCollect]] pair:
-    * (idCol, ccell, scell), bit-identical to the inline form.
+  /** The two-level assignment served from a [[fitHierCollect]] pair:
+    * (idCol, ccell, scell). A leaf is the (ccell, scell) PAIR (sub-cell
+    * labels are per-group seed ids, unique only within their coarse cell).
+    * Vectors whose coarse cell has no level-2 fit-sample members drop from
+    * the output (see [[fitCollect]]'s seedPerGroup contract — pick
+    * se2 ≪ n/k).
     */
   def fitAssignHierFrom(
       e: DataFrame,
@@ -397,9 +310,10 @@ object IvfQuantizer {
       .select(col(idCol), col("ccell"), col("scell"))
   }
 
-  /** [[collectCentroids]]-shaped driver routing table off a collected
-    * FLAT fit: (cell, centroid, ns2) ascending by cell — ns2 the scale-4
-    * exact self-dot the batch ranking uses. Feed to [[routeVector]].
+  /** The driver routing table of a collected FLAT fit: (cell, centroid,
+    * ns2) ascending by cell — ns2 the scale-4 exact self-dot the batch
+    * ranking uses as `__ns2`. Sub-linear by the quantizer contract (k
+    * rows); broadcast it and route per row via [[routeVector]].
     */
   def routingTable(fit: CollectedFit): Array[(Long, Array[Double], Double)] = {
     require(fit.grpCols.isEmpty, "routingTable serves flat fits; use routingTables for grouped")
@@ -465,20 +379,14 @@ object IvfQuantizer {
         "__rn",
         row_number().over(
           Window.partitionBy(g :+ col("__id"): _*).orderBy(col("__cos").desc, col("cell"))))
-      // __cos rides along for scored consumers (fitAssignScored); the
-      // plain fitRanked/fitAssign projections drop it unchanged
+      // __cos rides along for scored consumers (fitAssignScoredFrom); the
+      // fitRankedFrom projection drops it
       .select(g ++ Seq(col("__id"), col("cell"), col("__rn"), col("__cos")): _*)
   }
 
-  /** Internal Lloyd-fit result: the persisted corpus view, the fitted
-    * centroid frame, and the ranking closure binding the fit's group
-    * columns.
+  /** The fitted centroid frame (grp…, cell, __sv) after `iters` Lloyd
+    * updates from the seed vectors.
     */
-  private final case class LloydFitted(
-      src: DataFrame,
-      cent: DataFrame,
-      rank: (DataFrame, DataFrame) => DataFrame)
-
   private def lloydFit(
       e: DataFrame,
       idCol: String,
@@ -488,7 +396,7 @@ object IvfQuantizer {
       iters: Int,
       sampleEvery: Int,
       grpCols: Seq[String],
-      seedPerGroup: Boolean): LloydFitted = {
+      seedPerGroup: Boolean): DataFrame = {
     require(sampleEvery >= 1, "sampleEvery must be >= 1")
     require(!seedPerGroup || grpCols.nonEmpty, "seedPerGroup needs grpCols")
     val g = grpCols.map(col)
@@ -497,7 +405,7 @@ object IvfQuantizer {
     val src = graft.ops.Caches.trackPersist(srcView(e, idCol, vecCol, n2Col, grpCols))
     // fit view: the systematic sample the Lloyd passes scan. id-dense
     // corpora get exactly n/sampleEvery fit rows; the FULL corpus is only
-    // touched by the single final assignment below.
+    // touched by the final assignment a served fit runs.
     val fit =
       if (sampleEvery == 1) src
       else graft.ops.Caches.trackPersist(src.filter(col("__id") % sampleEvery === 0))
@@ -543,12 +451,13 @@ object IvfQuantizer {
     // only `src` (scanned by every assignment and update) is cached
     var cent = cent0
     for (_ <- 1 to iters) cent = update(assignFrom(rankCells(fit, cent, grpCols)))
-    LloydFitted(src, cent, (b, c) => rankCells(b, c, grpCols))
+    cent
   }
 
-  /** DuckDB CTE chain mirroring [[fitRanked]] exactly: comp → cent0 →
-    * (ns_t, dots_t, ranked_t, a_t, cent_{t+1})* → `assigned(vec_id, cell)`
-    * (final rank 1) and `cellranks(vec_id, cell, rn)` (the full final
+  /** DuckDB CTE chain mirroring [[fitCollect]] + [[fitRankedFrom]]
+    * exactly: comp → cent0 → (ns_t, dots_t, ranked_t, a_t, cent_{t+1})* →
+    * `assigned(vec_id, cell)` (final rank 1) and `cellranks(vec_id, cell,
+    * rn)` (the full final
     * ranking — probe sets come from rn ≤ nprobe). Expects a CTE
     * `n(vec_id, n2)` with the exact squared norms in scope, and the table
     * `embeddings(vec_id, embedding)` with `dims` components.
@@ -619,8 +528,8 @@ object IvfQuantizer {
   }
 
   /** DuckDB CTE chain mirroring the GROUPED fit with PER-GROUP seeds
-    * (`fitRanked(grpCols, seedPerGroup = true)` — the level-2 stage of
-    * [[fitAssignHier]]): every Lloyd CTE carries the vector's group, the
+    * (`fitCollect(grpCols, seedPerGroup = true)` — the level-2 stage of
+    * [[fitHierCollect]]): every Lloyd CTE carries the vector's group, the
     * seeds are each group's k lowest-id fit-sample vectors (row_number,
     * exactly the Spark rule), and the chain emits
     * `assigned$sfx(vec_id, grp, cell)` / `cellranks$sfx`. Expects two CTEs

@@ -80,50 +80,39 @@ object Pca {
       .select(col(idCol).as("__id"), posexplode(col(vecCol)).as(Seq("d", "xf")))
       .select(col("__id"), (col("d") + 1).as("d"), col("xf").cast("double").as("x"))
 
-  /** Per-dimension trunc-9 means of the systematic sample: (d, mu) with
-    * d 1-based, one row per dimension.
+  /** The sample means (collected — one small job) and the lazy covariance
+    * cells [[fitK]] collects: (i, j, c) with all dims² cells present
+    * (every sampled vector carries every dimension),
+    * c = Σ trunc9((xᵢ−muᵢ)(xⱼ−muⱼ)) / 10⁹. The collected means feed the
+    * centered frame as a literal broadcast table (so the means aggregation
+    * runs once, not once per consumer), and the centered frame is
+    * persisted (it feeds both self-join branches); the self-join fans
+    * each sampled vector to dims² product rows, then map-side partial
+    * aggregation collapses them to dims² cells per task — the exchange is
+    * matrix-sized, not sample-sized. `RegistryPlanLintSpec` plans the
+    * cells frame as `__fit_pca_cov`.
     */
-  def sampleMeans(
+  private[graft] def covFrame(
       df: DataFrame,
       idCol: String,
       vecCol: String,
       dims: Int,
-      sampleEvery: Int): DataFrame =
-    explodedSample(df, idCol, vecCol, dims, sampleEvery)
-      .groupBy("d")
+      sampleEvery: Int): (Array[Double], DataFrame) = {
+    val spark: SparkSession = df.sparkSession
+    import spark.implicits._
+    val ex = explodedSample(df, idCol, vecCol, dims, sampleEvery)
+    val muMap = ex.groupBy("d")
       .agg((Exact.dsumTrunc9(col("x")) / count(lit(1)).cast("double")).as("mu"))
-
-  /** Centered sample rows (__id, d, xc) against a broadcast (d, mu) frame. */
-  private def compFrom(exploded: DataFrame, means: DataFrame): DataFrame =
-    exploded.join(broadcast(means), "d")
-      .select(col("__id"), col("d"), (col("x") - col("mu")).as("xc"))
-
-  /** Covariance cells (i, j, c) off the centered frame: the self-join fans
-    * each sampled vector to dims² product rows, then map-side partial
-    * aggregation collapses them to dims² cells per task — the exchange is
-    * matrix-sized, not sample-sized.
-    */
-  private def cellsFrom(comp: DataFrame): DataFrame =
-    comp.select(col("__id"), col("d").as("i"), col("xc").as("xa"))
+      .as[(Int, Double)].collect().toMap
+    val mu = Array.tabulate(dims)(d => muMap.getOrElse(d + 1, 0.0))
+    val muDf = (1 to dims).map(d => (d, mu(d - 1))).toDF("d", "mu")
+    val comp = graft.ops.Caches.trackPersist(
+      ex.join(broadcast(muDf), "d").select(col("__id"), col("d"), (col("x") - col("mu")).as("xc")))
+    val cells = comp.select(col("__id"), col("d").as("i"), col("xc").as("xa"))
       .join(comp.select(col("__id"), col("d").as("j"), col("xc").as("xb")), "__id")
       .groupBy("i", "j")
       .agg(Exact.dsumTrunc9(col("xa") * col("xb")).as("c"))
-
-  /** Centered covariance cells of the systematic sample: (i, j, c) with
-    * all dims² cells present (every sampled vector carries every
-    * dimension), c = Σ trunc9((xᵢ−muᵢ)(xⱼ−muⱼ)) / 10⁹. The centered frame
-    * is persisted (it feeds both self-join branches).
-    */
-  def sampleCov(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dims: Int,
-      sampleEvery: Int): DataFrame = {
-    val ex = explodedSample(df, idCol, vecCol, dims, sampleEvery)
-    val means = ex.groupBy("d")
-      .agg((Exact.dsumTrunc9(col("x")) / count(lit(1)).cast("double")).as("mu"))
-    cellsFrom(graft.ops.Caches.trackPersist(compFrom(ex, means)))
+    (mu, cells)
   }
 
   /** Driver-side power iteration over a dense dims×dims matrix: `iters`
@@ -153,14 +142,6 @@ object Pca {
     if (k >= 0 && v(k) < 0) v.map(x => -x) else v
   }
 
-  /** [[powerIterationM]] over collected (i, j, c) cells (1-based indices,
-    * all required within [1, dims] — loud otherwise).
-    */
-  def powerIteration(cells: Seq[(Int, Int, Double)], dims: Int, iters: Int): Array[Double] = {
-    require(dims > 0 && iters > 0, "need positive dims and iteration count")
-    powerIterationM(covMatrix(cells, dims), dims, iters)
-  }
-
   private def covMatrix(cells: Seq[(Int, Int, Double)], dims: Int): Array[Array[Double]] = {
     val cov = Array.ofDim[Double](dims, dims)
     cells.foreach { case (i, j, c) =>
@@ -170,13 +151,6 @@ object Pca {
     }
     cov
   }
-
-  /** The collected top-1 fit: per-dimension means, the top direction, and
-    * the covariance cells (1-based (i,j) → value) — the batch half of the
-    * fit/route split ([[pc1ScoresFrom]] and the streaming
-    * `pcaScoreStream` both route against it).
-    */
-  final case class Fit(mu: Array[Double], v: Array[Double], cov: Map[(Int, Int), Double])
 
   /** The collected top-k fit: means, the k deflated directions with their
     * Rayleigh variances λ₁ ≥ … ≥ λ_k, the total variance (trace), and the
@@ -188,10 +162,7 @@ object Pca {
       vs: IndexedSeq[Array[Double]],
       lambdas: IndexedSeq[Double],
       trace: Double,
-      cov: Map[(Int, Int), Double]) {
-    /** The top-1 view (the shape `pcaScoreStream` and [[pc1ScoresFrom]] take). */
-    def top1: Fit = Fit(mu, vs.head, cov)
-  }
+      cov: Map[(Int, Int), Double])
 
   /** Fit k principal directions by power iteration + deflation. The
     * sample is scanned exactly twice (means, then covariance cells over
@@ -213,16 +184,8 @@ object Pca {
     require(k >= 1 && k <= dims, s"need 1 <= k <= dims, got k=$k dims=$dims")
     val spark: SparkSession = df.sparkSession
     import spark.implicits._
-    val ex = explodedSample(df, idCol, vecCol, dims, sampleEvery)
-    val muMap = ex.groupBy("d")
-      .agg((Exact.dsumTrunc9(col("x")) / count(lit(1)).cast("double")).as("mu"))
-      .as[(Int, Double)].collect().toMap
-    val mu = Array.tabulate(dims)(d => muMap.getOrElse(d + 1, 0.0))
-    // the collected means feed the centered frame as a literal broadcast
-    // table — the means aggregation runs ONCE, not once per consumer
-    val muDf = (1 to dims).map(d => (d, mu(d - 1))).toDF("d", "mu")
-    val comp = graft.ops.Caches.trackPersist(compFrom(ex, muDf))
-    val cells = cellsFrom(comp).as[(Int, Int, Double)].collect().toSeq
+    val (mu, cellsDf) = covFrame(df, idCol, vecCol, dims, sampleEvery)
+    val cells = cellsDf.as[(Int, Int, Double)].collect().toSeq
     val cov0 = covMatrix(cells, dims)
     var trI = 0L
     var i = 0
@@ -253,31 +216,22 @@ object Pca {
       cells.map { case (a, b, c) => (a, b) -> c }.toMap)
   }
 
-  /** Fit the sample: means + covariance + `iters`-round top direction. */
-  def fit(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dims: Int,
-      iters: Int,
-      sampleEvery: Int): Fit =
-    fitK(df, idCol, vecCol, dims, iters, sampleEvery, k = 1).top1
-
   /** Score the FULL frame against an existing fit: (idCol, pc1_score)
     * where pc1_score = Σ trunc9((x_d − mu_d)·v_d) / 10⁹ — the signed
     * projection of the centered vector onto the fitted top principal
-    * direction. Large |pc1_score| marks vectors extreme along the
+    * direction v = `fk.vs.head`. Large |pc1_score| marks vectors extreme along the
     * corpus's dominant axis (the outlier/whitening signal).
     */
   def pc1ScoresFrom(
-      f: Fit,
+      fk: FitK,
       df: DataFrame,
       idCol: String,
       vecCol: String,
       dims: Int): DataFrame = {
     val spark: SparkSession = df.sparkSession
     import spark.implicits._
-    val mv = (1 to dims).map(d => (d, f.mu(d - 1), f.v(d - 1))).toDF("d", "mu", "v")
+    val v = fk.vs.head
+    val mv = (1 to dims).map(d => (d, fk.mu(d - 1), v(d - 1))).toDF("d", "mu", "v")
     checkedVec(df.select(col(idCol), col(vecCol)), vecCol, dims)
       .select(col(idCol), posexplode(col(vecCol)).as(Seq("d", "xf")))
       .select(col(idCol), (col("d") + 1).as("d"), col("xf").cast("double").as("x"))
@@ -285,16 +239,6 @@ object Pca {
       .groupBy(col(idCol))
       .agg(Exact.dsumTrunc9((col("x") - col("mu")) * col("v")).as("pc1_score"))
   }
-
-  /** Fit-then-score convenience (one fit, one projection). */
-  def pc1Scores(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dims: Int,
-      iters: Int,
-      sampleEvery: Int): DataFrame =
-    pc1ScoresFrom(fit(df, idCol, vecCol, dims, iters, sampleEvery), df, idCol, vecCol, dims)
 
   /** One-row variance summary off an existing fit: lambda1 = the Rayleigh
     * quotient vᵀCv (v is unit, so no denominator), trace = Σ Cᵢᵢ (the
@@ -308,17 +252,6 @@ object Pca {
     Seq((fk.lambdas.head, fk.trace, fk.lambdas.head / fk.trace))
       .toDF("lambda1", "trace", "var_share")
   }
-
-  /** Fit-then-summarize convenience. */
-  def pc1Variance(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dims: Int,
-      iters: Int,
-      sampleEvery: Int): DataFrame =
-    pc1VarianceFrom(
-      fitK(df, idCol, vecCol, dims, iters, sampleEvery, k = 1), df.sparkSession)
 
   /** Whitened top-k projection of the FULL frame against a [[fitK]] fit:
     * per id, pc_c = Σ trunc9((x_d − mu_d)·v_{c,d}) / 10⁹ (the raw
@@ -445,8 +378,9 @@ object Pca {
                      FROM compall c JOIN mu ON mu.d = c.d JOIN vf1 ON vf1.d = c.d
                      GROUP BY 1)"""
 
-  /** Oracle twin of [[pc1Variance]] — the fit plus the Rayleigh quotient
-    * and trace. Ends in `vstats(lambda1, trace, var_share)`.
+  /** Oracle twin of [[pc1VarianceFrom]] over a [[fitK]] — the fit plus
+    * the Rayleigh quotient and trace. Ends in
+    * `vstats(lambda1, trace, var_share)`.
     */
   def varianceSql(table: String, dims: Int, iters: Int, sampleEvery: Int): String =
     s"""${fitSqlK(table, dims, iters, sampleEvery, k = 1)},

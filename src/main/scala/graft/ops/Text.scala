@@ -172,7 +172,7 @@ object Text {
 
   /** [[profileTable]] fitted from a corpus and COLLECTED to the driver —
     * the batch half of the fit/route split ([[curationGates]] routes
-    * against it; same pattern as `IvfQuantizer.collectCentroids` and the
+    * against it; same pattern as `IvfQuantizer.routingTable` and the
     * DSIR log-ratio table): languages sorted ascending, each profile a
     * token list. Sub-linear by construction (|langs| · topK rows).
     */
@@ -621,7 +621,7 @@ object Text {
 
   /** The curation GATES as one STATELESS projection — the ingest-time
     * form of the `cur_funnel` stage prefix (fit batch, route stream: the
-    * same split as `IvfQuantizer.collectCentroids` → `routeVector` and
+    * same split as `IvfQuantizer.routingTable` → `routeVector` and
     * the DSIR log-ratio table). Per row, array-locally (no explode, no
     * groupBy, no state — legal in a streaming SELECT):
     *

@@ -46,16 +46,6 @@ object Vectors {
   def cosineFrom(dot: Column, n2a: Column, n2b: Column): Column =
     dot / nullif(sqrt(n2a) * sqrt(n2b), lit(0.0))
 
-  /** Fast approximate dot product: an explicit `dims`-term sum in plain
-    * double arithmetic (last-ulp order dependence — never oracle-compared
-    * directly). Superseded as a prefilter by the native [[dotExact]], kept
-    * as the non-exact option for pure-ranking workloads.
-    */
-  def dotFast(a: Column, b: Column, dims: Int): Column =
-    (1 to dims)
-      .map(i => element_at(a, i).cast("double") * element_at(b, i).cast("double"))
-      .reduce(_ + _)
-
   /** Sign-bucket LSH key over the first `dims` components: axis-aligned
     * random-hyperplane hashing (the deterministic degenerate case). 2^dims
     * buckets; near-duplicate vectors agree on all leading signs with high

@@ -99,10 +99,6 @@ object Windows {
   def tumbleMs(tsMs: Column, stepMs: Long): Column =
     tsMs - pmod(tsMs, lit(stepMs)) // pure integer arithmetic: no double-division rounding
 
-  /** W1 on a TimestampType column, in ms since epoch. */
-  def tumbleTs(ts: Column, stepMs: Long): Column =
-    tumbleMs(unix_millis(ts), stepMs)
-
   /** W2: strided (tumbling over row index) window id: rows are numbered in
     * `order` within `parts`, then chunked `winSize` at a time
     * (ref `utils.py:10-16` with shift == win_size, the only configuration the

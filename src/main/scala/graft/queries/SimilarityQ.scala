@@ -36,8 +36,9 @@ object SimilarityQ {
     * Lloyd fit is deterministic (systematic sample, fixed seeds, exact
     * decimal sums), so its k·d centroid table is a pure function of
     * (dataset, source transform, k, iters, sampleEvery) and collecting it
-    * once per key changes NO output ([[graft.ml.IvfQuantizer.fitRankedFrom]]
-    * is bit-identical to the inline fit, spec-pinned). Every consumer after
+    * once per key changes NO output (the collected fit is the quantizer's
+    * only fitted form; [[graft.ml.IvfQuantizer.fitRankedFrom]] serves it,
+    * spec-pinned against a plain-Scala ranking). Every consumer after
     * the first skips the Lloyd passes entirely — its plan is one broadcast
     * assignment. `tag` names the source transform ("raw" embeddings,
     * whitened "resid", PQ subspace slices) since the frames differ; the
@@ -662,7 +663,7 @@ object SimilarityQ {
       // queries and the stream scorer, the model-reuse any production
       // fit/route split has
       (s, d) => graft.ml.Pca.pc1ScoresFrom(
-        pcaFitFor(s, d).top1,
+        pcaFitFor(s, d),
         t(s, d, "embeddings").select(col("vec_id"), col("embedding")),
         "vec_id", "embedding", dims = 64),
       Some(s"""WITH ${graft.ml.Pca.sql("embeddings", 64, 6, 4)}
@@ -835,7 +836,7 @@ object SimilarityQ {
     QDef(
       "sim_label_noise_hier",
       // the same neighborhood-consensus audit routed through the TWO-LEVEL
-      // hierarchical quantizer (IvfQuantizer.fitAssignHier) — the
+      // hierarchical quantizer (IvfQuantizer.fitHierCollect) — the
       // composition the adaptiveK scaladoc names for cell counts past the
       // flat regime, demonstrated end-to-end and oracle-checked: a k-cell
       // coarse fit routes the corpus, ONE grouped job fits k sub-cells
@@ -992,7 +993,7 @@ object SimilarityQ {
     QDef(
       "sim_semantic_dedup_hier",
       // the SemDeDup keep ledger routed through the TWO-LEVEL hierarchical
-      // quantizer (IvfQuantizer.fitAssignHier) — the same composition
+      // quantizer (IvfQuantizer.fitHierCollect) — the same composition
       // sim_label_noise_hier demonstrates for the consensus audit, applied
       // to the dedup ledger: a hierK(n)-cell coarse fit routes the corpus,
       // ONE grouped job fits hierK(n) sub-cells per coarse cell, and the
@@ -1683,7 +1684,7 @@ object SimilarityQ {
       // rank members by cosine to their OWN centroid and drop the top
       // quarter — the most prototypical members are the cluster's most
       // redundant, and removing them preserves diversity at lower token
-      // cost. fitAssignScored reuses the sim_ivf fit bit-for-bit and adds
+      // cost. fitAssignScoredFrom serves the memoized sim_ivf fit and adds
       // the winning cosine (float used for ORDERING only); rank and kept
       // are integers. Cells smaller than 4 keep everything (rank·4 > n
       // for every rank). Scale: the per-cell window is bounded by the

@@ -392,7 +392,7 @@ object Streaming {
     * batch `sim_semantic_dedup` keep ledger: arriving vectors route through
     * a PRE-FITTED broadcast quantizer (the fit is batch by contract — the
     * same fit/route split as `nearDupDedupStream`'s batch-shaped
-    * signatures; pass [[graft.ml.IvfQuantizer.fitCentroids]]'s output), and
+    * signatures; pass a flat [[graft.ml.IvfQuantizer.fitCollect]] fit), and
     * a vector is ADMITTED iff no already-kept cell-mate sits at cosine
     * ≥ `tau`. Every vector ships in the ledger either way: keep = 0 rows
     * carry the smallest KEPT claimant (`keptBy`), the kept-claimant count
@@ -437,7 +437,7 @@ object Streaming {
     */
   def semanticDedupStream(
       vecs: DataFrame,
-      centroids: DataFrame,
+      fit: graft.ml.IvfQuantizer.CollectedFit,
       idCol: String,
       vecCol: String,
       tau: Double): Dataset[SemOut] = {
@@ -445,7 +445,7 @@ object Streaming {
     val spark = vecs.sparkSession
     import spark.implicits._
     import graft.functions.ExactDot
-    val cents = graft.ml.IvfQuantizer.collectCentroids(centroids)
+    val cents = graft.ml.IvfQuantizer.routingTable(fit)
     require(cents.nonEmpty, "semanticDedupStream needs a fitted centroid table")
     val bc = spark.sparkContext.broadcast(cents)
     vecs
@@ -461,31 +461,46 @@ object Streaming {
       .flatMapGroupsWithState[SemState, SemOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (cell: Long, rows: Iterator[SemRouted], state: GroupState[SemState]) =>
-          var kept = state.getOption.map(_.kept).getOrElse(Nil)
-          val out = rows.toSeq.sortBy(_.vecId).map { r =>
-            var keptBy = Option.empty[Long]
-            var maxCos = Option.empty[Double]
-            var nDup = 0L
-            kept.foreach { km =>
-              val dot = ExactDot.computeArrays(r.vec, km.vec, 9)
-              val den = math.sqrt(r.n2) * math.sqrt(km.n2)
-              if (dot != null && den != 0.0) {
-                val cos = dot.doubleValue() / den
-                if (cos >= tau) {
-                  nDup += 1
-                  if (keptBy.forall(_ > km.vecId)) keptBy = Some(km.vecId)
-                  if (maxCos.forall(_ < cos)) maxCos = Some(cos)
-                }
-              }
-            }
-            if (keptBy.isEmpty) {
-              kept = kept :+ SemKept(r.vecId, r.vec, r.n2)
-              SemOut(r.vecId, cell, 1L, None, None, None)
-            } else SemOut(r.vecId, cell, 0L, keptBy, Some(nDup), maxCos)
-          }
-          state.update(SemState(kept))
-          out.iterator
+          admitGreedy(rows.map(r => SemKept(r.vecId, r.vec, r.n2)), state, tau)(
+            SemOut(_, cell, _, _, _, _))
       }
+  }
+
+  /** The greedy admission both semantic-dedup streams run per routing
+    * key: the micro-batch's rows in vecId order, each admitted iff no kept
+    * key-mate sits at exact cosine ≥ `tau` (the same scale-9 `ExactDot`
+    * arithmetic as the batch ledgers). `emit(vecId, keep, keptBy, nDup,
+    * maxCos)` builds the ledger row — the smallest kept claimant, the
+    * kept-claimant count and the tightest claimant cosine, all None for a
+    * keep. The admitted vectors extend the key's state.
+    */
+  private def admitGreedy[O](
+      rows: Iterator[SemKept], state: GroupState[SemState], tau: Double)(
+      emit: (Long, Long, Option[Long], Option[Long], Option[Double]) => O): Iterator[O] = {
+    var kept = state.getOption.map(_.kept).getOrElse(Nil)
+    val out = rows.toSeq.sortBy(_.vecId).map { r =>
+      var keptBy = Option.empty[Long]
+      var maxCos = Option.empty[Double]
+      var nDup = 0L
+      kept.foreach { km =>
+        val dot = graft.functions.ExactDot.computeArrays(r.vec, km.vec, 9)
+        val den = math.sqrt(r.n2) * math.sqrt(km.n2)
+        if (dot != null && den != 0.0) {
+          val cos = dot.doubleValue() / den
+          if (cos >= tau) {
+            nDup += 1
+            if (keptBy.forall(_ > km.vecId)) keptBy = Some(km.vecId)
+            if (maxCos.forall(_ < cos)) maxCos = Some(cos)
+          }
+        }
+      }
+      if (keptBy.isEmpty) {
+        kept = kept :+ r
+        emit(r.vecId, 1L, None, None, None)
+      } else emit(r.vecId, 0L, keptBy, Some(nDup), maxCos)
+    }
+    state.update(SemState(kept))
+    out.iterator
   }
 
   /** A two-level-routed vector awaiting its per-leaf admission decision. */
@@ -505,7 +520,7 @@ object Streaming {
     * regime where the flat adaptive-k centroid table itself stops
     * broadcasting: per row, route to the argmax coarse cell, then to the
     * argmax sub-cell WITHIN that coarse cell's table — 2k centroid
-    * scorings instead of k², exactly the batch `fitAssignHier` assignment
+    * scorings instead of k², exactly the batch `fitAssignHierFrom` assignment
     * (both levels ride [[graft.ml.IvfQuantizer.routeVector]]'s
     * exact-arithmetic closure, which the per-group batch rank shares —
     * parity pinned in `StreamingSpec`). Admission then runs the unchanged
@@ -551,30 +566,8 @@ object Streaming {
       .flatMapGroupsWithState[SemState, SemOutHier](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (leaf: (Long, Long), rows: Iterator[SemRoutedHier], state: GroupState[SemState]) =>
-          var kept = state.getOption.map(_.kept).getOrElse(Nil)
-          val out = rows.toSeq.sortBy(_.vecId).map { r =>
-            var keptBy = Option.empty[Long]
-            var maxCos = Option.empty[Double]
-            var nDup = 0L
-            kept.foreach { km =>
-              val dot = ExactDot.computeArrays(r.vec, km.vec, 9)
-              val den = math.sqrt(r.n2) * math.sqrt(km.n2)
-              if (dot != null && den != 0.0) {
-                val cos = dot.doubleValue() / den
-                if (cos >= tau) {
-                  nDup += 1
-                  if (keptBy.forall(_ > km.vecId)) keptBy = Some(km.vecId)
-                  if (maxCos.forall(_ < cos)) maxCos = Some(cos)
-                }
-              }
-            }
-            if (keptBy.isEmpty) {
-              kept = kept :+ SemKept(r.vecId, r.vec, r.n2)
-              SemOutHier(r.vecId, leaf._1, leaf._2, 1L, None, None, None)
-            } else SemOutHier(r.vecId, leaf._1, leaf._2, 0L, keptBy, Some(nDup), maxCos)
-          }
-          state.update(SemState(kept))
-          out.iterator
+          admitGreedy(rows.map(r => SemKept(r.vecId, r.vec, r.n2)), state, tau)(
+            SemOutHier(_, leaf._1, leaf._2, _, _, _, _))
       }
   }
 
@@ -646,12 +639,12 @@ object Streaming {
 
   /** Streaming PC1 scorer — the embedding-space outlier/whitening signal
     * at ingest time: arriving vectors are projected STATELESSLY onto a
-    * PRE-FITTED top principal direction ([[graft.ml.Pca.fit]] — the fit
-    * is batch by contract, the same fit/route split as
-    * [[semanticDedupStream]]'s centroids and [[dsirAdmitStream]]'s
-    * log-ratio table). No shuffle, no watermark, no state store — a pure
+    * PRE-FITTED top principal direction (`fk.vs.head` of a
+    * [[graft.ml.Pca.fitK]] fit — the fit is batch by contract, the same
+    * fit/route split as [[semanticDedupStream]]'s centroids and
+    * [[dsirAdmitStream]]'s log-ratio table). No shuffle, no watermark, no state store — a pure
     * array-local projection, so the score column is slice-invariant and
-    * BIT-IDENTICAL to the batch `Pca.pc1Scores` (pinned in
+    * BIT-IDENTICAL to the batch `Pca.pc1ScoresFrom` (pinned in
     * `StreamingSpec`): the per-dimension trunc-9 terms are integers, so
     * the array-order fold here and the batch groupBy's unordered sum
     * agree exactly (integer associativity), and the closing /10⁹ matches
@@ -661,38 +654,17 @@ object Streaming {
       vecs: DataFrame,
       idCol: String,
       vecCol: String,
-      mu: Seq[Double],
-      v: Seq[Double],
-      carryCols: Seq[String] = Seq.empty): DataFrame = {
-    require(mu.nonEmpty && mu.size == v.size, "need matching non-empty mu/v")
-    val dims = mu.size
-    val muL = typedLit(mu)
-    val vL = typedLit(v)
+      fk: graft.ml.Pca.FitK,
+      carryCols: Seq[String] = Seq.empty): DataFrame =
     // loud length contract (the batch Pca.checkedVec twin): a vector
     // shorter than dims would element_at to NULL and fold to a SILENT
     // NULL score — breaking the documented batch bit-identity without a
-    // trace — so any length drift fails the micro-batch instead
-    val checked = when(size(col(vecCol)) === dims, col(vecCol))
-      .otherwise(raise_error(concat(
-        lit(s"pcaScoreStream: $vecCol length != $dims (got "),
-        size(col(vecCol)).cast("string"), lit(")"))))
-    def term(d: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-      val x = (element_at(col("__v"), d).cast("double") - element_at(muL, d)) *
-        element_at(vL, d)
-      val m = floor(abs(x) * lit(1.0e9d))
-      when(x < 0, -m).otherwise(m).cast("long")
-    }
+    // trace — so any length drift fails the micro-batch instead.
     // carryCols pass through untouched (the curationGates convention) so
     // the scorer chains ahead of stateful stages — gate on the score,
     // then dedup on a carried content key, in ONE streaming query
-    vecs.withColumn("__v", checked).select(
-      col(idCol) +: carryCols.map(col) :+
-        aggregate(
-          sequence(lit(1), lit(dims)),
-          lit(0L),
-          (acc, d) => acc + term(d),
-          acc => acc.cast("double") / lit(1.0e9d)).as("pc1_score"): _*)
-  }
+    vecs.withColumn("__v", checkedLen(vecCol, fk.mu.length, "pcaScoreStream"))
+      .select(col(idCol) +: carryCols.map(col) :+ pcFold(fk, 1).as("pc1_score"): _*)
 
   /** Signed trunc-9 fixed point of a double column — the in-plan twin of
     * the per-term quantization inside `Exact.dsumTrunc9` (and of
@@ -800,7 +772,7 @@ object Streaming {
     * their axis-removed residuals ([[whitenResidualStream]] — bit-equal to
     * the batch residual frame), routed through a PRE-FITTED broadcast
     * centroid table (fit the quantizer batch-side ON THE BATCH RESIDUAL
-    * frame — `IvfQuantizer.fitCentroids` over the same residuals this
+    * frame — `IvfQuantizer.fitCollect` over the same residuals this
     * stream computes; both fits are batch by contract), and admitted
     * against the kept residuals of their cell exactly as
     * [[semanticDedupStream]] admits raw vectors: first-kept-claimant
@@ -810,13 +782,13 @@ object Streaming {
     */
   def whitenedSemanticDedupStream(
       vecs: DataFrame,
-      centroids: DataFrame,
+      fit: graft.ml.IvfQuantizer.CollectedFit,
       idCol: String,
       vecCol: String,
       fk: graft.ml.Pca.FitK,
       tau: Double): Dataset[SemOut] =
     semanticDedupStream(
-      whitenResidualStream(vecs, idCol, vecCol, fk), centroids, idCol, "resid", tau)
+      whitenResidualStream(vecs, idCol, vecCol, fk), fit, idCol, "resid", tau)
 
   /** Cross-modal alignment gate as a stream — `mm7_alignment_keep` at
     * ingest time for rows that arrive with BOTH modalities (text +

@@ -1,6 +1,7 @@
 package graft.ml
 
 import graft.SparkSpec
+import graft.functions.ExactDot
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,14 +22,47 @@ class IvfQuantizerSpec extends SparkSpec {
       .withColumn("n2", graft.ops.Vectors.norm2Exact(col("embedding")))
   }
 
+  /** The full ranking served from a flat fit of `e`. */
+  private def ranked(e: DataFrame, cells: Int, sampleEvery: Int): DataFrame =
+    IvfQuantizer.fitRankedFrom(e, "vec_id", "embedding", "n2",
+      IvfQuantizer.fitCollect(e, "vec_id", "embedding", "n2", cells, iters, sampleEvery))
+
   private def collectRanked(df: DataFrame): Set[(Long, Long, Long)] =
     df.select(col("vec_id").cast("long"), col("cell").cast("long"), col("cell_rank"))
       .as[(Long, Long, Long)].collect().toSet
 
+  private def vectors(df: DataFrame): Array[(Long, Array[Double])] =
+    df.select(col("vec_id").cast("long"), col("embedding"))
+      .as[(Long, Array[Float])].collect()
+      .map { case (id, vf) => (id, vf.map(_.toDouble)) }
+
+  /** Plain-Scala ranking of one vector against a routing table: the exact
+    * scale-9 cosine per cell (None when a norm is zero), sorted cosine
+    * descending, None last, then cell ascending.
+    */
+  private def refRanking(
+      v: Array[Double], table: Array[(Long, Array[Double], Double)]): Seq[(Long, Option[Double])] = {
+    val n2: Double = ExactDot.computeArrays(v, v, 9)
+    table.toSeq.map { case (cell, sv, ns2) =>
+      val dot = ExactDot.computeArrays(v, sv, 9)
+      val den = math.sqrt(n2) * math.sqrt(ns2)
+      cell -> (if (dot == null || den == 0.0) None else Some(dot.doubleValue() / den))
+    }.sortWith { case ((c1, a), (c2, b)) =>
+      (a, b) match {
+        case (Some(x), Some(y)) if x != y => x > y
+        case (Some(_), None) => true
+        case (None, Some(_)) => false
+        case _ => c1 < c2
+      }
+    }
+  }
+
+  private def routed(v: Array[Double], table: Array[(Long, Array[Double], Double)]): Long =
+    IvfQuantizer.routeVector(v, ExactDot.computeArrays(v, v, 9), table)
+
   test("sampled fit still assigns the FULL corpus, with sample-seed cell labels") {
     val e = corpus(40, seed = 11)
-    val ranked = IvfQuantizer.fitRanked(e, "vec_id", "embedding", "n2", k, iters, sampleEvery = 2)
-    val rows = collectRanked(ranked)
+    val rows = collectRanked(ranked(e, k, sampleEvery = 2))
     graft.ops.Caches.releaseAll()
     // every corpus vector (sampled or not) gets a full k-cell ranking
     assert(rows.map(_._1) == (0L until 40L).toSet)
@@ -42,18 +76,16 @@ class IvfQuantizerSpec extends SparkSpec {
 
   test("sampleEvery=s fit == full fit on the manually filtered sample") {
     val e = corpus(40, seed = 23)
-    val sampled = collectRanked(
-      IvfQuantizer.fitRanked(e, "vec_id", "embedding", "n2", k, iters, sampleEvery = 2))
+    val sampled = collectRanked(ranked(e, k, sampleEvery = 2))
     graft.ops.Caches.releaseAll()
     // fitting the even-id sub-corpus (ids re-densified: i → i/2, so the
     // dense-id seed formula picks the SAME k seed vectors) with
     // sampleEvery=1 must produce the same centroids (same seeds, same Lloyd
     // passes), hence the same ranking on the vectors both runs share —
     // modulo the id/cell-label remap
-    val manual = collectRanked(
-      IvfQuantizer.fitRanked(
-        e.filter(col("vec_id") % 2 === 0).withColumn("vec_id", col("vec_id") / 2),
-        "vec_id", "embedding", "n2", k, iters))
+    val manual = collectRanked(ranked(
+      e.filter(col("vec_id") % 2 === 0).withColumn("vec_id", col("vec_id") / 2),
+      k, sampleEvery = 1))
     graft.ops.Caches.releaseAll()
     val sampledRemapped = sampled.collect {
       case (id, cell, rank) if id % 2 == 0 => (id / 2, cell / 2, rank)
@@ -63,97 +95,80 @@ class IvfQuantizerSpec extends SparkSpec {
 
   test("sampled fit is deterministic across runs") {
     val e = corpus(30, seed = 37)
-    val r1 = collectRanked(
-      IvfQuantizer.fitRanked(e, "vec_id", "embedding", "n2", k, iters, sampleEvery = 3))
+    val r1 = collectRanked(ranked(e, k, sampleEvery = 3))
     graft.ops.Caches.releaseAll()
-    val r2 = collectRanked(
-      IvfQuantizer.fitRanked(e, "vec_id", "embedding", "n2", k, iters, sampleEvery = 3))
+    val r2 = collectRanked(ranked(e, k, sampleEvery = 3))
     graft.ops.Caches.releaseAll()
     assert(r1 == r2)
   }
 
-  test("fitCentroids + routeVector reproduce fitAssign's assignment bit-for-bit") {
-    // the batch/stream split contract: routing a corpus through the
-    // exported centroid table with the closure-side exact arithmetic
-    // (ExactDot.computeArrays + ascending-cell strict-> tie-break) must
-    // equal the in-plan rankCells argmax — this pin is what lets
-    // semanticDedupStream claim batch-identical cell routing
-    val e = corpus(60, seed = 41)
-    val batch = IvfQuantizer
-      .fitAssign(e, "vec_id", "embedding", "n2", k, iters, sampleEvery = 2)
-      .select(col("vec_id").cast("long"), col("cell").cast("long"))
-      .as[(Long, Long)].collect().toMap
-    val cents = IvfQuantizer.collectCentroids(
-      IvfQuantizer.fitCentroids(e, "vec_id", "embedding", "n2", k, iters, sampleEvery = 2))
-    graft.ops.Caches.releaseAll()
-    assert(cents.map(_._1).toSeq == cents.map(_._1).toSeq.sorted && cents.length == k)
-    val routed = e.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])].collect()
-      .map { case (id, vf) =>
-        val v = vf.map(_.toDouble)
-        val n2: Double = graft.functions.ExactDot.computeArrays(v, v, 9)
-        id -> IvfQuantizer.routeVector(v, n2, cents)
-      }.toMap
-    assert(routed == batch,
-      s"closure routing diverged from the in-plan assignment for ids " +
-        s"${routed.collect { case (id, c) if batch(id) != c => id }.toSeq.sorted}")
-  }
+  test("served ranking == a plain-Scala reference (flat, grouped, scored, hier)") {
+    // the served forms run rankCells in-plan; the reference scores every
+    // cell of the collected fit's routing table(s) with ExactDot on the
+    // driver and sorts the exact cosines itself, so it shares no code with
+    // rankCells. A zero vector (id 61, outside the fit sample) has no real
+    // cosine: every cell ties, and the tie must break to the lowest cell.
+    val e = corpus(60, seed = 53).unionByName(
+      Seq((61L, Array.fill(4)(0f))).toDF("vec_id", "embedding")
+        .withColumn("n2", graft.ops.Vectors.norm2Exact(col("embedding"))))
+    val vecs = vectors(e)
 
-  test("fitCollect + fitRankedFrom == fitRanked bit-for-bit (flat, grouped, scored, hier)") {
-    // the memoization contract SimilarityQ's per-dataset fit cache rests
-    // on: serving the final full-corpus assignment from the collected
-    // centroid table must be indistinguishable from the inline fit — same
-    // ranking, same rank-1 assignment, same winning cosine, both flat and
-    // grouped/hierarchical
-    val e = corpus(60, seed = 53)
-    val inline = collectRanked(
-      IvfQuantizer.fitRanked(e, "vec_id", "embedding", "n2", k, iters, sampleEvery = 2))
-    graft.ops.Caches.releaseAll()
+    // flat: the full cell_rank, and rank 1 == routeVector
     val fit = IvfQuantizer.fitCollect(e, "vec_id", "embedding", "n2", k, iters, sampleEvery = 2)
     graft.ops.Caches.releaseAll()
-    val served = collectRanked(
-      IvfQuantizer.fitRankedFrom(e, "vec_id", "embedding", "n2", fit))
-    assert(served == inline, "memoized flat ranking diverged from the inline fit")
+    val table = IvfQuantizer.routingTable(fit)
+    assert(table.length == k)
+    val refs = vecs.map { case (id, v) => id -> refRanking(v, table) }.toMap
+    vecs.foreach { case (id, v) => assert(refs(id).head._1 == routed(v, table), s"id $id") }
+    assert(refs(61L).head._1 == table.head._1, "a zero vector must land in the lowest cell")
+    val want = refs.toSeq.flatMap { case (id, r) =>
+      r.zipWithIndex.map { case ((cell, _), i) => (id, cell, i + 1L) }
+    }.toSet
+    val served = collectRanked(IvfQuantizer.fitRankedFrom(e, "vec_id", "embedding", "n2", fit))
+    assert(served == want,
+      s"served flat ranking diverged: ${served.diff(want).take(5)} vs ${want.diff(served).take(5)}")
 
-    val scoredInline = IvfQuantizer
-      .fitAssignScored(e, "vec_id", "embedding", "n2", k, iters, sampleEvery = 2)
+    // scored: the rank-1 cell and its exact cosine
+    val scored = IvfQuantizer.fitAssignScoredFrom(e, "vec_id", "embedding", "n2", fit)
       .select(col("vec_id").cast("long"), col("cell").cast("long"), col("cos_centroid"))
-      .as[(Long, Long, Double)].collect().toSet
-    graft.ops.Caches.releaseAll()
-    val scoredServed = IvfQuantizer
-      .fitAssignScoredFrom(e, "vec_id", "embedding", "n2", fit)
-      .select(col("vec_id").cast("long"), col("cell").cast("long"), col("cos_centroid"))
-      .as[(Long, Long, Double)].collect().toSet
-    assert(scoredServed == scoredInline, "memoized scored assignment diverged")
+      .as[(Long, Long, Option[Double])].collect().toSet
+    val scoredWant = refs.map { case (id, r) => (id, r.head._1, r.head._2) }.toSet
+    assert(scored == scoredWant, s"served scored assignment diverged: ${scored.diff(scoredWant)}")
 
-    // grouped (the PQ-subspace shape): two groups over the same ids
-    val eg = e.withColumn("sub", (col("vec_id") % 2).cast("int"))
-    val gInline = IvfQuantizer
-      .fitAssign(eg, "vec_id", "embedding", "n2", k, iters, sampleEvery = 2,
-        grpCols = Seq("sub"))
-      .select(col("sub").cast("long"), col("vec_id").cast("long"), col("cell").cast("long"))
-      .as[(Long, Long, Long)].collect().toSet
-    graft.ops.Caches.releaseAll()
+    // grouped (the PQ-subspace shape): every id in both groups, group 1
+    // on the reversed vectors so the two fits differ
+    val eg = e.withColumn("sub", lit(0L)).unionByName(
+      e.withColumn("sub", lit(1L)).withColumn("embedding", reverse(col("embedding"))))
     val gFit = IvfQuantizer.fitCollect(eg, "vec_id", "embedding", "n2", k, iters,
       sampleEvery = 2, grpCols = Seq("sub"))
     graft.ops.Caches.releaseAll()
-    val gServed = IvfQuantizer.fitAssignFrom(eg, "vec_id", "embedding", "n2", gFit)
-      .select(col("sub").cast("long"), col("vec_id").cast("long"), col("cell").cast("long"))
-      .as[(Long, Long, Long)].collect().toSet
-    assert(gServed == gInline, "memoized grouped assignment diverged")
+    val tables = IvfQuantizer.routingTables(gFit)
+    assert(tables.keySet == Set(0L, 1L))
+    val gWant = Seq(0L, 1L).flatMap { sub =>
+      vecs.flatMap { case (id, v) =>
+        val vs = if (sub == 0L) v else v.reverse
+        refRanking(vs, tables(sub)).zipWithIndex.map { case ((cell, _), i) => (sub, id, cell, i + 1L) }
+      }
+    }.toSet
+    val gServed = IvfQuantizer.fitRankedFrom(eg, "vec_id", "embedding", "n2", gFit)
+      .select(col("sub"), col("vec_id").cast("long"), col("cell").cast("long"), col("cell_rank"))
+      .as[(Long, Long, Long, Long)].collect().toSet
+    assert(gServed == gWant, s"served grouped ranking diverged: ${gServed.diff(gWant).take(5)}")
 
-    // hierarchical: two-level fit served from the collected pair
-    val hInline = IvfQuantizer
-      .fitAssignHier(e, "vec_id", "embedding", "n2", k, 1, se1 = 2, se2 = 1)
-      .select(col("vec_id").cast("long"), col("ccell").cast("long"), col("scell").cast("long"))
-      .as[(Long, Long, Long)].collect().toSet
-    graft.ops.Caches.releaseAll()
+    // hierarchical: coarse routeVector, then routeVector in that coarse
+    // cell's level-2 table
     val (cFit, sFit) = IvfQuantizer.fitHierCollect(e, "vec_id", "embedding", "n2", k, 1, 2, 1)
     graft.ops.Caches.releaseAll()
+    val coarse = IvfQuantizer.routingTable(cFit)
+    val subs = IvfQuantizer.routingTables(sFit)
+    val hWant = vecs.map { case (id, v) =>
+      val ccell = routed(v, coarse)
+      (id, ccell, routed(v, subs(ccell)))
+    }.toSet
     val hServed = IvfQuantizer.fitAssignHierFrom(e, "vec_id", "embedding", "n2", cFit, sFit)
       .select(col("vec_id").cast("long"), col("ccell").cast("long"), col("scell").cast("long"))
       .as[(Long, Long, Long)].collect().toSet
-    assert(hServed == hInline, "memoized hierarchical assignment diverged")
+    assert(hServed == hWant, s"served hierarchical assignment diverged: ${hServed.diff(hWant)}")
   }
 
   test("IVF routing recall: on clustered data every exact neighbor is in a probed cell") {
@@ -175,12 +190,12 @@ class IvfQuantizerSpec extends SparkSpec {
     }
     val e = rows.toDF("vec_id", "embedding")
       .withColumn("n2", graft.ops.Vectors.norm2Exact(col("embedding")))
-    val ranked = IvfQuantizer.fitRanked(e, "vec_id", "embedding", "n2", 8, 2, sampleEvery = 2)
+    val rankedRows = ranked(e, 8, sampleEvery = 2)
       .select(col("vec_id").cast("long"), col("cell").cast("long"), col("cell_rank"))
       .as[(Long, Long, Long)].collect()
     graft.ops.Caches.releaseAll()
-    val cellOf = ranked.filter(_._3 == 1L).map(r => r._1 -> r._2).toMap
-    val probed = ranked.filter(r => r._3 <= 2L).groupBy(_._1).view.mapValues(_.map(_._2).toSet)
+    val cellOf = rankedRows.filter(_._3 == 1L).map(r => r._1 -> r._2).toMap
+    val probed = rankedRows.filter(r => r._3 <= 2L).groupBy(_._1).view.mapValues(_.map(_._2).toSet)
     def cos(a: Array[Float], b: Array[Float]): Double = {
       val dot = a.zip(b).map { case (x, y) => x.toDouble * y.toDouble }.sum
       dot / (math.sqrt(a.map(x => x.toDouble * x).sum) * math.sqrt(b.map(x => x.toDouble * x).sum))
@@ -197,30 +212,29 @@ class IvfQuantizerSpec extends SparkSpec {
 
   test("fitAssignScored: same assignment as fitAssign, cosine is the cell-wise max, deterministic") {
     val e = corpus(60, seed = 47)
+    val fit = IvfQuantizer.fitCollect(e, "vec_id", "embedding", "n2", k, iters, sampleEvery = 2)
+    graft.ops.Caches.releaseAll()
     val plain = IvfQuantizer
-      .fitAssign(e, "vec_id", "embedding", "n2", k, iters, sampleEvery = 2)
+      .fitAssignFrom(e, "vec_id", "embedding", "n2", fit)
       .select(col("vec_id").cast("long"), col("cell").cast("long"))
       .as[(Long, Long)].collect().toMap
-    graft.ops.Caches.releaseAll()
-    val scored = IvfQuantizer
-      .fitAssignScored(e, "vec_id", "embedding", "n2", k, iters, sampleEvery = 2)
+    def scoredRows = IvfQuantizer
+      .fitAssignScoredFrom(e, "vec_id", "embedding", "n2", fit)
       .select(col("vec_id").cast("long"), col("cell").cast("long"), col("cos_centroid"))
       .as[(Long, Long, Double)].collect()
-    graft.ops.Caches.releaseAll()
+    val scored = scoredRows
+    assert(scoredRows.toSet == scored.toSet)
     assert(scored.map(r => r._1 -> r._2).toMap == plain)
     assert(scored.forall(r => r._3 >= -1.0 - 1e-9 && r._3 <= 1.0 + 1e-9))
     // the winning cosine dominates the vector's cosine to EVERY centroid
     // (it is the argmax the assignment ranked on)
-    val cents = IvfQuantizer.collectCentroids(
-      IvfQuantizer.fitCentroids(e, "vec_id", "embedding", "n2", k, iters, sampleEvery = 2))
-    graft.ops.Caches.releaseAll()
-    val vecs = e.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])].collect().toMap
+    val cents = IvfQuantizer.routingTable(fit)
+    val vecs = vectors(e).toMap
     for ((id, _, cosWin) <- scored) {
-      val v = vecs(id).map(_.toDouble)
-      val n2: Double = graft.functions.ExactDot.computeArrays(v, v, 9)
+      val v = vecs(id)
+      val n2: Double = ExactDot.computeArrays(v, v, 9)
       val all = cents.map { case (_, sv, ns2) =>
-        val dot: Double = graft.functions.ExactDot.computeArrays(v, sv, 9)
+        val dot: Double = ExactDot.computeArrays(v, sv, 9)
         dot / (math.sqrt(n2) * math.sqrt(ns2))
       }
       assert(cosWin >= all.max - 1e-12, s"id $id: winning cos $cosWin < max ${all.max}")

@@ -43,9 +43,7 @@ class PcaSpec extends SparkSpec {
 
   test("powerIteration recovers a planted dominant axis") {
     val df = planted(200).toDF("vec_id", "embedding")
-    val cells = Pca.sampleCov(df, "vec_id", "embedding", dims, sampleEvery = 1)
-      .as[(Int, Int, Double)].collect().toSeq
-    val v = Pca.powerIteration(cells, dims, iters = 8)
+    val v = Pca.fitK(df, "vec_id", "embedding", dims, iters = 8, sampleEvery = 1, k = 1).vs.head
     val u = Array.tabulate(dims)(d => if (d < 2) 1.0 / math.sqrt(2.0) else 0.0)
     val cos = v.zip(u).map { case (a, b) => a * b }.sum /
       math.sqrt(v.map(x => x * x).sum)
@@ -58,7 +56,8 @@ class PcaSpec extends SparkSpec {
 
   test("pc1Scores: on-axis extremes rank highest; scores track the axis coefficient") {
     val df = planted(200).toDF("vec_id", "embedding")
-    val scores = Pca.pc1Scores(df, "vec_id", "embedding", dims, iters = 8, sampleEvery = 1)
+    val fk = Pca.fitK(df, "vec_id", "embedding", dims, iters = 8, sampleEvery = 1, k = 1)
+    val scores = Pca.pc1ScoresFrom(fk, df, "vec_id", "embedding", dims)
       .as[(Long, Double)].collect().toMap
     assert(scores.size == 200)
     // the centered axis coefficient of vec i is ((i % 17) - 8) - mean; the
@@ -94,8 +93,8 @@ class PcaSpec extends SparkSpec {
       s"variance order broken: ${fk.lambdas}")
     // component 1 of the k=2 chain IS the k=1 fit (the memoized-FitK
     // contract the registered PCA queries rely on)
-    val f1 = Pca.fit(df, "vec_id", "embedding", dims, iters = 8, sampleEvery = 1)
-    assert(fk.vs(0).sameElements(f1.v) && fk.mu.sameElements(f1.mu))
+    val f1 = Pca.fitK(df, "vec_id", "embedding", dims, iters = 8, sampleEvery = 1, k = 1)
+    assert(fk.vs(0).sameElements(f1.vs.head) && fk.mu.sameElements(f1.mu))
   }
 
   test("whitenScores: w_c = pc_c/√λ_c exactly; per-axis variances equalize") {
@@ -120,8 +119,11 @@ class PcaSpec extends SparkSpec {
   }
 
   test("powerIteration rejects a degenerate all-zero covariance loudly") {
+    // an all-zero corpus: every covariance cell is 0, so the first power
+    // round hits a zero iterate
+    val df = (0 until 20).map(i => (i.toLong, Array.fill(dims)(0f))).toDF("vec_id", "embedding")
     intercept[IllegalArgumentException] {
-      Pca.powerIteration(Seq.empty, dims, iters = 3)
+      Pca.fitK(df, "vec_id", "embedding", dims, iters = 3, sampleEvery = 1, k = 1)
     }
   }
 
@@ -142,7 +144,7 @@ class PcaSpec extends SparkSpec {
     val good = planted(20)
     val df = (good :+ (99L, Array.fill(dims - 1)(0.5f))).toDF("vec_id", "embedding")
     val e = intercept[Exception] {
-      Pca.fit(df, "vec_id", "embedding", dims, iters = 3, sampleEvery = 1)
+      Pca.fitK(df, "vec_id", "embedding", dims, iters = 3, sampleEvery = 1, k = 1)
     }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))

@@ -115,6 +115,16 @@ class CleaningSpec extends SparkSpec {
     assert(out(Some(5.0)).contains(5.0))    // interior untouched
     assert(out(None).isEmpty)               // NULL stays NULL
   }
+
+  test("nanToZero: NaN and NULL become 0.0; finite values and ±Infinity pass unchanged") {
+    // ±Infinity stays as it is, as in the reference's pandas fillna(0)
+    val in = Seq(Some(Double.NaN), None, Some(-2.5), Some(0.0), Some(1e300),
+      Some(Double.PositiveInfinity), Some(Double.NegativeInfinity))
+    val got = in.zipWithIndex.map { case (v, i) => (i, v) }.toDF("i", "v")
+      .select(col("i"), Cleaning.nanToZero(col("v")).as("z"))
+      .orderBy("i").select("z").as[Double].collect().toSeq
+    assert(got == Seq(0.0, 0.0, -2.5, 0.0, 1e300, Double.PositiveInfinity, Double.NegativeInfinity))
+  }
 }
 
 object CleaningSpec {

@@ -433,6 +433,7 @@ object OperatorProps extends Properties("graft.ops") {
       val cont = Dedup.containmentPairs(df, "doc_id", "text", 3, 0.0)
         .select("a_id", "b_id", "shared", "na", "nb", "cont_a", "cont_b")
         .as[(Long, Long, Long, Long, Long, Double, Double)].collect()
+      Caches.releaseAll()
       Prop(cont.forall { case (a, b, shared, na, nb, ca, cb) =>
         val j = jac((a, b)) // same pair universe: shared >= 1 both ways
         ca > 0.0 && ca <= 1.0 && cb > 0.0 && cb <= 1.0 &&

@@ -173,25 +173,29 @@ class RegistryPlanLintSpec extends SparkSpec {
       // ivfFits/hierFits), so the registered queries' signatures contain
       // only the post-fit routing plan — a fit-plan regression (lost
       // broadcast, new exchange, un-pruned scan) would be invisible there.
-      // Planning the fit frames directly closes that blind spot: they are
-      // fully lazy DataFrames (collect happens only inside fitK/fitCollect),
-      // so this costs a plan, not a job.
-      val fitFrames: Seq[(String, org.apache.spark.sql.DataFrame)] = {
+      // Each fit collects exactly one lazy frame, built by one private[graft]
+      // function, and these pseudo-queries plan that same function:
+      // IvfQuantizer.centroidFrame (fitCollect), hierLevel2Frame
+      // (fitHierCollect) and Pca.covFrame (fitK). The flat frame costs a
+      // plan; the hier and PCA frames each run one small job at build time
+      // (the coarse-fit collect and the means collect they are built on).
+      val fitFrames: Seq[(String, () => org.apache.spark.sql.DataFrame)] = {
         import org.apache.spark.sql.functions.col
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+        def emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
           .select(col("vec_id"), col("embedding"))
-        val eN = emb.withColumn("n2", graft.ops.Vectors.norm2Exact(col("embedding")))
+        def eN = emb.withColumn("n2", graft.ops.Vectors.norm2Exact(col("embedding")))
         Seq(
-          "__fit_pca_cov" ->
-            graft.ml.Pca.sampleCov(emb, "vec_id", "embedding", 64, 4),
-          "__fit_ivf_flat" ->
-            graft.ml.IvfQuantizer.fitRanked(eN, "vec_id", "embedding", "n2", 8, 2, sampleEvery = 4),
-          "__fit_ivf_hier" ->
-            graft.ml.IvfQuantizer.fitAssignHier(eN, "vec_id", "embedding", "n2", 3, 1, se1 = 4, se2 = 2))
+          "__fit_pca_cov" -> (() =>
+            graft.ml.Pca.covFrame(emb, "vec_id", "embedding", 64, 4)._2),
+          "__fit_ivf_flat" -> (() =>
+            graft.ml.IvfQuantizer.centroidFrame(eN, "vec_id", "embedding", "n2", 8, 2, 4,
+              Nil, seedPerGroup = false)),
+          "__fit_ivf_hier" -> (() =>
+            graft.ml.IvfQuantizer.hierLevel2Frame(eN, "vec_id", "embedding", "n2", 3, 1, 4, 2)._2))
       }
       val rows = (graft.SparkEntry.queries.toSeq.sortBy(_._1).map {
         case (name, fn) => (name, () => fn(spark, sfDir))
-      } ++ fitFrames.map { case (name, df) => (name, () => df) }).flatMap {
+      } ++ fitFrames).flatMap {
         case (name, build) =>
           val out =
             try {

@@ -11,6 +11,15 @@ class StreamingSpec extends SparkSpec {
 
   private def ts(s: Int) = new Timestamp(s * 1000L)
 
+  /** A k = 1 quantizer fit: every vector routes to its one cell. */
+  private def oneCellFit(): graft.ml.IvfQuantizer.CollectedFit = {
+    val e = Seq((0L, Array(1f, 1f, 0f))).toDF("vec_id", "embedding")
+      .withColumn("n2", graft.ops.Vectors.norm2Exact(col("embedding")))
+    val fit = graft.ml.IvfQuantizer.fitCollect(e, "vec_id", "embedding", "n2", k = 1, iters = 1)
+    graft.ops.Caches.releaseAll()
+    fit
+  }
+
   test("foreachBatch + Incremental partials maintain an IVM table over a stream") {
     // the continuous-ingest composition: each micro-batch contributes its
     // (count, exact sum) partial state; the maintained table after N
@@ -406,16 +415,16 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("semanticDedupStream admits against kept cell-mates with first-kept attribution") {
-    // one obvious cell (single centroid): A and C are orthogonal keepers;
+    // one obvious cell (a k = 1 fit): A and C are orthogonal keepers;
     // B arrives later on A's direction (cos ≈ 1 ≥ τ) and drops attributed
     // to A; D likewise drops against C — across micro-batches, so the
     // admission state carries
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val centroids = Seq((0L, Array(1.0, 1.0, 0.0))).toDF("cell", "centroid")
+    val fit = oneCellFit()
     val input = MemoryStream[(Long, Array[Double])]
     val df = input.toDF().toDF("vec_id", "embedding")
-    val out = Streaming.semanticDedupStream(df, centroids, "vec_id", "embedding", tau = 0.9)
+    val out = Streaming.semanticDedupStream(df, fit, "vec_id", "embedding", tau = 0.9)
     val q = out.writeStream.format("memory").queryName("semdedup_stream")
       .outputMode("append").start()
     try {
@@ -455,9 +464,9 @@ class StreamingSpec extends SparkSpec {
       .withColumn("n2", graft.ops.Vectors.norm2Exact(col("embedding")))
     val n = e.count()
     val k = graft.ml.IvfQuantizer.adaptiveK(n, 64)
-    val centDf = graft.ml.IvfQuantizer
-      .fitCentroids(e, "vec_id", "embedding", "n2", k, 2, sampleEvery = 4)
-    val cents = graft.ml.IvfQuantizer.collectCentroids(centDf)
+    val fit = graft.ml.IvfQuantizer
+      .fitCollect(e, "vec_id", "embedding", "n2", k, 2, sampleEvery = 4)
+    val cents = graft.ml.IvfQuantizer.routingTable(fit)
     val vecs = e.select(col("vec_id"), col("embedding"))
       .as[(Long, Array[Float])].collect().sortBy(_._1)
       .map { case (id, vf) => (id, vf.map(_.toDouble)) }
@@ -491,7 +500,7 @@ class StreamingSpec extends SparkSpec {
     def runStream(slices: Int, name: String): Set[(Long, Long, Long, Option[Long], Option[Long], Option[Double])] = {
       val input = MemoryStream[(Long, Array[Double])]
       val df = input.toDF().toDF("vec_id", "embedding")
-      val out = Streaming.semanticDedupStream(df, centDf, "vec_id", "embedding", tau)
+      val out = Streaming.semanticDedupStream(df, fit, "vec_id", "embedding", tau)
       val q = out.writeStream.format("memory").queryName(name)
         .outputMode("append").start()
       try {
@@ -532,10 +541,10 @@ class StreamingSpec extends SparkSpec {
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val centroids = Seq((0L, Array(1.0, 1.0, 0.0))).toDF("cell", "centroid")
+      val fit = oneCellFit()
       val input = MemoryStream[(Long, Array[Double])]
       val df = input.toDF().toDF("vec_id", "embedding")
-      val out = Streaming.semanticDedupStream(df, centroids, "vec_id", "embedding", tau = 0.9)
+      val out = Streaming.semanticDedupStream(df, fit, "vec_id", "embedding", tau = 0.9)
       val q = out.writeStream.format("memory").queryName("semdedup_rocks")
         .outputMode("append").start()
       try {
@@ -1002,20 +1011,20 @@ class StreamingSpec extends SparkSpec {
   test("pcaScoreStream: scores bit-match the batch pc1Scores against the pre-fitted direction") {
     // fit batch, route stream: the pre-fitted (mu, v) direction scores
     // arriving vectors in a stateless array-local projection — per-vector
-    // scores must be BIT-identical to the batch Pca.pc1Scores (integer
+    // scores must be BIT-identical to the batch Pca.pc1ScoresFrom (integer
     // trunc-9 terms make the array-order fold and the batch groupBy sum
     // agree exactly), across micro-batch slicing
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
-    val batch = graft.ml.Pca.pc1Scores(emb, "vec_id", "embedding", 64, 6, 4)
+    val f = graft.ml.Pca.fitK(emb, "vec_id", "embedding", 64, 6, 4, k = 1)
+    val batch = graft.ml.Pca.pc1ScoresFrom(f, emb, "vec_id", "embedding", 64)
       .as[(Long, Double)].collect().toMap
-    val f = graft.ml.Pca.fit(emb, "vec_id", "embedding", 64, 6, 4)
     val rows = emb.as[(Long, Array[Float])].collect()
     val input = MemoryStream[(Long, Array[Float])]
     val df = input.toDF().toDF("vec_id", "embedding")
-    val out = Streaming.pcaScoreStream(df, "vec_id", "embedding", f.mu.toSeq, f.v.toSeq)
+    val out = Streaming.pcaScoreStream(df, "vec_id", "embedding", f)
     val q = out.writeStream.format("memory").queryName("pca_stream")
       .outputMode("append").start()
     try {
@@ -1044,7 +1053,7 @@ class StreamingSpec extends SparkSpec {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
       .filter(col("vec_id") < 200)
-    val f = graft.ml.Pca.fit(emb, "vec_id", "embedding", 64, 6, 4)
+    val f = graft.ml.Pca.fitK(emb, "vec_id", "embedding", 64, 6, 4, k = 1)
     val batchScores = graft.ml.Pca
       .pc1ScoresFrom(f, emb, "vec_id", "embedding", 64)
       .as[(Long, Double)].collect().toMap
@@ -1058,8 +1067,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Long, Array[Float], java.sql.Timestamp)]
     val df = input.toDF().toDF("vec_id", "embedding", "ts")
     val chained = Streaming
-      .pcaScoreStream(df, "vec_id", "embedding", f.mu.toSeq, f.v.toSeq,
-        carryCols = Seq("embedding", "ts"))
+      .pcaScoreStream(df, "vec_id", "embedding", f, carryCols = Seq("embedding", "ts"))
       .filter(abs(col("pc1_score")) <= cap)
       .withColumn("fp", xxhash64(col("embedding")))
       .withWatermark("ts", "10 minutes")
@@ -1173,9 +1181,9 @@ class StreamingSpec extends SparkSpec {
     val n = emb.count()
     val k = graft.ml.IvfQuantizer.adaptiveK(n, 64)
     // the batch half of the split: quantizer fitted ON THE BATCH RESIDUALS
-    val centDf = graft.ml.IvfQuantizer
-      .fitCentroids(residDf, "vec_id", "resid", "n2", k, 2, sampleEvery = 4)
-    val cents = graft.ml.IvfQuantizer.collectCentroids(centDf)
+    val fit = graft.ml.IvfQuantizer
+      .fitCollect(residDf, "vec_id", "resid", "n2", k, 2, sampleEvery = 4)
+    val cents = graft.ml.IvfQuantizer.routingTable(fit)
     val resids = residDf.select(col("vec_id"), col("resid"))
       .as[(Long, Array[Double])].collect().sortBy(_._1)
     graft.ops.Caches.releaseAll()
@@ -1207,7 +1215,7 @@ class StreamingSpec extends SparkSpec {
       val input = MemoryStream[(Long, Array[Float])]
       val df = input.toDF().toDF("vec_id", "embedding")
       val out = Streaming.whitenedSemanticDedupStream(
-        df, centDf, "vec_id", "embedding", fk, tau)
+        df, fit, "vec_id", "embedding", fk, tau)
       val q = out.writeStream.format("memory").queryName(name)
         .outputMode("append").start()
       try {
