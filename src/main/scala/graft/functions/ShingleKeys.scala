@@ -10,13 +10,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * native codegen pass — `out(i) = xxh64(tok_i ⧺ … ⧺ tok_{i+k−1})` (bytes
   * chained through the seed), length `n − k + 1`, empty when `n < k`.
   *
-  * Why it exists: the composed form — `transform(sequence(...), i ->
-  * concat_ws(" ", toks[i], …))` then a hash — is an interpreted lambda
-  * per shingle that ALLOCATES the k-word string just to throw it away
-  * after hashing. Measured on a 300k-doc corpus (9.5M shingles) the
-  * string-building pass dominated the whole contamination scan. This
-  * expression hashes the token bytes in place: no concatenation, no
-  * per-element interpretation.
+  * Why it exists: hashing the shingle STRINGS allocates each k-word
+  * string just to throw it away. Measured on a 300k-doc corpus (9.5M
+  * shingles) with the composed string form — `transform(sequence(...), i
+  * -> concat_ws(" ", toks[i], …))`, whose native replacement is
+  * [[Shingles]] — the string-building pass dominated the whole
+  * contamination scan. This expression hashes the token bytes in place:
+  * no concatenation. Unlike [[Shingles]] it is empty when `n < k`.
   *
   * The key is internal (inverted-index join/equality only): downstream
   * results depend on the EQUALITY relation, not key values, so the DuckDB

@@ -788,12 +788,15 @@ object Dedup {
       idCol: String,
       textCol: String,
       blockTokens: Int = 8): DataFrame = {
-    val toks = Text.tokens(col(textCol))
+    // the token array is projected once, so the block lambda reads a
+    // column instead of re-splitting the doc per block
+    val toks = col("__toks")
     // complete blocks only; slice() is 1-based. sequence() needs the guard:
     // sequence(0, -1) yields [0, -1], not [] — docs shorter than one block
     // must not reach it
     val nb = floor(size(toks) / blockTokens).cast("int")
     val blocks = df
+      .select(col(idCol), Text.tokens(col(textCol)).as("__toks"))
       .filter(size(toks) >= blockTokens)
       .select(
         col(idCol),

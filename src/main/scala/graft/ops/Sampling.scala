@@ -407,8 +407,8 @@ object Sampling {
     // unigrams + ordered bigrams in ONE explode off ONE tokenization pass —
     // the former two-branch union re-scanned and re-tokenized the corpus
     // per branch (same instance multiset, so every aggregate downstream is
-    // unchanged). The size() guard keeps the sequence() pitfall out:
-    // shingles() on a 1-token doc would build sequence(0, -1) = [0, -1]
+    // unchanged). The size() guard keeps the n < k rule out: shingles()
+    // of a 1-token doc is [t0, t0], not empty
     val feats = concat(
       toks,
       when(size(toks) >= 2, Text.shingles(toks, 2))

@@ -18,11 +18,13 @@ object Text {
   /** Whitespace tokenization of single-spaced text. */
   def tokens(c: Column): Column = split(trim(c), " ")
 
-  /** k-word shingles (0-based get(); empty when fewer than k tokens). */
-  def shingles(toks: Column, k: Int): Column =
-    transform(
-      sequence(lit(0), size(toks) - k),
-      i => concat_ws(" ", (0 until k).map(j => get(toks, i + lit(j))): _*))
+  /** k-word shingles: `concat_ws(' ', toks[i..i+k−1])` for `i` in
+    * `sequence(0, n − k)`, in one native pass ([[graft.functions.Shingles]]).
+    * NOT empty when fewer than k tokens: the sequence then descends and
+    * yields `|n − k| + 1` partial shingles (one token, k = 2 → `[t0, t0]`),
+    * so callers that want none guard with `size(toks) >= k`.
+    */
+  def shingles(toks: Column, k: Int): Column = graft.functions.Shingles(toks, k)
 
   /** Spread docs across all cores before CPU-bound per-doc work — see
     * [[Spread.byKey]] (no-op when the input is already well-partitioned).
@@ -474,7 +476,7 @@ object Text {
     while (r <= rounds && !exhausted) {
       val toks = split(col("sym"), " ")
       val top = state
-        .filter(size(toks) >= 2) // shingles() needs the guard (sequence(0,-1) descends)
+        .filter(size(toks) >= 2) // shingles() needs the guard (one token gives [t0, t0])
         .select(explode(shingles(toks, 2)).as("pair"), col("freq"))
         .groupBy("pair").agg(sum(col("freq")).as("cnt"))
         .orderBy(col("cnt").desc, col("pair"))
@@ -650,7 +652,12 @@ object Text {
       qualityMin: Double,
       carryCols: Seq[String] = Nil): DataFrame = {
     require(profiles.nonEmpty, "need at least one language profile")
-    val toks = tokens(col(textCol))
+    // the token, bigram and trigram arrays are projected ONCE per doc: a
+    // higher-order lambda gets no common-subexpression elimination, so a
+    // lambda that named the computed array would re-derive it per element
+    val toks = col("__toks")
+    val bg = col("__bg")
+    val tg = col("__tg")
     val entries = profiles.map { case (l, prof) =>
       struct(
         (-size(filter(toks, t => array_contains(typedLit(prof), t)))).as("ns"),
@@ -664,8 +671,6 @@ object Text {
     val dr = nDist.cast("double") / nTok.cast("double")
     val sr = nStop.cast("double") / nTok.cast("double")
     val qScore = dr * (lit(1.0) - sr)
-    val bg = shingles(toks, 2)
-    val tg = shingles(toks, 3)
     def gramCounts(grams: Column): Column =
       transform(array_distinct(grams), g => size(filter(grams, x => x === g)).cast("long"))
     val topb = array_max(gramCounts(bg))
@@ -674,13 +679,15 @@ object Text {
     val flagged = when(nTok >= 3,
       ((topb.cast("double") / size(bg).cast("double") > lit(0.2)) ||
         (dupt.cast("double") / size(tg).cast("double") > lit(0.15))).cast("long"))
-    df.select(
-      col(idCol) +: carryCols.map(col) ++: Seq(
-        predLang.as("pred_lang"),
-        nTok.as("n_tokens"),
-        qScore.as("quality_score"),
-        (qScore >= lit(qualityMin)).as("quality_ok"),
-        flagged.as("rep_flagged")): _*)
+    df.select(col("*"), tokens(col(textCol)).as("__toks"))
+      .select(col("*"), shingles(toks, 2).as("__bg"), shingles(toks, 3).as("__tg"))
+      .select(
+        col(idCol) +: carryCols.map(col) ++: Seq(
+          predLang.as("pred_lang"),
+          nTok.as("n_tokens"),
+          qScore.as("quality_score"),
+          (qScore >= lit(qualityMin)).as("quality_ok"),
+          flagged.as("rep_flagged")): _*)
   }
 
   /** Per-group tokenizer FERTILITY audit over [[bpeEncode]] — the standard

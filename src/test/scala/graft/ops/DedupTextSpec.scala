@@ -450,4 +450,44 @@ class DedupTextSpec extends SparkSpec {
     assert(d2._2 == 6L && d2._3 == 1L && d2._4 == 5L && d2._5 == 0L)
     assert(d2._6 == 1.0 / 6.0 && d2._7 == 0.0 && d2._8 == 0L)
   }
+
+  test("curationGates == a plain-Scala reference of every gate; id and text carried") {
+    // short (< 3 tokens), repetitive, stopword-heavy and multi-byte docs,
+    // plus runs of spaces (empty tokens) and a doc whose repeated bigrams
+    // sit exactly on the 0.2 share while its trigrams are all distinct; the
+    // id and text ride along as carry columns, as the stream ingest does
+    val texts = Seq(
+      "", "one", "two words", " padded   spacing  here ", "the the the the",
+      "buy now buy now buy now buy now", "a b a b a b a b c", "b1 b2 c1 c2 b1 b2 d1 d2 c1 c2 e",
+      "the cat of the hat in a box to the", "the quick brown fox jumps over the lazy dog",
+      "ä 日本 ä 日本 ä", "spam spam spam spam spam spam ham", "der und die der und")
+    val profiles = Seq("en" -> Seq("the", "a", "cat"), "de" -> Seq("der", "und"))
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val out = Text.curationGates(docs, "doc_id", "text", profiles, 0.35,
+      carryCols = Seq("text", "doc_id"))
+    assert(out.schema.map(f => (f.name, f.dataType.simpleString, f.nullable)) == Seq(
+      ("doc_id", "bigint", false), ("text", "string", true), ("doc_id", "bigint", false),
+      ("pred_lang", "string", true), ("n_tokens", "bigint", true),
+      ("quality_score", "double", true), ("quality_ok", "boolean", true),
+      ("rep_flagged", "bigint", true)))
+    def grams(t: Seq[String], k: Int) = t.sliding(k).map(_.mkString(" ")).toSeq
+    def counts(g: Seq[String]) = g.groupBy(identity).values.map(_.size.toLong)
+    val expected = texts.zipWithIndex.map { case (text, i) =>
+      val t = text.dropWhile(_ == ' ').reverse.dropWhile(_ == ' ').reverse.split(" ", -1).toSeq
+      val n = t.size.toDouble
+      val q = t.distinct.size / n * (1.0 - t.count(Text.qualityStops.contains) / n)
+      val lang = profiles.map { case (l, p) => (-t.count(p.contains), l) }
+        .filter(_._1 < 0).minOption.map(_._2)
+      val rep = Option.when(t.size >= 3) {
+        val (bg, tg) = (grams(t, 2), grams(t, 3))
+        if (counts(bg).max.toDouble / bg.size > 0.2 ||
+            counts(tg).filter(_ >= 2).sum.toDouble / tg.size > 0.15) 1L else 0L
+      }
+      (i.toLong, text, i.toLong, lang, t.size.toLong, q, q >= 0.35, rep)
+    }
+    val got = out.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+      Option(r.getString(3)), r.getLong(4), r.getDouble(5), r.getBoolean(6),
+      Option(r.get(7)).map(_.asInstanceOf[Long]))).sortBy(_._1).toSeq
+    assert(got == expected)
+  }
 }

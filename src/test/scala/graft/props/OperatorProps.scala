@@ -422,6 +422,54 @@ object OperatorProps extends Properties("graft.ops") {
     out.toSeq
   }
 
+  /** The composed higher-order form that `functions.Shingles` replaces,
+    * kept only as this property's reference.
+    */
+  private def composedShingles(toks: org.apache.spark.sql.Column, k: Int) =
+    transform(
+      sequence(lit(0), size(toks) - k),
+      i => concat_ws(" ", (0 until k).map(j => get(toks, i + lit(j))): _*))
+
+  private val shingleToken: Gen[String] = Gen.frequency(
+    1 -> Gen.const(null), 1 -> Gen.const(""),
+    2 -> Gen.oneOf("ä", "日本", "naïve", "😀x"),
+    6 -> Gen.oneOf("a", "bb", "the", "fox", "lazy"))
+
+  property("Shingles == the composed transform/concat_ws form, interpreted and codegen") =
+    Prop.forAll(Gen.nonEmptyListOf(Gen.frequency(
+      1 -> Gen.const(null: Seq[String]),
+      9 -> Gen.choose(0, 12).flatMap(n => Gen.listOfN(n, shingleToken))))) { arrays =>
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.types._
+      // an RDD source, not a local Seq: a projection over a LocalRelation is
+      // folded at optimization time by the interpreted evaluator, which would
+      // leave the generated code untested
+      val schema = StructType(Seq(
+        StructField("id", IntegerType), StructField("toks", ArrayType(StringType))))
+      val rows = arrays.zipWithIndex.map { case (a, i) => Row(i, a) }
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+      val cols = (1 to 4).flatMap(k => Seq(
+        graft.functions.Shingles(col("toks"), k).as(s"n$k"),
+        composedShingles(col("toks"), k).as(s"c$k")))
+      val modes = Seq("NO_CODEGEN" -> "false", "CODEGEN_ONLY" -> "true")
+      Prop.all(modes.map { case (mode, wholeStage) =>
+        spark.conf.set("spark.sql.codegen.factoryMode", mode)
+        spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+        try {
+          val out = df.select(col("id") +: cols: _*)
+          val fields = out.schema.fields.drop(1).grouped(2)
+            .forall { case Array(n, c) => n.dataType == c.dataType && n.nullable == c.nullable }
+          val got = out.collect().sortBy(_.getInt(0))
+          val same = got.forall(r => (1 to 4).forall(k =>
+            r.getAs[Seq[String]](s"n$k") == r.getAs[Seq[String]](s"c$k")))
+          Prop(fields && same) :| s"$mode: ${got.mkString("; ")}"
+        } finally {
+          spark.conf.unset("spark.sql.codegen.factoryMode")
+          spark.conf.unset("spark.sql.codegen.wholeStage")
+        }
+      }: _*)
+    }
+
   property("containment dominates Jaccard and stays in (0, 1] on random corpora") =
     Prop.forAll(
       Gen.listOfN(6, Gen.choose(4, 9).flatMap(n =>

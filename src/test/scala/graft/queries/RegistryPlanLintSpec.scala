@@ -23,6 +23,10 @@ import org.apache.spark.sql.execution.SparkPlan
   * - No window aggregate over a [moving row, UNBOUNDED FOLLOWING] frame:
   *   Spark re-aggregates the partition tail for every row (quadratic).
   *
+  * - No higher-order lambda re-derives its input: Spark runs no
+  *   common-subexpression elimination inside a lambda, so a computed
+  *   array or string named in its body is re-evaluated per element.
+  *
   * Building a plan is cheap, so ONE sweep (AQE off, for a plain statically
   * planned tree) serves every test; a new query with a forgotten
   * broadcast hint fails here before it ever reaches the bench. (Queries
@@ -95,7 +99,39 @@ class RegistryPlanLintSpec extends SparkSpec {
       rawFloatAggs: Map[String, Seq[String]],
       nondet: Map[String, Seq[String]],
       slidingToEnd: Map[String, Seq[String]],
+      rederives: Map[String, Seq[String]],
       failures: Seq[String])
+
+  /** Subtrees of a higher-order lambda's body that re-derive a value per
+    * element: each MAXIMAL subtree with no lambda variable that is not a
+    * column read (an Attribute, BoundReference or Literal, or an
+    * ExtractValue of those) yet contains an array-, map-, binary- or
+    * string-typed node. Spark evaluates the lambda body once per element
+    * with no common-subexpression elimination, so such a subtree — say
+    * `split(trim(text), ' ', -1)` inside a shingle lambda — runs once per
+    * element instead of once per row. Project it into a column first and
+    * let the lambda read the attribute.
+    */
+  private def lambdaRederives(plans: Seq[SparkPlan]): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, Expression, ExtractValue, LambdaFunction, Literal, NamedLambdaVariable}
+    import org.apache.spark.sql.types.{ArrayType, BinaryType, MapType, StringType}
+    def isRead(e: Expression): Boolean = e match {
+      case _: Attribute | _: BoundReference | _: Literal => true
+      case x: ExtractValue => x.children.forall(isRead)
+      case _ => false
+    }
+    def heavy(e: Expression): Boolean = e.exists(_.dataType match {
+      case _: ArrayType | _: MapType | BinaryType | _: StringType => true
+      case _ => false
+    })
+    def offenders(e: Expression): Seq[Expression] =
+      if (e.exists(_.isInstanceOf[NamedLambdaVariable])) e.children.flatMap(offenders)
+      else if (!isRead(e) && heavy(e)) Seq(e)
+      else Nil
+    plans.flatMap(_.flatMap(_.expressions))
+      .flatMap(_.collect { case l: LambdaFunction => l.function })
+      .flatMap(offenders).map(_.sql.take(160)).distinct
+  }
 
   /** Window aggregates whose frame runs from a moving lower bound to
     * UNBOUNDED FOLLOWING. Spark evaluates that shape in
@@ -201,17 +237,18 @@ class RegistryPlanLintSpec extends SparkSpec {
             try {
               val qe = build().queryExecution
               val plans = expandedPlans(qe.executedPlan)
-              Some((name, signature(plans),
-                rawFloatAggs(qe.analyzed), nondetExprs(qe.analyzed), slidingToEnd(plans)))
+              Some((name, signature(plans), rawFloatAggs(qe.analyzed),
+                nondetExprs(qe.analyzed), slidingToEnd(plans), lambdaRederives(plans)))
             } catch { case e: Throwable => failures += s"$name: ${e.getMessage}"; None }
           graft.ops.Caches.releaseAll()
           out
       }
       Sweep(
         rows.map(r => r._1 -> r._2).toMap,
-        rows.collect { case (n, _, fa, _, _) if fa.nonEmpty => n -> fa }.toMap,
-        rows.collect { case (n, _, _, nd, _) if nd.nonEmpty => n -> nd }.toMap,
-        rows.collect { case (n, _, _, _, sf) if sf.nonEmpty => n -> sf }.toMap,
+        rows.collect { case (n, _, fa, _, _, _) if fa.nonEmpty => n -> fa }.toMap,
+        rows.collect { case (n, _, _, nd, _, _) if nd.nonEmpty => n -> nd }.toMap,
+        rows.collect { case (n, _, _, _, sf, _) if sf.nonEmpty => n -> sf }.toMap,
+        rows.collect { case (n, _, _, _, _, rd) if rd.nonEmpty => n -> rd }.toMap,
         failures.toList)
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
@@ -271,6 +308,32 @@ class RegistryPlanLintSpec extends SparkSpec {
       "window aggregate over a [moving row, UNBOUNDED FOLLOWING] frame re-aggregates the " +
         "partition tail for every row (O(n²) per partition) — read the next non-NULL " +
         s"value with lead(…, ignoreNulls = true) instead:\n${bad.mkString("\n")}")
+  }
+
+  private val rederiveHint =
+    "Spark runs no common-subexpression elimination inside a lambda, so the subtree " +
+      "is evaluated once per element — project it into a column (or use a native " +
+      "kernel such as functions.Shingles) and let the lambda read the attribute:\n"
+
+  test("no higher-order lambda re-derives a computed array or string per element") {
+    val bad = sweep.rederives.toSeq.sortBy(_._1)
+      .map { case (n, es) => s"$n: ${es.mkString("; ")}" }
+    assert(bad.isEmpty, rederiveHint + bad.mkString("\n"))
+  }
+
+  test("Text.curationGates: no higher-order lambda re-derives a computed array or string") {
+    // the stream-ingest gates are no registered query, so they are planned
+    // here, outside the sweep (no golden signature line); the profiles'
+    // contents do not change the plan's shape
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val gates = graft.ops.Text.curationGates(docs, "doc_id", "text",
+        Seq("en" -> Seq("the", "and"), "de" -> Seq("der", "und")), 0.35,
+        carryCols = Seq("text"))
+      val bad = lambdaRederives(expandedPlans(gates.queryExecution.executedPlan))
+      assert(bad.isEmpty, rederiveHint + bad.mkString("\n"))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
   /** Queries whose plans CONTAIN an unpartitioned WindowExec, each one
