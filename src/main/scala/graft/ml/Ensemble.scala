@@ -1,5 +1,6 @@
 package graft.ml
 
+import org.apache.spark.ml.GraftForest
 import org.apache.spark.ml.classification.{GBTClassificationModel, GBTClassifier, OneVsRest, RandomForestClassifier}
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.linalg.Vector
@@ -14,6 +15,14 @@ import scala.util.Random
   * (`/root/reference/generate_submission.py:47-130`, draws `:89-99,111-121`,
   * vote `:493-502`). LightGBM is unavailable offline; MLlib's
   * RandomForestClassifier is the native-multiclass stand-in (SURVEY §7.3).
+  *
+  * The RF flavor validates the training frame once: `GraftForest.prepare`
+  * counts the classes and builds one `RDD[Instance]` through MLlib's label,
+  * weight and vector checks, and every member fits on it with
+  * `GraftForest.fit`, which calls MLlib's forest trainer as
+  * `RandomForestClassifier.fit` does — so a member's trees equal `fit`'s,
+  * without each member re-planning, re-validating and re-counting its
+  * classes. A bad row raises MLlib's named check error.
   *
   * Each fitted member is a `Vector => Int` predictor that reproduces
   * MLlib's own prediction rule, and the test frame is scored in one
@@ -55,21 +64,19 @@ object Ensemble {
       nModels: Int,
       outCol: String,
       weightCol: Option[String] = None): DataFrame =
-    fitScoreVote(train, test, featureCols, nModels, outCol,
-      (m, trainVec) => {
-        val est = new RandomForestClassifier()
-          .setFeaturesCol("__features")
-          .setLabelCol(labelCol)
+    fitScoreVote(train, test, featureCols, nModels, outCol, trainVec => {
+      val training = GraftForest.prepare(trainVec, labelCol, "__features", weightCol)
+      m => {
+        val model = GraftForest.fit(training, new RandomForestClassifier()
           .setNumTrees(m.numTrees)
           .setMaxDepth(m.maxDepth)
           .setMinInstancesPerNode(m.minInstances)
-          .setSeed(m.seed)
-        weightCol.foreach(est.setWeightCol)
-        val model = est.fit(trainVec)
+          .setSeed(m.seed))
         // MLlib predicts the argmax of the probability vector, not of the raw
         // one, when a probability column is configured (its default)
         v => model.predictProbability(v).argmax
-      })
+      }
+    })
 
   /** Boosted-trees flavor of [[fitPredictVote]] — the closest offline MLlib
     * rendering of the reference's LightGBM boosters: each member is a
@@ -89,7 +96,7 @@ object Ensemble {
       outCol: String,
       weightCol: Option[String] = None): DataFrame =
     fitScoreVote(train, test, featureCols, nModels, outCol,
-      (m, trainVec) => {
+      trainVec => m => {
         val gbt = new GBTClassifier()
           .setFeaturesCol("__features")
           .setLabelCol(labelCol)
@@ -115,12 +122,13 @@ object Ensemble {
       })
 
   /** Shared ensemble skeleton: assemble features, cache the training frame,
-    * fit the seeded members as CONCURRENT Spark jobs (each fit is
-    * independently seeded, so per-model results are scheduling-invariant —
-    * the sequential version serialized nModels × MLlib job latency), then
-    * score and vote in one projection. The members travel in the UDF's
-    * closure, which Spark ships with each stage's task binary. The cache is
-    * released even when a fit throws.
+    * hand it to `fitMember` once (a flavor prepares its training set there,
+    * before any member), fit the seeded members as CONCURRENT Spark jobs
+    * (each fit is independently seeded, so per-model results are
+    * scheduling-invariant — the sequential version serialized nModels ×
+    * MLlib job latency), then score and vote in one projection. The members
+    * travel in the UDF's closure, which Spark ships with each stage's task
+    * binary. The cache is released even when a fit throws.
     */
   private def fitScoreVote(
       train: DataFrame,
@@ -128,14 +136,15 @@ object Ensemble {
       featureCols: Seq[String],
       nModels: Int,
       outCol: String,
-      fitMember: (Member, DataFrame) => (Vector => Int)): DataFrame = {
+      fitMember: DataFrame => Member => (Vector => Int)): DataFrame = {
     val asm = new VectorAssembler()
       .setInputCols(featureCols.toArray)
       .setOutputCol("__features")
     val trainVec = asm.transform(train).cache()
     try {
       trainVec.count() // materialize once before the concurrent fits
-      val members = parallelFits(drawMembers(nModels).map(m => () => fitMember(m, trainVec)))
+      val fit = fitMember(trainVec)
+      val members = parallelFits(drawMembers(nModels).map(m => () => fit(m)))
       // boxed, so `outCol` stays the nullable int its callers read
       val vote = udf((v: Vector) => Int.box(mode(members.map(_(v)))))
       asm.transform(test).withColumn(outCol, vote(col("__features"))).drop("__features")
