@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Scale-probe main for operators whose regime testdata can't reach —
@@ -73,10 +72,11 @@ object ProbeScale {
     ((System.nanoTime() - t0) / 1e9, s"checksum=${r(0)}")
   }
 
-  /** The sim_margin_mine pipeline over synthetic 16-dim vectors in 10
-    * hash-assigned blocks, `perSide` vectors per side per block. Claim
-    * under test: cost tracks pairs-per-block (the block key is the knob
-    * that bounds candidates), and mined pairs stay a matching.
+  /** The registered sim_margin_mine builder ([[graft.queries.SimilarityQ.marginMine]])
+    * over synthetic 16-dim vectors in 10 hash-assigned blocks, `perSide`
+    * vectors per side per block. Claim under test: cost tracks
+    * pairs-per-block (the block key is the knob that bounds candidates),
+    * and mined pairs stay a matching.
     */
   private def mine(spark: SparkSession, perSide: Int): (Double, String) = {
     val e = spark.range(2L * perSide * 10)
@@ -89,32 +89,7 @@ object ProbeScale {
       .localCheckpoint(true)
       .withColumn("n2", graft.ops.Vectors.norm2Exact(col("embedding")))
     val t0 = System.nanoTime()
-    val a = e.filter(pmod(col("vec_id"), lit(2)) === 0)
-      .select(col("label"), col("vec_id").as("src_id"),
-        col("embedding").as("ae"), col("n2").as("an2"))
-    val b = e.filter(pmod(col("vec_id"), lit(2)) === 1)
-      .select(col("label"), col("vec_id").as("tgt_id"),
-        col("embedding").as("be"), col("n2").as("bn2"))
-    val p = graft.ops.Caches.trackPersist(
-      a.join(b, "label")
-        .withColumn("cos", graft.ops.Vectors.cosineFrom(
-          graft.ops.Vectors.dotExact(col("ae"), col("be")), col("an2"), col("bn2")))
-        .select("label", "src_id", "tgt_id", "cos"))
-    def knn(idCol: String, otherCol: String, out: String) =
-      p.withColumn("r", row_number().over(
-          Window.partitionBy(idCol).orderBy(col("cos").desc, col(otherCol))))
-        .filter(col("r") <= 4)
-        .groupBy(idCol).agg(graft.ops.Exact.dsumTrunc9(col("cos")).as(out))
-    val m = graft.ops.Caches.trackPersist(
-      p.join(knn("src_id", "tgt_id", "ka"), "src_id")
-        .join(knn("tgt_id", "src_id", "kb"), "tgt_id")
-        .withColumn("margin", col("cos") / ((col("ka") + col("kb")) / lit(8.0))))
-    def best(idCol: String, otherCol: String) =
-      m.withColumn("rb", row_number().over(
-          Window.partitionBy(idCol).orderBy(col("margin").desc, col(otherCol))))
-        .filter(col("rb") === 1)
-        .select("src_id", "tgt_id")
-    val mined = best("src_id", "tgt_id").join(best("tgt_id", "src_id"), Seq("src_id", "tgt_id")).count()
+    val mined = graft.queries.SimilarityQ.marginMine(e).count()
     graft.ops.Caches.releaseAll()
     e.unpersist(true)
     ((System.nanoTime() - t0) / 1e9,

@@ -154,30 +154,12 @@ object Dedup {
     * two little-endian 64-bit halves (h1 = digest bytes 8..15, h2 = bytes
     * 0..7 — DuckDB's md5_number_lower/upper), permutation j = h1 + j·h2
     * (mod 2⁶⁴), minimum per j rendered as a zero-padded 20-digit unsigned
-    * decimal. One row per id with columns mh_0 … mh_{n-1}. Exploded-rows
-    * formulation (shuffles on id); prefer [[minhashSignaturesLocal]] which
-    * computes the same minima array-locally — this form exists as the
-    * oracle-shaped cross-check. DECIMAL(38,0) arithmetic keeps the mod-2⁶⁴
-    * values exact (h1 + 7·h2 < 2⁶⁷ ≪ 10³⁸).
-    */
-  def minhashSignatures(sh: DataFrame, idCol: String, nHashes: Int): DataFrame = {
-    def le64hex(off: Int) = {
-      val pairs = (7 to 0 by -1).map(i => s"substr(__md, ${off + 2 * i + 1}, 2)")
-      s"CAST(conv(concat(${pairs.mkString(", ")}), 16, 10) AS DECIMAL(38,0))"
-    }
-    val two64 = "CAST('18446744073709551616' AS DECIMAL(38,0))"
-    val withH = sh.withColumn("__md", md5(col("shingle")))
-      .withColumn("__h1", expr(le64hex(16)))
-      .withColumn("__h2", expr(le64hex(0)))
-    def mh(j: Int) =
-      lpad(min(expr(s"(__h1 + $j * __h2) % $two64")).cast("string"), 20, "0").as(s"mh_$j")
-    withH.groupBy(col(idCol)).agg(mh(0), (1 until nHashes).map(mh): _*)
-  }
-
-  /** Same signature, computed in one array-local pass per document by the
-    * native [[graft.functions.MinHashSig]] expression — no explode, no
-    * shuffle; docs with fewer than k tokens drop out (as in the exploded
-    * form where they contribute no rows).
+    * decimal. One row per id with columns mh_0 … mh_{n-1}, computed in one
+    * array-local pass per document by the native
+    * [[graft.functions.MinHashSig]] expression — no explode, no shuffle;
+    * docs with fewer than k tokens have no shingles and drop out.
+    * `DedupTextSpec` keeps the exploded-rows formulation as its reference
+    * and tests the two equal.
     */
   def minhashSignaturesLocal(
       df: DataFrame,

@@ -27,10 +27,6 @@ object Sources {
   def csvHeaderless(spark: SparkSession, schema: StructType, path: String): DataFrame =
     spark.read.schema(schema).option("header", "false").csv(path)
 
-  /** S2: CSV with header; schema still explicit (never inferred). */
-  def csvWithHeader(spark: SparkSession, schema: StructType, path: String): DataFrame =
-    spark.read.schema(schema).option("header", "true").csv(path)
-
   /** S3: derive key columns from the source file name — replaces the
     * reference's `os.listdir` loop + `fn[:3]`/`fn[3:6]` slicing
     * (ref `load_data.py:85-87`). `groups` maps new column name → 1-based

@@ -145,6 +145,31 @@ object Stats {
           min(col("__frac"))).as("q_value"))
   }
 
+  /** Oracle twin of [[exactQuantiles]] keyed on one column, over a
+    * relation `src(key, value)` of non-NULL values: row_number ranks per
+    * key, then the linear interpolation at `1 + (n − 1)·q`, ending in the
+    * CTE `quant(key, q, q_value)`.
+    */
+  def exactQuantilesSql(src: String, key: String, value: String, qs: Seq[Double]): String = {
+    val lo = "min(CASE WHEN rn = CAST(floor(pos) AS BIGINT) THEN value END)"
+    s"""r AS (SELECT $key, $value AS value,
+               row_number() OVER (PARTITION BY $key ORDER BY $value) AS rn,
+               count(*) OVER (PARTITION BY $key) AS n
+             FROM $src),
+        qs AS (SELECT CAST(q AS DOUBLE) AS q
+               FROM (VALUES ${qs.map(q => s"($q)").mkString(", ")}) t(q)),
+        p AS (SELECT r.$key, qs.q, r.value, r.rn,
+                CAST(1.0 AS DOUBLE) + CAST(n - 1 AS DOUBLE) * qs.q AS pos
+              FROM r CROSS JOIN qs),
+        quant AS (SELECT $key, q,
+                    $lo
+                    + (min(CASE WHEN rn = CAST(ceil(pos) AS BIGINT) THEN value END) - $lo)
+                      * min(pos - floor(pos)) AS q_value
+                  FROM p WHERE rn = CAST(floor(pos) AS BIGINT)
+                     OR rn = CAST(ceil(pos) AS BIGINT)
+                  GROUP BY 1, 2)"""
+  }
+
   /** A15: 0-based argmax over an array column (ref
     * `generate_submission.py:487,491` `.argmax(axis=1)`). First occurrence
     * wins on ties, matching numpy.
@@ -360,6 +385,32 @@ object Stats {
             .cast("double") /
             (col("n_pos").cast(dec) * col("n_neg").cast(dec) * lit(2L)).cast("double"))
           .as("auc"): _*)
+  }
+
+  /** Oracle twin of [[binaryAucBy]] over a relation `scored(keys…, y, s)`
+    * whose score `s` is already integral (quantized where the operator's
+    * `scoreScale` would): HUGEINT rank sums, ending in the CTE
+    * `aucs(keys…, n_pos, n_neg, auc)`.
+    */
+  def binaryAucSql(scored: String, keys: Seq[String] = Nil): String = {
+    val k = keys.map(_ + ", ").mkString
+    val by = if (keys.isEmpty) "" else s" GROUP BY ${(1 to keys.size).mkString(", ")}"
+    val part = if (keys.isEmpty) "" else s"PARTITION BY ${keys.mkString(", ")} "
+    s"""ac AS (SELECT ${k}s, CAST(count(*) AS BIGINT) AS cnt, CAST(sum(y) AS BIGINT) AS pos
+               FROM $scored GROUP BY ${(1 to keys.size + 1).mkString(", ")}),
+        ar AS (SELECT *, coalesce(sum(cnt) OVER (${part}ORDER BY s
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), CAST(0 AS BIGINT)) AS below
+               FROM ac),
+        aa AS (SELECT ${k}sum(CAST(pos AS HUGEINT) * (2 * CAST(below AS HUGEINT) + cnt + 1)) AS r2,
+                 CAST(sum(pos) AS BIGINT) AS n_pos,
+                 CAST(sum(cnt - pos) AS BIGINT) AS n_neg
+               FROM ar$by),
+        aucs AS (SELECT ${k}n_pos, n_neg,
+                  CASE WHEN n_pos > 0 AND n_neg > 0
+                       THEN CAST(r2 - CAST(n_pos AS HUGEINT) * (n_pos + 1) AS DOUBLE)
+                            / CAST(CAST(n_pos AS HUGEINT) * n_neg * 2 AS DOUBLE)
+                       END AS auc
+                FROM aa)"""
   }
 
   /** Macro-averaged one-vs-rest AUC: [[binaryAucBy]] per class plus one

@@ -138,6 +138,30 @@ object Text {
       .agg(count(lit(1)).as("score"))
   }
 
+  /** Oracle twin of [[languageScoresWith]] serving the [[languageProfiles]]
+    * fit of `documents` (`lang` labels, `topK` tokens each), refitted
+    * inline: CTE chain ending in `sc(doc_id, profile_lang, score)`.
+    */
+  def languageScoresSql(topK: Int): String =
+    s"""tok AS (SELECT doc_id, lang, unnest(string_split(trim(text), ' ')) AS token FROM documents),
+        cnts AS (SELECT lang, token, count(*) AS cnt FROM tok GROUP BY 1, 2),
+        prof AS (SELECT lang AS profile_lang, token FROM
+                  (SELECT lang, token,
+                     row_number() OVER (PARTITION BY lang ORDER BY cnt DESC, token) AS rnk
+                   FROM cnts) WHERE rnk <= $topK),
+        sc AS (SELECT t.doc_id, p.profile_lang, CAST(count(*) AS BIGINT) AS score
+               FROM tok t JOIN prof p ON t.token = p.token GROUP BY 1, 2)"""
+
+  /** Oracle twin of [[languageIdWith]]: [[languageScoresSql]] plus
+    * `lid(doc_id, pred_lang, score)`, the top profile per doc (score desc,
+    * profile_lang asc).
+    */
+  def languageIdSql(topK: Int): String =
+    s"""${languageScoresSql(topK)},
+        lid AS (SELECT doc_id, profile_lang AS pred_lang, score FROM
+                 (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, profile_lang) AS rn
+                  FROM sc) WHERE rn = 1)"""
+
   /** [[languageId]] routed against a PRE-FITTED collected profile table. */
   def languageIdWith(
       docs: DataFrame,

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Embedding-vector math over ArrayType(FloatType) columns, array-local
   * (no explode in the Spark plan — one codegen'd expression per row).
@@ -13,31 +12,15 @@ import org.apache.spark.sql.types.DecimalType
   * (24+24 ≤ 53 mantissa bits).
   */
 object Vectors {
-  // Precision 30, NOT 38: decimal addition at precision 38 hits Spark's cap
-  // and silently drops the scale (re-rounding every fold step); at 30 the
-  // fold stays exact. Scale 9, NOT 12: Spark quantizes the double's
-  // shortest decimal repr while DuckDB quantizes the exact binary value —
-  // at scale 12 a ~1e-2 product whose repr terminates in "...5" exactly at
-  // the quantization digit rounds differently (observed once in 380k
-  // products at sf0.1). Scale 9 keeps the rounding position 4+ digits
-  // inside the repr, where both engines see the same neighborhood.
-  private val Acc = DecimalType(30, 9)
 
   /** Exact dot product of two float-array columns, as double — the native
     * codegen expression ([[graft.functions.ExactDot]]); bit-identical to the
-    * zip_with/aggregate decimal fold it replaces (kept below for reference
-    * and tested equal), but one tight loop inside whole-stage codegen
-    * instead of an interpreted per-element lambda.
+    * zip_with/aggregate decimal fold it replaces (`ExactDotSpec` keeps that
+    * fold as its reference and tests them equal), but one tight loop inside
+    * whole-stage codegen instead of an interpreted per-element lambda.
     */
   def dotExact(a: Column, b: Column): Column =
     graft.functions.ExactDot(a, b)
-
-  /** The composed-builtin formulation dotExact is proven against. */
-  def dotExactComposed(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => (x.cast("double") * y.cast("double")).cast(Acc)),
-      lit(0).cast(Acc),
-      (acc, p) => (acc + p).cast(Acc)).cast("double")
 
   /** Exact squared L2 norm of a float-array column, as double. */
   def norm2Exact(a: Column): Column = dotExact(a, a)

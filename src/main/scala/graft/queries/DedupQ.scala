@@ -11,12 +11,12 @@ import graft.ops._
 object DedupQ {
   import Q._
 
-  /** Oracle CTE: distinct (doc_id, shingle) 3-word shingles, from an
-    * arbitrary documents-shaped relation (the d15b sampled audit swaps in
-    * a hash-sampled CTE).
+  /** Oracle CTE `name`: distinct (doc_id, shingle) 3-word shingles, from
+    * an arbitrary documents-shaped relation (the d15b sampled audit swaps
+    * in a hash-sampled CTE).
     */
-  private def shSqlFrom(rel: String) =
-    s"""sh AS (SELECT DISTINCT doc_id, shingle FROM (
+  private def shSqlFrom(rel: String, name: String = "sh") =
+    s"""$name AS (SELECT DISTINCT doc_id, shingle FROM (
          SELECT doc_id, toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS shingle
          FROM (SELECT doc_id, string_split(trim(text), ' ') AS toks FROM $rel),
               unnest(generate_series(1, len(toks) - 2)) AS u(i)))"""
@@ -38,13 +38,23 @@ object DedupQ {
     * are per-doc distinct, so `count(*)` per shingle IS its doc frequency.
     */
   private val shCappedSql =
-    s"""sh0 AS (SELECT DISTINCT doc_id, shingle FROM (
-          SELECT doc_id, toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS shingle
-          FROM (SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
-               unnest(generate_series(1, len(toks) - 2)) AS u(i))),
+    s"""${shSqlFrom("documents", "sh0")},
         shhot AS (SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) > $shCapDf),
         sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 WHERE NOT EXISTS
                  (SELECT 1 FROM shhot WHERE shhot.shingle = sh0.shingle))"""
+
+  /** Oracle CTEs over an edge list `e(src, dst)`: the RECURSIVE
+    * transitive closure and every document labelled with the minimum
+    * reachable doc_id (own id for singletons) in `lab(doc_id, cluster_id)`
+    * — the oracle twin of [[graft.ops.Dedup.connectedComponents]].
+    */
+  private val componentSql =
+    """reach AS (SELECT src AS id, dst AS r FROM e
+                 UNION
+                 SELECT reach.id, e.dst FROM reach JOIN e ON e.src = reach.r),
+       comp AS (SELECT id, least(id, min(r)) AS comp FROM reach GROUP BY id),
+       lab AS (SELECT d.doc_id, coalesce(c.comp, d.doc_id) AS cluster_id
+               FROM documents d LEFT JOIN comp c ON c.id = d.doc_id)"""
 
   /** Oracle CTEs: 8 minhashes per doc via double hashing — one md5 per
     * shingle, halves h1/h2 from md5_number_lower/upper (little-endian
@@ -63,32 +73,39 @@ object DedupQ {
         sig AS (SELECT doc_id, $mins FROM shh GROUP BY 1)"""
   }
 
+  /** Oracle expression: how many of the 8 minhashes of `sig sa` and
+    * `sig sb` agree — `n_equal` of [[graft.ops.Dedup.lshCandidates]].
+    */
+  private val agreeSql =
+    (0 until 8).map(j => s"(CASE WHEN sa.mh_$j = sb.mh_$j THEN 1 ELSE 0 END)").mkString(" + ")
+
+  /** Oracle CTEs (on top of [[sigSql]]): the 4-band LSH buckets and the
+    * distinct candidate pairs `cand(a_id, b_id)` sharing a band — the twin
+    * of [[graft.ops.Dedup.lshCandidates]] before its agreement count.
+    */
+  private def lshCandSql(cand: String) = {
+    val bands = (0 until 4).map(b =>
+      s"SELECT doc_id, $b AS band_idx, md5(mh_${2 * b} || mh_${2 * b + 1}) AS band_hash FROM sig")
+      .mkString(" UNION ALL ")
+    s"""bands AS ($bands),
+        $cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
+                 FROM bands a JOIN bands b ON a.band_idx = b.band_idx
+                   AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id)"""
+  }
+
   /** Oracle CTEs (on top of [[shSql]] + [[sigSql]]): d3's banded LSH
     * candidates filtered to ≥ 6/8 signature agreement, their recursive
     * transitive closure, and every doc labelled with the minimum reachable
     * doc_id — the oracle twin of the d14 LSH-fed cluster resolution.
     */
-  private val lshCcSql = {
-    val bands = (0 until 4).map(b =>
-      s"SELECT doc_id, $b AS band_idx, md5(mh_${2 * b} || mh_${2 * b + 1}) AS band_hash FROM sig")
-      .mkString(" UNION ALL ")
-    val agree = (0 until 8).map(j => s"(CASE WHEN sa.mh_$j = sb.mh_$j THEN 1 ELSE 0 END)").mkString(" + ")
-    s"""bands AS ($bands),
-        cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-                 FROM bands a JOIN bands b ON a.band_idx = b.band_idx
-                   AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
+  private val lshCcSql =
+    s"""${lshCandSql("cand")},
         jp AS (SELECT a_id, b_id FROM cand
                JOIN sig sa ON sa.doc_id = a_id JOIN sig sb ON sb.doc_id = b_id
-               WHERE ($agree) >= 6),
+               WHERE ($agreeSql) >= 6),
         e AS (SELECT a_id AS src, b_id AS dst FROM jp
               UNION SELECT b_id, a_id FROM jp),
-        reach AS (SELECT src AS id, dst AS r FROM e
-                  UNION
-                  SELECT reach.id, e.dst FROM reach JOIN e ON e.src = reach.r),
-        comp AS (SELECT id, least(id, min(r)) AS comp FROM reach GROUP BY id),
-        lab AS (SELECT d.doc_id, coalesce(c.comp, d.doc_id) AS cluster_id
-                FROM documents d LEFT JOIN comp c ON c.id = d.doc_id)"""
-  }
+        $componentSql"""
 
   /** The d14 Spark-side composition, shared with the leakage-free split:
     * banded LSH candidates at ≥ 6/8 agreement → connected components →
@@ -118,29 +135,54 @@ object DedupQ {
       .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("cluster_id"))
   }
 
-  /** Oracle CTEs (on top of [[shSql]]): Jaccard ≥ 0.5 pairs (d2's
-    * relation, ids only), their symmetric edge list, the RECURSIVE
-    * transitive closure, and every document labelled with the minimum
-    * reachable doc_id (own id for singletons) — the oracle twin of
-    * [[graft.ops.Dedup.connectedComponents]].
+  /** Oracle CTEs (on top of an `sh` shingle CTE): `sz(doc_id, n)` set
+    * sizes and `pp(a_id, b_id, shared)` the shared-shingle count of every
+    * co-shingled pair — the inverted-index join inside
+    * [[graft.ops.Dedup.jaccardPairs]].
     */
-  private val ccSql =
+  private val pairCountSql =
     """sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY 1),
        pp AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, CAST(count(*) AS BIGINT) AS shared
               FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              GROUP BY 1, 2),
-       jp AS (SELECT a_id, b_id FROM pp
+              GROUP BY 1, 2)"""
+
+  /** Oracle CTEs: [[pairCountSql]] plus `rel` — d2's Jaccard ≥ 0.5 pair
+    * relation, ids only, projected as `cols` (`MATERIALIZED` when `mat`).
+    */
+  private def jaccardPairSql(
+      rel: String, cols: String = "a_id, b_id", mat: Boolean = false) =
+    s"""$pairCountSql,
+       $rel AS ${if (mat) "MATERIALIZED " else ""}(SELECT $cols FROM pp
               JOIN sz sa ON sa.doc_id = a_id JOIN sz sb ON sb.doc_id = b_id
               WHERE CAST(shared AS DOUBLE) / CAST(sa.n + sb.n - shared AS DOUBLE)
-                    >= CAST(0.5 AS DOUBLE)),
-       e AS (SELECT a_id AS src, b_id AS dst FROM jp
-             UNION SELECT b_id, a_id FROM jp),
-       reach AS (SELECT src AS id, dst AS r FROM e
-                 UNION
-                 SELECT reach.id, e.dst FROM reach JOIN e ON e.src = reach.r),
-       comp AS (SELECT id, least(id, min(r)) AS comp FROM reach GROUP BY id),
-       lab AS (SELECT d.doc_id, coalesce(c.comp, d.doc_id) AS cluster_id
-               FROM documents d LEFT JOIN comp c ON c.id = d.doc_id)"""
+                    >= CAST(0.5 AS DOUBLE))"""
+
+  /** Oracle CTEs: [[jaccardPairSql]] as `jp` plus its symmetric edge list
+    * `e(src, dst)` — the pair graph d7/d8 and g1/g4/g5 read. `union` is
+    * `UNION` or `UNION ALL` (`MATERIALIZED` when `mat`), each caller's form.
+    */
+  private def jaccardEdgeSql(union: String = "UNION", mat: Boolean = false) =
+    s"""${jaccardPairSql("jp")},
+       e AS ${if (mat) "MATERIALIZED " else ""}(SELECT a_id AS src, b_id AS dst FROM jp
+             $union SELECT b_id, a_id FROM jp)"""
+
+  /** Oracle CTEs (on top of an `sh` shingle CTE): [[componentSql]] over
+    * the [[jaccardEdgeSql]] pair graph — what the d7/d8 oracles read.
+    */
+  private val ccSql = s"${jaccardEdgeSql()},\n       $componentSql"
+
+  /** The d7/d8 cluster labels: the df-capped Jaccard ≥ 0.5 pairs →
+    * connected components → (doc_id, cluster_id), singletons labelling
+    * themselves. Oracle twin: [[ccSql]]'s `lab`.
+    */
+  private def dupClusters(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5, maxShingleDf = shCapDf)
+      .select("a_id", "b_id")
+    val comp = Dedup.connectedComponents(pairs, "a_id", "b_id")
+      .withColumnRenamed("id", "doc_id")
+    docs.join(comp, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("cluster_id"))
+  }
 
   /** Shared pipeline for d15/d15b: pair-level recall + candidate precision
     * of the banded ≥6/8 LSH gate against the exact Jaccard ≥ 0.5 truth,
@@ -173,27 +215,13 @@ object DedupQ {
     * CTE (e.g. the hash-mod sample) and `shRel` the relation the shingle
     * CTE reads — "" / "documents" for the full-corpus audit.
     */
-  private def lshPairRecallSql(docsCte: String, shRel: String): String = {
-    val bands = (0 until 4).map(b =>
-      s"SELECT doc_id, $b AS band_idx, md5(mh_${2 * b} || mh_${2 * b + 1}) AS band_hash FROM sig")
-      .mkString(" UNION ALL ")
-    val agree = (0 until 8).map(j => s"(CASE WHEN sa.mh_$j = sb.mh_$j THEN 1 ELSE 0 END)").mkString(" + ")
+  private def lshPairRecallSql(docsCte: String, shRel: String): String =
     s"""WITH $docsCte${shSqlFrom(shRel)}, $sigSql,
-        sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY 1),
-        pp AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, CAST(count(*) AS BIGINT) AS shared
-               FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-               GROUP BY 1, 2),
-        truth AS (SELECT a_id, b_id FROM pp
-                  JOIN sz sa ON sa.doc_id = a_id JOIN sz sb ON sb.doc_id = b_id
-                  WHERE CAST(shared AS DOUBLE) / CAST(sa.n + sb.n - shared AS DOUBLE)
-                        >= CAST(0.5 AS DOUBLE)),
-        bands AS ($bands),
-        cand0 AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-                  FROM bands a JOIN bands b ON a.band_idx = b.band_idx
-                    AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
+        ${jaccardPairSql("truth")},
+        ${lshCandSql("cand0")},
         foundq AS (SELECT a_id, b_id FROM cand0
                    JOIN sig sa ON sa.doc_id = a_id JOIN sig sb ON sb.doc_id = b_id
-                   WHERE ($agree) >= 6),
+                   WHERE ($agreeSql) >= 6),
         h AS (SELECT CAST(count(*) AS BIGINT) AS n_true,
                 CAST(sum(CASE WHEN f.a_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit
               FROM truth t LEFT JOIN foundq f
@@ -205,7 +233,6 @@ object DedupQ {
           CASE WHEN c.n_cand > 0
                THEN CAST(h.n_hit AS DOUBLE) / CAST(c.n_cand AS DOUBLE) END AS "precision"
         FROM h, c"""
-  }
 
   val defs: Seq[QDef] = Seq(
     QDef(
@@ -218,14 +245,10 @@ object DedupQ {
     QDef(
       "d2_jaccard_pairs",
       (s, d) => Dedup.jaccardPairs(t(s, d, "documents"), "doc_id", "text", 3, 0.5),
-      Some(s"""WITH $shSql,
-               sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY 1),
-               p AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, CAST(count(*) AS BIGINT) AS shared
-                     FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                     GROUP BY 1, 2)
+      Some(s"""WITH $shSql, $pairCountSql
                SELECT a_id, b_id, shared, sa.n AS na, sb.n AS nb,
                       CAST(shared AS DOUBLE) / CAST(sa.n + sb.n - shared AS DOUBLE) AS jaccard
-               FROM p JOIN sz sa ON sa.doc_id = a_id JOIN sz sb ON sb.doc_id = b_id
+               FROM pp JOIN sz sa ON sa.doc_id = a_id JOIN sz sb ON sb.doc_id = b_id
                WHERE CAST(shared AS DOUBLE) / CAST(sa.n + sb.n - shared AS DOUBLE)
                      >= CAST(0.5 AS DOUBLE)""")),
 
@@ -235,20 +258,10 @@ object DedupQ {
         val sig = Dedup.minhashSignaturesLocal(t(s, d, "documents"), "doc_id", "text", 3, 8)
         Dedup.lshCandidates(sig, "doc_id", 8, 4)
       },
-      Some {
-        val bands = (0 until 4).map(b =>
-          s"SELECT doc_id, $b AS band_idx, md5(mh_${2 * b} || mh_${2 * b + 1}) AS band_hash FROM sig")
-          .mkString(" UNION ALL ")
-        val agree = (0 until 8).map(j => s"(CASE WHEN sa.mh_$j = sb.mh_$j THEN 1 ELSE 0 END)").mkString(" + ")
-        s"""WITH $shSql, $sigSql,
-            bands AS ($bands),
-            cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-                     FROM bands a JOIN bands b ON a.band_idx = b.band_idx
-                       AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id)
-            SELECT a_id, b_id, CAST($agree AS BIGINT) AS n_equal,
-                   CAST($agree AS DOUBLE) / CAST(8.0 AS DOUBLE) AS est_jaccard
-            FROM cand JOIN sig sa ON sa.doc_id = a_id JOIN sig sb ON sb.doc_id = b_id"""
-      }),
+      Some(s"""WITH $shSql, $sigSql, ${lshCandSql("cand")}
+            SELECT a_id, b_id, CAST($agreeSql AS BIGINT) AS n_equal,
+                   CAST($agreeSql AS DOUBLE) / CAST(8.0 AS DOUBLE) AS est_jaccard
+            FROM cand JOIN sig sa ON sa.doc_id = a_id JOIN sig sb ON sb.doc_id = b_id""")),
 
     QDef(
       "d15_lsh_pair_recall",
@@ -314,16 +327,8 @@ object DedupQ {
       // boilerplate shingle) -> connected components (min-label + pointer
       // jumping) -> every doc labelled with its canonical cluster id (min
       // reachable doc_id; singletons label themselves) and the cluster size
-      (s, d) => {
-        val docs = t(s, d, "documents")
-        val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5, maxShingleDf = shCapDf)
-          .select("a_id", "b_id")
-        val comp = Dedup.connectedComponents(pairs, "a_id", "b_id")
-          .withColumnRenamed("id", "doc_id")
-        docs.join(comp, Seq("doc_id"), "left")
-          .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("cluster_id"))
-          .withColumn("cluster_size", count(lit(1)).over(Window.partitionBy("cluster_id")))
-      },
+      (s, d) => dupClusters(t(s, d, "documents"))
+        .withColumn("cluster_size", count(lit(1)).over(Window.partitionBy("cluster_id"))),
       Some(s"""WITH RECURSIVE $shCappedSql, $ccSql
                SELECT doc_id, cluster_id,
                  CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size
@@ -337,12 +342,7 @@ object DedupQ {
       // Pair relation df-capped like d7 — the shipped plan, not the baseline
       (s, d) => {
         val docs = t(s, d, "documents")
-        val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5, maxShingleDf = shCapDf)
-          .select("a_id", "b_id")
-        val comp = Dedup.connectedComponents(pairs, "a_id", "b_id")
-          .withColumnRenamed("id", "doc_id")
-        val lab = docs.join(comp, Seq("doc_id"), "left")
-          .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("cluster_id"))
+        val lab = dupClusters(docs)
         val qual = Text.qualityScore(docs, "doc_id", "text")
           .select("doc_id", "quality_score")
         val w = Window.partitionBy("cluster_id").orderBy(col("quality_score").desc, col("doc_id"))
@@ -752,17 +752,7 @@ object DedupQ {
                      JOIN dg ON dg.src = e.src
                 GROUP BY 1) c ON c.id = n0.id)"""
         }.mkString(",\n")
-        s"""WITH $shCappedSql,
-            sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY 1),
-            pp AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, CAST(count(*) AS BIGINT) AS shared
-                   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-            jp AS (SELECT a_id, b_id FROM pp
-                   JOIN sz sa ON sa.doc_id = a_id JOIN sz sb ON sb.doc_id = b_id
-                   WHERE CAST(shared AS DOUBLE) / CAST(sa.n + sb.n - shared AS DOUBLE)
-                         >= CAST(0.5 AS DOUBLE)),
-            e AS (SELECT a_id AS src, b_id AS dst FROM jp
-                  UNION SELECT b_id, a_id FROM jp),
+        s"""WITH $shCappedSql, ${jaccardEdgeSql()},
             dg AS (SELECT src, CAST(count(*) AS BIGINT) AS d FROM e GROUP BY 1),
             n0 AS (SELECT doc_id AS id FROM documents),
             r0 AS (SELECT id, CAST(1000000000000 AS BIGINT) AS r FROM n0),
@@ -786,15 +776,7 @@ object DedupQ {
             .select("a_id", "b_id"),
           "a_id", "b_id")
       },
-      Some(s"""WITH $shCappedSql,
-            sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY 1),
-            pp AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, CAST(count(*) AS BIGINT) AS shared
-                   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-            e0 AS (SELECT a_id AS ea, b_id AS eb FROM pp
-                   JOIN sz sa ON sa.doc_id = a_id JOIN sz sb ON sb.doc_id = b_id
-                   WHERE CAST(shared AS DOUBLE) / CAST(sa.n + sb.n - shared AS DOUBLE)
-                         >= CAST(0.5 AS DOUBLE)),
+      Some(s"""WITH $shCappedSql, ${jaccardPairSql("e0", "a_id AS ea, b_id AS eb")},
             deg AS (SELECT v, CAST(count(*) AS BIGINT) AS d FROM
                       (SELECT ea AS v FROM e0 UNION ALL SELECT eb FROM e0) GROUP BY 1),
             o AS (SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND ea < eb)
@@ -841,15 +823,7 @@ object DedupQ {
               e$i AS MATERIALIZED (SELECT e.ea, e.eb FROM e${i - 1} e
                       JOIN k${i - 1} a ON a.v = e.ea JOIN k${i - 1} b ON b.v = e.eb)"""
         }.mkString(",\n")
-        s"""WITH $shCappedSql,
-            sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY 1),
-            pp AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, CAST(count(*) AS BIGINT) AS shared
-                   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-            e0 AS MATERIALIZED (SELECT a_id AS ea, b_id AS eb FROM pp
-                   JOIN sz sa ON sa.doc_id = a_id JOIN sz sb ON sb.doc_id = b_id
-                   WHERE CAST(shared AS DOUBLE) / CAST(sa.n + sb.n - shared AS DOUBLE)
-                         >= CAST(0.5 AS DOUBLE)),
+        s"""WITH $shCappedSql, ${jaccardPairSql("e0", "a_id AS ea, b_id AS eb", mat = true)},
             $peel,
             dfin AS (SELECT v, CAST(count(*) AS BIGINT) AS d FROM
               (SELECT ea AS v FROM e8 UNION ALL SELECT eb FROM e8) GROUP BY 1)
@@ -889,17 +863,7 @@ object DedupQ {
                      JOIN dg ON dg.src = e.src
                 GROUP BY 1) c ON c.id = n0.id)"""
         }.mkString(",\n")
-        s"""WITH $shCappedSql,
-            sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY 1),
-            pp AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, CAST(count(*) AS BIGINT) AS shared
-                   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-            jp AS (SELECT a_id, b_id FROM pp
-                   JOIN sz sa ON sa.doc_id = a_id JOIN sz sb ON sb.doc_id = b_id
-                   WHERE CAST(shared AS DOUBLE) / CAST(sa.n + sb.n - shared AS DOUBLE)
-                         >= CAST(0.5 AS DOUBLE)),
-            e AS (SELECT a_id AS src, b_id AS dst FROM jp
-                  UNION SELECT b_id, a_id FROM jp),
+        s"""WITH $shCappedSql, ${jaccardEdgeSql()},
             dg AS (SELECT src, CAST(count(*) AS BIGINT) AS d FROM e GROUP BY 1),
             n0 AS (SELECT doc_id AS id FROM documents),
             r0 AS (SELECT id, CAST(CASE WHEN id % 50 = 0 THEN 1000000000000 ELSE 0 END
@@ -939,17 +903,7 @@ object DedupQ {
                       FROM e JOIN l${i - 1} p ON p.id = e.src GROUP BY 1, 2))
               WHERE rn = 1)"""
         }.mkString(",\n")
-        s"""WITH $shCappedSql,
-            sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY 1),
-            pp AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, CAST(count(*) AS BIGINT) AS shared
-                   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-            jp AS (SELECT a_id, b_id FROM pp
-                   JOIN sz sa ON sa.doc_id = a_id JOIN sz sb ON sb.doc_id = b_id
-                   WHERE CAST(shared AS DOUBLE) / CAST(sa.n + sb.n - shared AS DOUBLE)
-                         >= CAST(0.5 AS DOUBLE)),
-            e AS MATERIALIZED (SELECT a_id AS src, b_id AS dst FROM jp
-                  UNION ALL SELECT b_id, a_id FROM jp),
+        s"""WITH $shCappedSql, ${jaccardEdgeSql("UNION ALL", mat = true)},
             l0 AS (SELECT DISTINCT src AS id, src AS lbl FROM e),
             $rounds
             SELECT id AS doc_id, lbl AS community FROM l3"""
@@ -1027,15 +981,11 @@ object DedupQ {
       // df-capped shingle universe — same cap as the shipped d7/d8
       // pipeline; see [[graft.ops.Dedup.containmentPairs]]
       (s, d) => Dedup.containmentPairs(t(s, d, "documents"), "doc_id", "text", 3, 0.8, shCapDf),
-      Some(s"""WITH $shCappedSql,
-               sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY 1),
-               p AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, CAST(count(*) AS BIGINT) AS shared
-                     FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                     GROUP BY 1, 2)
+      Some(s"""WITH $shCappedSql, $pairCountSql
                SELECT a_id, b_id, shared, sa.n AS na, sb.n AS nb,
                       CAST(shared AS DOUBLE) / CAST(sa.n AS DOUBLE) AS cont_a,
                       CAST(shared AS DOUBLE) / CAST(sb.n AS DOUBLE) AS cont_b
-               FROM p JOIN sz sa ON sa.doc_id = a_id JOIN sz sb ON sb.doc_id = b_id
+               FROM pp JOIN sz sa ON sa.doc_id = a_id JOIN sz sb ON sb.doc_id = b_id
                WHERE greatest(CAST(shared AS DOUBLE) / CAST(sa.n AS DOUBLE),
                               CAST(shared AS DOUBLE) / CAST(sb.n AS DOUBLE))
                      >= CAST(0.8 AS DOUBLE)""")),

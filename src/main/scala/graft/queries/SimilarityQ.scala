@@ -1,7 +1,9 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ml.IvfQuantizer
 import graft.ops._
 
 /** Similarity search over `embeddings` (64-dim float vectors):
@@ -19,8 +21,8 @@ object SimilarityQ {
     * sim_pca_whiten all route against the SAME collected FitK (fitted at
     * k = 2 — component 1 of the deflation chain is bit-identical to the
     * k = 1 fit, so the top-1 consumers are unchanged). Memoized in the
-    * engine-wide [[graft.ops.Fits]] registry (keyed by the sf dir; the
-    * lock-scope and stale-fit caveats live there and apply to every
+    * engine-wide [[graft.ops.Fits]] registry (keyed by the sf dir and its
+    * fingerprint; the lock scope is documented there and applies to every
     * fitted-table memo below).
     */
   private def pcaFitFor(
@@ -41,8 +43,7 @@ object SimilarityQ {
     * spec-pinned against a plain-Scala ranking). Every consumer after
     * the first skips the Lloyd passes entirely — its plan is one broadcast
     * assignment. `tag` names the source transform ("raw" embeddings,
-    * whitened "resid", PQ subspace slices) since the frames differ; the
-    * stale-fit caveat above applies.
+    * whitened "resid", PQ subspace slices) since the frames differ.
     */
   private def ivfFitFor(
       d: String, tag: String, k: Int, iters: Int, se: Int,
@@ -70,13 +71,9 @@ object SimilarityQ {
   private def rawFit8(s: org.apache.spark.sql.SparkSession, d: String) =
     ivfFitFor(d, "raw", 8, 2, 4)(withNorm(t(s, d, "embeddings")))
 
-  /** The shared adaptive-k raw fit (sim_label_noise / sim_semantic_dedup). */
-  private def rawFitAdaptive(
-      s: org.apache.spark.sql.SparkSession, d: String, k: Int) =
-    ivfFitFor(d, "raw", k, 2, 4)(withNorm(t(s, d, "embeddings")))
-
-  private def withNorm(df: org.apache.spark.sql.DataFrame) =
-    df.select(col("vec_id"), col("embedding"))
+  /** (vec_id, embedding, extra…, n2): the exact squared norm appended. */
+  private def withNorm(df: DataFrame, extra: String*) =
+    df.select((Seq("vec_id", "embedding") ++ extra).map(col): _*)
       .withColumn("n2", Vectors.norm2Exact(col("embedding")))
 
   /** The axis-removed residual frame (vec_id, embedding, n2) both whitened
@@ -145,11 +142,351 @@ object SimilarityQ {
          FROM resid CROSS JOIN unnest(generate_series(1, 64)) AS i(i)
          GROUP BY 1)"""
 
-  /** Oracle CTE: per-vector exact squared norm. */
-  private val normSql =
-    """n AS (SELECT vec_id,
+  /** Oracle CTE `name(vec_id, n2)`: per-vector exact squared norm. */
+  private def normCte(name: String) =
+    s"""$name AS (SELECT vec_id,
          CAST(sum(CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE) AS DECIMAL(38,9))) AS DOUBLE) AS n2
        FROM (SELECT vec_id, unnest(embedding) AS x FROM embeddings) GROUP BY 1)"""
+
+  private val normSql = normCte("n")
+
+  /** The cell-pair stage's flat routing: every vector of `src` assigned
+    * to its cell under the memoized adaptive-k fit (k = ceil(n/64) from
+    * count(*), fitted on `fitSrc` under `tag`), joined onto `e` and
+    * persisted — the (vec_id, e's columns…, cell) frame both pair sides
+    * read. `src` is `e` itself, or its (vec_id, embedding, n2) projection
+    * when `e` carries labels: the frame routed decides which persisted
+    * frames the plan reuses, and the plan signatures pin that.
+    */
+  private def routeFlat(
+      s: SparkSession, d: String, tag: String, e: DataFrame, src: DataFrame)(
+      fitSrc: => DataFrame): DataFrame = {
+    // parquet-footer count (no column scan) → the same k the oracle's
+    // kparam scalar subquery derives
+    val k = IvfQuantizer.adaptiveK(t(s, d, "embeddings").count(), 64)
+    val cells = IvfQuantizer.fitAssignFrom(
+      src, "vec_id", "embedding", "n2", ivfFitFor(d, tag, k, 2, 4)(fitSrc))
+    Caches.trackPersist(e.join(cells, "vec_id"))
+  }
+
+  /** [[routeFlat]] through the two-level hierarchical quantizer (k =
+    * hierK(n) per level): the leaf key is the (ccell, scell) pair, and the
+    * leaf assignment is persisted as well as the joined frame.
+    */
+  private def routeHier(
+      s: SparkSession, d: String, tag: String, e: DataFrame, src: DataFrame)(
+      fitSrc: => DataFrame): DataFrame = {
+    val k = IvfQuantizer.hierK(t(s, d, "embeddings").count(), 64)
+    val (cFit, sFit) = hierFitFor(d, tag, k, 1, 4, 2)(fitSrc)
+    val leaf = Caches.trackPersist(IvfQuantizer.fitAssignHierFrom(
+      src, "vec_id", "embedding", "n2", cFit, sFit))
+    Caches.trackPersist(e.join(leaf, "vec_id"))
+  }
+
+  /** The cell-pair stage: every (query_id, vec_id) pair of a routed frame
+    * `m` that shares the leaf `keys` and passes `pair(vec_id, query_id)`,
+    * with its exact-decimal cosine. Each `carry` column rides along as
+    * q<col> (query side) and c<col> (candidate side).
+    */
+  private def cellPairs(
+      m: DataFrame, keys: Seq[String], pair: (Column, Column) => Column,
+      carry: Seq[String]): DataFrame = {
+    def side(id: Column, v: String, n2: String, pfx: String) =
+      m.select(keys.map(col) ++ Seq(id, col("embedding").as(v), col("n2").as(n2)) ++
+        carry.map(x => col(x).as(pfx + x)): _*)
+    side(col("vec_id"), "ce", "cn2", "c")
+      .join(side(col("vec_id").as("query_id"), "qe", "qn2", "q"), keys)
+      .filter(pair(col("vec_id"), col("query_id")))
+      .withColumn("cos",
+        Vectors.cosineFrom(Vectors.dotExact(col("qe"), col("ce")), col("qn2"), col("cn2")))
+  }
+
+  /** Neighbourhood consensus tail: each query's top-5 pairs by (cos desc,
+    * vec_id) vote on its label — integer counts, one closing division.
+    */
+  private def consensusVote(pairs: DataFrame): DataFrame =
+    pairs
+      .withColumn(
+        "rnk",
+        row_number().over(
+          Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))))
+      .filter(col("rnk") <= 5)
+      .groupBy("query_id", "qlabel")
+      .agg(
+        count(lit(1)).as("n_nb"),
+        sum((col("clabel") === col("qlabel")).cast("long")).as("n_agree"))
+      .select(
+        col("query_id").as("vec_id"), col("qlabel").as("label"),
+        col("n_nb"), col("n_agree"),
+        (col("n_agree").cast("double") / col("n_nb").cast("double")).as("agree_frac"),
+        (col("n_agree") * 2 < col("n_nb")).cast("long").as("suspect"))
+
+  /** First-claimant keep ledger over every vector of `m`: a vector is
+    * dropped iff an earlier pair partner sits at cosine >= 0.4; kept_by is
+    * the smallest such claimant, max_cos the tightest.
+    */
+  private def keepLedger(m: DataFrame, pairs: DataFrame): DataFrame = {
+    val dup = pairs
+      .filter(col("cos") >= lit(0.4))
+      .groupBy("query_id")
+      .agg(
+        min(col("vec_id")).as("kept_by"),
+        count(lit(1)).as("n_dup"),
+        max(col("cos")).as("max_cos"))
+      .withColumnRenamed("query_id", "vec_id")
+    m.select(col("vec_id"))
+      .join(dup, Seq("vec_id"), "left")
+      .select(
+        col("vec_id"),
+        col("kept_by").isNull.cast("long").as("keep"),
+        col("kept_by"), col("n_dup"), col("max_cos"))
+  }
+
+  /** Oracle twin of [[routeFlat]]: the adaptive-k Lloyd chain over `src`
+    * (`embeddings` or `resid`), reading the norm CTE `norm` (`n` or `nw`),
+    * ending in `leaf(vec_id, cell)`.
+    */
+  private def flatRouteSql(src: String, norm: String): String = {
+    val sfx = norm.stripPrefix("n")
+    s"""kparam AS (${IvfQuantizer.sqlAdaptiveK("embeddings", 64)}),
+           ${IvfQuantizer.lloydSqlAtExpr(
+      "(SELECT k FROM kparam)", 2, 64, sampleEvery = 4, sfx = sfx, dimOffset = 0, srcTable = src)},
+           leaf AS (SELECT vec_id, cell FROM assigned$sfx)"""
+  }
+
+  /** Oracle twin of [[routeHier]], ending in `leaf(vec_id, ccell, scell)`. */
+  private def hierRouteSql(src: String, norm: String): String = {
+    val sfx = norm.stripPrefix("n")
+    s"""kparam_h AS (${IvfQuantizer.sqlHierK("embeddings", 64)}),
+           n${sfx}h1 AS (SELECT vec_id, n2 FROM $norm),
+           ${IvfQuantizer.lloydSqlAtExpr(
+      "(SELECT k FROM kparam_h)", 1, 64, sampleEvery = 4, sfx = s"${sfx}h1",
+      dimOffset = 0, srcTable = src)},
+           gmap$sfx AS (SELECT vec_id, cell AS grp FROM assigned${sfx}h1),
+           ${IvfQuantizer.lloydSqlGrouped(
+      "(SELECT k FROM kparam_h)", 1, 64, sampleEvery = 2, sfx = s"${sfx}h2",
+      gmapCte = s"gmap$sfx", normCte = norm, srcTable = src)},
+           leaf AS (SELECT vec_id, grp AS ccell, cell AS scell FROM assigned${sfx}h2)"""
+  }
+
+  /** Oracle twin of [[cellPairs]] over a routing chain's `leaf`: CTEs
+    * `m` (leaf + `src` vectors + `carry`), `d` (exact dots of the pairs
+    * sharing `keys` with `c.vec_id pairOp q.vec_id`) and `s` (cosines
+    * against the norm CTE `norm`).
+    */
+  private def cellPairSql(
+      keys: Seq[String], src: String, norm: String, pairOp: String,
+      carry: Seq[String]): String = {
+    def qc(pfx: String, as: String => String) = carry.map(x => s", $pfx${as(x)}").mkString
+    s"""m AS (SELECT l.*, e.embedding${qc("e.", x => x)}
+                 FROM leaf l JOIN $src e ON e.vec_id = l.vec_id),
+           d AS (SELECT q.vec_id AS query_id${qc("q.", x => s"$x AS q$x")},
+                   c.vec_id${qc("c.", x => s"$x AS c$x")},
+                   ${Vectors.sqlDotExact("q.embedding", "c.embedding", "i.i")} AS dot
+                 FROM m q JOIN m c ON ${keys.map(k => s"c.$k = q.$k").mkString(" AND ")}
+                      AND c.vec_id $pairOp q.vec_id,
+                      unnest(generate_series(1, 64)) AS i(i)
+                 GROUP BY ${(1 to 2 + 2 * carry.size).mkString(", ")}),
+           s AS (SELECT d.query_id${qc("d.q", x => x)}, d.vec_id${qc("d.c", x => x)},
+                   d.dot / nullif(sqrt(nq.n2) * sqrt(nc.n2), CAST(0.0 AS DOUBLE)) AS cos
+                 FROM d JOIN $norm nq ON nq.vec_id = d.query_id
+                      JOIN $norm nc ON nc.vec_id = d.vec_id)"""
+  }
+
+  /** Oracle twin of [[consensusVote]] over the pair CTE `s`. */
+  private val consensusVoteSql =
+    """r AS (SELECT query_id, qlabel, clabel,
+                   row_number() OVER (PARTITION BY query_id
+                     ORDER BY cos DESC, vec_id) AS rnk
+                 FROM s)
+           SELECT query_id AS vec_id, qlabel AS label,
+             CAST(count(*) AS BIGINT) AS n_nb,
+             CAST(sum(CASE WHEN clabel = qlabel THEN 1 ELSE 0 END) AS BIGINT) AS n_agree,
+             CAST(sum(CASE WHEN clabel = qlabel THEN 1 ELSE 0 END) AS DOUBLE)
+               / CAST(count(*) AS DOUBLE) AS agree_frac,
+             CAST(2 * sum(CASE WHEN clabel = qlabel THEN 1 ELSE 0 END) < count(*)
+               AS BIGINT) AS suspect
+           FROM r WHERE rnk <= 5 GROUP BY 1, 2"""
+
+  /** Oracle twin of [[keepLedger]] over the CTEs `m` and `s`. */
+  private val keepLedgerSql =
+    """dup AS (SELECT query_id, CAST(min(vec_id) AS BIGINT) AS kept_by,
+                     CAST(count(*) AS BIGINT) AS n_dup, max(cos) AS max_cos
+                   FROM s WHERE cos >= CAST(0.4 AS DOUBLE) GROUP BY 1)
+           SELECT m.vec_id,
+             CAST(CASE WHEN dup.query_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS keep,
+             dup.kept_by, dup.n_dup, dup.max_cos
+           FROM m LEFT JOIN dup ON dup.query_id = m.vec_id"""
+
+  /** Product quantization of the 64-dim vectors: 8 subspaces of 8 dims,
+    * each coded against its own k=8 spherical k-means codebook (1 Lloyd
+    * update on the vec_id % 2 sample).
+    */
+  private final val pqSubs = 8
+  private final val pqDims = 8
+
+  /** The PQ stage sim_pq_topk and the IVF-PQ scorer share: the persisted
+    * codes (sub, vec_id, cell) and, for the queries `qPred` selects, the
+    * ADC lookup table (query_id, sub, cell, term) — each term the
+    * exact-decimal dot of the query's slice with the cell's member-sum
+    * vector over the member count.
+    */
+  private def pqTables(s: SparkSession, d: String, qPred: Column): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.types.DecimalType
+    val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
+    // all 8 subspace slices in ONE in-stage explode off the scan, fitted
+    // as ONE grouped Lloyd job (grpCols = sub): 8× fewer jobs than
+    // fitting each subspace serially, identical per-subspace math
+    val slices = (0 until pqSubs).map(sb =>
+      struct(lit(sb).as("sub"), slice(col("embedding"), sb * pqDims + 1, pqDims).as("sv")))
+    val es = emb
+      .select(col("vec_id"), explode(array(slices: _*)).as("e"))
+      .select(col("e.sub").as("sub"), col("vec_id"), col("e.sv").as("sv"))
+      .withColumn("sn2", Vectors.norm2Exact(col("sv")))
+    val codesP = Caches.trackPersist(
+      IvfQuantizer.fitAssignFrom(es, "vec_id", "sv", "sn2",
+        ivfFitFor(d, "pq8x8", 8, 1, 2, grpCols = Seq("sub"))(es, "sv", "sn2")))
+    // (vec, subspace, subdim, x) component view — one explode feeds the
+    // codebook, the query tables, and nothing else twice (persisted)
+    val compo = Caches.trackPersist(
+      emb.select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim0", "xf")))
+        .select(
+          col("vec_id"),
+          expr(s"dim0 div $pqDims").cast("int").as("sub"),
+          pmod(col("dim0"), lit(pqDims)).as("sdim"),
+          col("xf").cast("double").as("x")))
+    // reconstruction codebook: per (sub, cell) member-sum vector + count
+    val cb = compo.join(codesP, Seq("vec_id", "sub"))
+      .groupBy("sub", "cell", "sdim")
+      .agg(sum(col("x").cast(DecimalType(38, 9))).cast("double").as("sx"))
+    val m = codesP.groupBy("sub", "cell").agg(count(lit(1)).as("m"))
+    val tbl = compo.filter(qPred)
+      .select(col("vec_id").as("query_id"), col("sub"), col("sdim"), col("x").as("qx"))
+      .join(cb, Seq("sub", "sdim"))
+      .groupBy("query_id", "sub", "cell")
+      .agg(sum((col("qx") * col("sx")).cast(DecimalType(38, 9))).cast("double").as("ds"))
+      .join(m, Seq("sub", "cell"))
+      .withColumn("term", col("ds") / col("m").cast("double"))
+      .select("query_id", "sub", "cell", "term")
+    (codesP, tbl)
+  }
+
+  /** ADC term rows (query_id, vec_id, sub, term) pivoted to one column per
+    * subspace — a bare double SUM would be partition-order-dependent.
+    */
+  private def pqWide(rows: DataFrame): DataFrame = {
+    val pivots = (0 until pqSubs).map(sb =>
+      max(when(col("sub") === sb, col("term"))).as(s"t$sb"))
+    rows.groupBy("query_id", "vec_id").agg(pivots.head, pivots.tail: _*)
+  }
+
+  /** Top-3 per query by the fixed left-assoc sum of the pivoted terms. */
+  private def pqTop3(wide: DataFrame): DataFrame =
+    wide
+      .withColumn("score", (0 until pqSubs).map(sb => col(s"t$sb")).reduce(_ + _))
+      .withColumn(
+        "rnk",
+        row_number().over(
+          Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("vec_id")))
+          .cast("long"))
+      .filter(col("rnk") <= 3)
+      .select("query_id", "rnk", "vec_id", "score")
+
+  /** Oracle twin of [[pqTables]]: per-subspace norms, Lloyd fits,
+    * codebooks and ADC tables ending in `allt(query_id, vec_id, sub,
+    * term)` for every corpus vector.
+    */
+  private def pqTablesSql(qWhere: String => String): String = {
+    val norms = (0 until pqSubs).map { sb =>
+      val off = sb * pqDims
+      s"""ns$sb AS (SELECT vec_id,
+            CAST(sum(CAST(CAST(embedding[i.i + $off] AS DOUBLE)
+              * CAST(embedding[i.i + $off] AS DOUBLE) AS DECIMAL(38,9))) AS DOUBLE) AS n2
+          FROM embeddings, unnest(generate_series(1, $pqDims)) AS i(i) GROUP BY 1)"""
+    }.mkString(",\n")
+    val fits = (0 until pqSubs).map { sb =>
+      IvfQuantizer.lloydSqlAt(8, 1, pqDims, 2, s"s$sb", sb * pqDims)
+    }.mkString(",\n")
+    val perSub = (0 until pqSubs).map { sb =>
+      s"""cb$sb AS (SELECT a.cell, c.dim, CAST(sum(CAST(c.x AS DECIMAL(38,9))) AS DOUBLE) AS sx
+            FROM comps$sb c JOIN assigneds$sb a ON a.vec_id = c.vec_id GROUP BY 1, 2),
+          m$sb AS (SELECT cell, CAST(count(*) AS BIGINT) AS m FROM assigneds$sb GROUP BY 1),
+          tq$sb AS (SELECT q.vec_id AS query_id, cb.cell,
+              CAST(sum(CAST(q.x * cb.sx AS DECIMAL(38,9))) AS DOUBLE) AS ds
+            FROM comps$sb q JOIN cb$sb cb ON cb.dim = q.dim
+            WHERE ${qWhere("q.vec_id")} GROUP BY 1, 2),
+          tm$sb AS (SELECT t.query_id, a.vec_id, t.ds / CAST(m.m AS DOUBLE) AS term
+            FROM assigneds$sb a JOIN tq$sb t ON t.cell = a.cell
+                 JOIN m$sb m ON m.cell = a.cell)"""
+    }.mkString(",\n")
+    val allUnion = (0 until pqSubs)
+      .map(sb => s"SELECT query_id, vec_id, $sb AS sub, term FROM tm$sb")
+      .mkString(" UNION ALL ")
+    s"""$norms,
+        $fits,
+        $perSub,
+        allt AS ($allUnion)"""
+  }
+
+  /** Oracle twin of [[pqWide]] + [[pqTop3]] over the term rows `rows`
+    * (`where`: an optional filter on the pivoted rows).
+    */
+  private def pqTop3Sql(rows: String, where: String): String = {
+    val pivot = (0 until pqSubs)
+      .map(sb => s"max(CASE WHEN sub = $sb THEN term END) AS t$sb")
+      .mkString(", ")
+    val scoreExpr = (0 until pqSubs).map(sb => s"t$sb").reduce((a, b) => s"($a + $b)")
+    s"""wide AS (SELECT query_id, vec_id, $pivot FROM $rows GROUP BY 1, 2)
+        SELECT query_id, rnk, vec_id, score FROM (
+          SELECT query_id, vec_id, $scoreExpr AS score,
+            row_number() OVER (PARTITION BY query_id
+              ORDER BY $scoreExpr DESC, vec_id) AS rnk
+          FROM wide$where)
+        WHERE rnk <= 3"""
+  }
+
+  /** The `sim_margin_mine` pipeline over a (vec_id, label, embedding, n2)
+    * frame: mutual-best ratio-margin pairs between the even-id and odd-id
+    * sides, blocked on label (see the QDef comment). `ProbeScale mine`
+    * times this builder on synthetic corpora.
+    */
+  private[graft] def marginMine(e: DataFrame): DataFrame = {
+    val mk = 4
+    val a = e.filter(pmod(col("vec_id"), lit(2)) === 0)
+      .select(col("label"), col("vec_id").as("src_id"),
+        col("embedding").as("ae"), col("n2").as("an2"))
+    val b = e.filter(pmod(col("vec_id"), lit(2)) === 1)
+      .select(col("label"), col("vec_id").as("tgt_id"),
+        col("embedding").as("be"), col("n2").as("bn2"))
+    val p = Caches.trackPersist(
+      a.join(b, "label")
+        .withColumn("cos", Vectors.cosineFrom(
+          Vectors.dotExact(col("ae"), col("be")), col("an2"), col("bn2")))
+        .select("label", "src_id", "tgt_id", "cos"))
+    val ka = p.withColumn("r", row_number().over(
+        Window.partitionBy("src_id").orderBy(col("cos").desc, col("tgt_id"))))
+      .filter(col("r") <= mk)
+      .groupBy("src_id").agg(Exact.dsumTrunc9(col("cos")).as("ka"))
+    val kb = p.withColumn("r", row_number().over(
+        Window.partitionBy("tgt_id").orderBy(col("cos").desc, col("src_id"))))
+      .filter(col("r") <= mk)
+      .groupBy("tgt_id").agg(Exact.dsumTrunc9(col("cos")).as("kb"))
+    // persisted: both argmax directions consume it — without the cache
+    // each would recompute the two k-NN sum aggregations
+    val m = Caches.trackPersist(
+      p.join(ka, "src_id").join(kb, "tgt_id")
+        .withColumn("margin",
+          col("cos") / ((col("ka") + col("kb")) / lit((2 * mk).toDouble))))
+    val fwd = m.withColumn("rf", row_number().over(
+        Window.partitionBy("src_id").orderBy(col("margin").desc, col("tgt_id"))))
+      .filter(col("rf") === 1)
+    val bwd = m.withColumn("rb", row_number().over(
+        Window.partitionBy("tgt_id").orderBy(col("margin").desc, col("src_id"))))
+      .filter(col("rb") === 1)
+      .select("src_id", "tgt_id")
+    fwd.join(bwd, Seq("src_id", "tgt_id"))
+      .select(col("src_id"), col("tgt_id"), col("label"), col("cos"), col("margin"))
+  }
 
   /** Exact brute-force cosine top-3 (the recall-audit ground truth) —
     * the `sim_cosine_topk` builder, factored so `sim_ivf_recall` /
@@ -505,102 +842,12 @@ object SimilarityQ {
       // order (pivoted to explicit columns — a bare double SUM would be
       // partition-order-dependent). Top-3 per query, total tiebreak.
       (s, d) => {
-        import org.apache.spark.sql.types.DecimalType
-        val nSub = 8; val dSub = 8; val kk = 8; val se = 2
-        val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-        // all 8 subspace slices in ONE in-stage explode off the scan, fitted
-        // as ONE grouped Lloyd job (grpCols = sub): 8× fewer jobs than
-        // fitting each subspace serially, identical per-subspace math
-        val slices = (0 until nSub).map(sb =>
-          struct(lit(sb).as("sub"), slice(col("embedding"), sb * dSub + 1, dSub).as("sv")))
-        val es = emb
-          .select(col("vec_id"), explode(array(slices: _*)).as("e"))
-          .select(col("e.sub").as("sub"), col("vec_id"), col("e.sv").as("sv"))
-          .withColumn("sn2", Vectors.norm2Exact(col("sv")))
-        val codesP = Caches.trackPersist(
-          graft.ml.IvfQuantizer.fitAssignFrom(es, "vec_id", "sv", "sn2",
-            ivfFitFor(d, "pq8x8", kk, 1, se, grpCols = Seq("sub"))(es, "sv", "sn2")))
-        // (vec, subspace, subdim, x) component view — one explode feeds the
-        // codebook, the query tables, and nothing else twice (persisted)
-        val compo = Caches.trackPersist(
-          emb.select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim0", "xf")))
-            .select(
-              col("vec_id"),
-              expr(s"dim0 div $dSub").cast("int").as("sub"),
-              pmod(col("dim0"), lit(dSub)).as("sdim"),
-              col("xf").cast("double").as("x")))
-        // reconstruction codebook: per (sub, cell) member-sum vector + count
-        val cb = compo.join(codesP, Seq("vec_id", "sub"))
-          .groupBy("sub", "cell", "sdim")
-          .agg(sum(col("x").cast(DecimalType(38, 9))).cast("double").as("sx"))
-        val m = codesP.groupBy("sub", "cell").agg(count(lit(1)).as("m"))
-        // ADC lookup table: 5 queries × 8 subspaces × ≤8 cells
-        val tbl = compo.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("query_id"), col("sub"), col("sdim"), col("x").as("qx"))
-          .join(cb, Seq("sub", "sdim"))
-          .groupBy("query_id", "sub", "cell")
-          .agg(sum((col("qx") * col("sx")).cast(DecimalType(38, 9))).cast("double").as("ds"))
-          .join(m, Seq("sub", "cell"))
-          .withColumn("term", col("ds") / col("m").cast("double"))
-          .select("query_id", "sub", "cell", "term")
-        val pivots = (0 until nSub).map(sb =>
-          max(when(col("sub") === sb, col("term"))).as(s"t$sb"))
-        val wide = codesP.join(broadcast(tbl), Seq("sub", "cell"))
-          .groupBy("query_id", "vec_id")
-          .agg(pivots.head, pivots.tail: _*)
-        val score = (0 until nSub).map(sb => col(s"t$sb")).reduce(_ + _)
-        wide.filter(col("vec_id") =!= col("query_id"))
-          .withColumn("score", score)
-          .withColumn(
-            "rnk",
-            row_number().over(Window.partitionBy(col("query_id"))
-              .orderBy(col("score").desc, col("vec_id"))).cast("long"))
-          .filter(col("rnk") <= 3)
-          .select("query_id", "rnk", "vec_id", "score")
+        val (codesP, tbl) = pqTables(s, d, col("vec_id") < 5)
+        pqTop3(pqWide(codesP.join(broadcast(tbl), Seq("sub", "cell")))
+          .filter(col("vec_id") =!= col("query_id")))
       },
-      Some {
-        val nSub = 8; val dSub = 8; val kk = 8; val se = 2
-        val norms = (0 until nSub).map { sb =>
-          val off = sb * dSub
-          s"""ns$sb AS (SELECT vec_id,
-                CAST(sum(CAST(CAST(embedding[i.i + $off] AS DOUBLE)
-                  * CAST(embedding[i.i + $off] AS DOUBLE) AS DECIMAL(38,9))) AS DOUBLE) AS n2
-              FROM embeddings, unnest(generate_series(1, $dSub)) AS i(i) GROUP BY 1)"""
-        }.mkString(",\n")
-        val fits = (0 until nSub).map { sb =>
-          graft.ml.IvfQuantizer.lloydSqlAt(kk, 1, dSub, se, s"s$sb", sb * dSub)
-        }.mkString(",\n")
-        val perSub = (0 until nSub).map { sb =>
-          s"""cb$sb AS (SELECT a.cell, c.dim, CAST(sum(CAST(c.x AS DECIMAL(38,9))) AS DOUBLE) AS sx
-                FROM comps$sb c JOIN assigneds$sb a ON a.vec_id = c.vec_id GROUP BY 1, 2),
-              m$sb AS (SELECT cell, CAST(count(*) AS BIGINT) AS m FROM assigneds$sb GROUP BY 1),
-              tq$sb AS (SELECT q.vec_id AS query_id, cb.cell,
-                  CAST(sum(CAST(q.x * cb.sx AS DECIMAL(38,9))) AS DOUBLE) AS ds
-                FROM comps$sb q JOIN cb$sb cb ON cb.dim = q.dim
-                WHERE q.vec_id < 5 GROUP BY 1, 2),
-              tm$sb AS (SELECT t.query_id, a.vec_id, t.ds / CAST(m.m AS DOUBLE) AS term
-                FROM assigneds$sb a JOIN tq$sb t ON t.cell = a.cell
-                     JOIN m$sb m ON m.cell = a.cell)"""
-        }.mkString(",\n")
-        val allUnion = (0 until nSub)
-          .map(sb => s"SELECT query_id, vec_id, $sb AS sub, term FROM tm$sb")
-          .mkString(" UNION ALL ")
-        val pivot = (0 until nSub)
-          .map(sb => s"max(CASE WHEN sub = $sb THEN term END) AS t$sb")
-          .mkString(", ")
-        val scoreExpr = (0 until nSub).map(sb => s"t$sb").reduce((a, b) => s"($a + $b)")
-        s"""WITH $norms,
-            $fits,
-            $perSub,
-            allt AS ($allUnion),
-            wide AS (SELECT query_id, vec_id, $pivot FROM allt GROUP BY 1, 2)
-            SELECT query_id, rnk, vec_id, score FROM (
-              SELECT query_id, vec_id, $scoreExpr AS score,
-                row_number() OVER (PARTITION BY query_id
-                  ORDER BY $scoreExpr DESC, vec_id) AS rnk
-              FROM wide WHERE vec_id <> query_id)
-            WHERE rnk <= 3"""
-      }),
+      Some(s"""WITH ${pqTablesSql(c => s"$c < 5")},
+            ${pqTop3Sql("allt", " WHERE vec_id <> query_id")}""")),
 
     QDef(
       "sim_ivfpq_topk",
@@ -771,67 +1018,15 @@ object SimilarityQ {
       // (cos desc, vec_id) total tiebreak, integer vote counts, one
       // closing IEEE division
       (s, d) => {
-        val e = t(s, d, "embeddings")
-          .select(col("vec_id"), col("embedding"), col("label"))
-          .withColumn("n2", Vectors.norm2Exact(col("embedding")))
-        // parquet-footer count (no column scan) → the same k the oracle's
-        // kparam scalar subquery derives
-        val k = graft.ml.IvfQuantizer.adaptiveK(t(s, d, "embeddings").count(), 64)
-        val cells = graft.ml.IvfQuantizer.fitAssignFrom(
-          e.select("vec_id", "embedding", "n2"), "vec_id", "embedding", "n2",
-          rawFitAdaptive(s, d, k))
-        val m = Caches.trackPersist(e.join(cells, "vec_id"))
-        val a = m.select(col("cell"), col("vec_id").as("query_id"),
-          col("embedding").as("qe"), col("n2").as("qn2"), col("label").as("qlabel"))
-        val c = m.select(col("cell"), col("vec_id"),
-          col("embedding").as("ce"), col("n2").as("cn2"), col("label").as("clabel"))
-        c.join(a, Seq("cell"))
-          .filter(col("vec_id") =!= col("query_id"))
-          .withColumn("cos",
-            Vectors.cosineFrom(Vectors.dotExact(col("qe"), col("ce")), col("qn2"), col("cn2")))
-          .withColumn(
-            "rnk",
-            row_number().over(
-              Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))))
-          .filter(col("rnk") <= 5)
-          .groupBy("query_id", "qlabel")
-          .agg(
-            count(lit(1)).as("n_nb"),
-            sum((col("clabel") === col("qlabel")).cast("long")).as("n_agree"))
-          .select(
-            col("query_id").as("vec_id"), col("qlabel").as("label"),
-            col("n_nb"), col("n_agree"),
-            (col("n_agree").cast("double") / col("n_nb").cast("double")).as("agree_frac"),
-            (col("n_agree") * 2 < col("n_nb")).cast("long").as("suspect"))
+        val e = withNorm(t(s, d, "embeddings"), "label")
+        val m = routeFlat(s, d, "raw", e, e.select("vec_id", "embedding", "n2"))(
+          withNorm(t(s, d, "embeddings")))
+        consensusVote(cellPairs(m, Seq("cell"), _ =!= _, Seq("label")))
       },
       Some(s"""WITH $normSql,
-           kparam AS (${graft.ml.IvfQuantizer.sqlAdaptiveK("embeddings", 64)}),
-           ${graft.ml.IvfQuantizer.lloydSqlAtExpr(
-        "(SELECT k FROM kparam)", 2, 64, sampleEvery = 4, sfx = "", dimOffset = 0)},
-           m AS (SELECT a.vec_id, a.cell, e.embedding, e.label
-                 FROM assigned a JOIN embeddings e ON e.vec_id = a.vec_id),
-           d AS (SELECT q.vec_id AS query_id, q.label AS qlabel,
-                   c.vec_id, c.label AS clabel,
-                   ${Vectors.sqlDotExact("q.embedding", "c.embedding", "i.i")} AS dot
-                 FROM m q JOIN m c ON c.cell = q.cell AND c.vec_id <> q.vec_id,
-                      unnest(generate_series(1, 64)) AS i(i)
-                 GROUP BY 1, 2, 3, 4),
-           s AS (SELECT d.query_id, d.qlabel, d.vec_id, d.clabel,
-                   d.dot / nullif(sqrt(nq.n2) * sqrt(nc.n2), CAST(0.0 AS DOUBLE)) AS cos
-                 FROM d JOIN n nq ON nq.vec_id = d.query_id
-                      JOIN n nc ON nc.vec_id = d.vec_id),
-           r AS (SELECT query_id, qlabel, clabel,
-                   row_number() OVER (PARTITION BY query_id
-                     ORDER BY cos DESC, vec_id) AS rnk
-                 FROM s)
-           SELECT query_id AS vec_id, qlabel AS label,
-             CAST(count(*) AS BIGINT) AS n_nb,
-             CAST(sum(CASE WHEN clabel = qlabel THEN 1 ELSE 0 END) AS BIGINT) AS n_agree,
-             CAST(sum(CASE WHEN clabel = qlabel THEN 1 ELSE 0 END) AS DOUBLE)
-               / CAST(count(*) AS DOUBLE) AS agree_frac,
-             CAST(2 * sum(CASE WHEN clabel = qlabel THEN 1 ELSE 0 END) < count(*)
-               AS BIGINT) AS suspect
-           FROM r WHERE rnk <= 5 GROUP BY 1, 2""")),
+           ${flatRouteSql("embeddings", "n")},
+           ${cellPairSql(Seq("cell"), "embeddings", "n", "<>", Seq("label"))},
+           $consensusVoteSql""")),
 
     QDef(
       "sim_label_noise_hier",
@@ -852,71 +1047,15 @@ object SimilarityQ {
       // seed ids, so the leaf key is the (ccell, scell) PAIR. Same
       // determinism + singleton-leaf contract as sim_label_noise
       (s, d) => {
-        val e = t(s, d, "embeddings")
-          .select(col("vec_id"), col("embedding"), col("label"))
-          .withColumn("n2", Vectors.norm2Exact(col("embedding")))
-        val k = graft.ml.IvfQuantizer.hierK(t(s, d, "embeddings").count(), 64)
-        val (cFit, sFit) = hierFitFor(d, "raw", k, 1, 4, 2)(withNorm(t(s, d, "embeddings")))
-        val leaf = Caches.trackPersist(graft.ml.IvfQuantizer.fitAssignHierFrom(
-          e.select("vec_id", "embedding", "n2"), "vec_id", "embedding", "n2", cFit, sFit))
-        val m = Caches.trackPersist(e.join(leaf, "vec_id"))
-        val a = m.select(col("ccell"), col("scell"), col("vec_id").as("query_id"),
-          col("embedding").as("qe"), col("n2").as("qn2"), col("label").as("qlabel"))
-        val c = m.select(col("ccell"), col("scell"), col("vec_id"),
-          col("embedding").as("ce"), col("n2").as("cn2"), col("label").as("clabel"))
-        c.join(a, Seq("ccell", "scell"))
-          .filter(col("vec_id") =!= col("query_id"))
-          .withColumn("cos",
-            Vectors.cosineFrom(Vectors.dotExact(col("qe"), col("ce")), col("qn2"), col("cn2")))
-          .withColumn(
-            "rnk",
-            row_number().over(
-              Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))))
-          .filter(col("rnk") <= 5)
-          .groupBy("query_id", "qlabel")
-          .agg(
-            count(lit(1)).as("n_nb"),
-            sum((col("clabel") === col("qlabel")).cast("long")).as("n_agree"))
-          .select(
-            col("query_id").as("vec_id"), col("qlabel").as("label"),
-            col("n_nb"), col("n_agree"),
-            (col("n_agree").cast("double") / col("n_nb").cast("double")).as("agree_frac"),
-            (col("n_agree") * 2 < col("n_nb")).cast("long").as("suspect"))
+        val e = withNorm(t(s, d, "embeddings"), "label")
+        val m = routeHier(s, d, "raw", e, e.select("vec_id", "embedding", "n2"))(
+          withNorm(t(s, d, "embeddings")))
+        consensusVote(cellPairs(m, Seq("ccell", "scell"), _ =!= _, Seq("label")))
       },
       Some(s"""WITH $normSql,
-           kparam_h AS (${graft.ml.IvfQuantizer.sqlHierK("embeddings", 64)}),
-           nh1 AS (SELECT vec_id, n2 FROM n),
-           ${graft.ml.IvfQuantizer.lloydSqlAtExpr(
-        "(SELECT k FROM kparam_h)", 1, 64, sampleEvery = 4, sfx = "h1", dimOffset = 0)},
-           gmap AS (SELECT vec_id, cell AS grp FROM assignedh1),
-           ${graft.ml.IvfQuantizer.lloydSqlGrouped(
-        "(SELECT k FROM kparam_h)", 1, 64, sampleEvery = 2, sfx = "h2",
-        gmapCte = "gmap", normCte = "n")},
-           m AS (SELECT a.vec_id, a.grp AS ccell, a.cell AS scell, e.embedding, e.label
-                 FROM assignedh2 a JOIN embeddings e ON e.vec_id = a.vec_id),
-           d AS (SELECT q.vec_id AS query_id, q.label AS qlabel,
-                   c.vec_id, c.label AS clabel,
-                   ${Vectors.sqlDotExact("q.embedding", "c.embedding", "i.i")} AS dot
-                 FROM m q JOIN m c ON c.ccell = q.ccell AND c.scell = q.scell
-                      AND c.vec_id <> q.vec_id,
-                      unnest(generate_series(1, 64)) AS i(i)
-                 GROUP BY 1, 2, 3, 4),
-           s AS (SELECT d.query_id, d.qlabel, d.vec_id, d.clabel,
-                   d.dot / nullif(sqrt(nq.n2) * sqrt(nc.n2), CAST(0.0 AS DOUBLE)) AS cos
-                 FROM d JOIN n nq ON nq.vec_id = d.query_id
-                      JOIN n nc ON nc.vec_id = d.vec_id),
-           r AS (SELECT query_id, qlabel, clabel,
-                   row_number() OVER (PARTITION BY query_id
-                     ORDER BY cos DESC, vec_id) AS rnk
-                 FROM s)
-           SELECT query_id AS vec_id, qlabel AS label,
-             CAST(count(*) AS BIGINT) AS n_nb,
-             CAST(sum(CASE WHEN clabel = qlabel THEN 1 ELSE 0 END) AS BIGINT) AS n_agree,
-             CAST(sum(CASE WHEN clabel = qlabel THEN 1 ELSE 0 END) AS DOUBLE)
-               / CAST(count(*) AS DOUBLE) AS agree_frac,
-             CAST(2 * sum(CASE WHEN clabel = qlabel THEN 1 ELSE 0 END) < count(*)
-               AS BIGINT) AS suspect
-           FROM r WHERE rnk <= 5 GROUP BY 1, 2""")),
+           ${hierRouteSql("embeddings", "n")},
+           ${cellPairSql(Seq("ccell", "scell"), "embeddings", "n", "<>", Seq("label"))},
+           $consensusVoteSql""")),
 
     QDef(
       "sim_semantic_dedup",
@@ -938,57 +1077,14 @@ object SimilarityQ {
       // a MIN/MAX over those — no order-dependent aggregate anywhere.
       // Vectors alone in their cell trivially keep (no candidates)
       (s, d) => {
-        val e = t(s, d, "embeddings")
-          .select(col("vec_id"), col("embedding"))
-          .withColumn("n2", Vectors.norm2Exact(col("embedding")))
-        val k = graft.ml.IvfQuantizer.adaptiveK(t(s, d, "embeddings").count(), 64)
-        val cells = graft.ml.IvfQuantizer.fitAssignFrom(
-          e, "vec_id", "embedding", "n2", rawFitAdaptive(s, d, k))
-        val m = Caches.trackPersist(e.join(cells, "vec_id"))
-        val a = m.select(col("cell"), col("vec_id").as("query_id"),
-          col("embedding").as("qe"), col("n2").as("qn2"))
-        val c = m.select(col("cell"), col("vec_id"),
-          col("embedding").as("ce"), col("n2").as("cn2"))
-        val dup = c.join(a, Seq("cell"))
-          .filter(col("vec_id") < col("query_id"))
-          .withColumn("cos",
-            Vectors.cosineFrom(Vectors.dotExact(col("qe"), col("ce")), col("qn2"), col("cn2")))
-          .filter(col("cos") >= lit(0.4))
-          .groupBy("query_id")
-          .agg(
-            min(col("vec_id")).as("kept_by"),
-            count(lit(1)).as("n_dup"),
-            max(col("cos")).as("max_cos"))
-          .withColumnRenamed("query_id", "vec_id")
-        m.select(col("vec_id"))
-          .join(dup, Seq("vec_id"), "left")
-          .select(
-            col("vec_id"),
-            col("kept_by").isNull.cast("long").as("keep"),
-            col("kept_by"), col("n_dup"), col("max_cos"))
+        val e = withNorm(t(s, d, "embeddings"))
+        val m = routeFlat(s, d, "raw", e, e)(withNorm(t(s, d, "embeddings")))
+        keepLedger(m, cellPairs(m, Seq("cell"), _ < _, Nil))
       },
       Some(s"""WITH $normSql,
-           kparam AS (${graft.ml.IvfQuantizer.sqlAdaptiveK("embeddings", 64)}),
-           ${graft.ml.IvfQuantizer.lloydSqlAtExpr(
-        "(SELECT k FROM kparam)", 2, 64, sampleEvery = 4, sfx = "", dimOffset = 0)},
-           m AS (SELECT a.vec_id, a.cell, e.embedding
-                 FROM assigned a JOIN embeddings e ON e.vec_id = a.vec_id),
-           d AS (SELECT q.vec_id AS query_id, c.vec_id,
-                   ${Vectors.sqlDotExact("q.embedding", "c.embedding", "i.i")} AS dot
-                 FROM m q JOIN m c ON c.cell = q.cell AND c.vec_id < q.vec_id,
-                      unnest(generate_series(1, 64)) AS i(i)
-                 GROUP BY 1, 2),
-           s AS (SELECT d.query_id, d.vec_id,
-                   d.dot / nullif(sqrt(nq.n2) * sqrt(nc.n2), CAST(0.0 AS DOUBLE)) AS cos
-                 FROM d JOIN n nq ON nq.vec_id = d.query_id
-                      JOIN n nc ON nc.vec_id = d.vec_id),
-           dup AS (SELECT query_id, CAST(min(vec_id) AS BIGINT) AS kept_by,
-                     CAST(count(*) AS BIGINT) AS n_dup, max(cos) AS max_cos
-                   FROM s WHERE cos >= CAST(0.4 AS DOUBLE) GROUP BY 1)
-           SELECT m.vec_id,
-             CAST(CASE WHEN dup.query_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS keep,
-             dup.kept_by, dup.n_dup, dup.max_cos
-           FROM m LEFT JOIN dup ON dup.query_id = m.vec_id""")),
+           ${flatRouteSql("embeddings", "n")},
+           ${cellPairSql(Seq("cell"), "embeddings", "n", "<", Nil)},
+           $keepLedgerSql""")),
 
     QDef(
       "sim_semantic_dedup_hier",
@@ -1007,64 +1103,14 @@ object SimilarityQ {
       // at cosine >= 0.4, kept_by = smallest claimant, lowest id of any
       // leaf dup group always survives, MIN/MAX-only aggregates
       (s, d) => {
-        val e = t(s, d, "embeddings")
-          .select(col("vec_id"), col("embedding"))
-          .withColumn("n2", Vectors.norm2Exact(col("embedding")))
-        val k = graft.ml.IvfQuantizer.hierK(t(s, d, "embeddings").count(), 64)
-        val (cFit, sFit) = hierFitFor(d, "raw", k, 1, 4, 2)(withNorm(t(s, d, "embeddings")))
-        val leaf = Caches.trackPersist(graft.ml.IvfQuantizer.fitAssignHierFrom(
-          e, "vec_id", "embedding", "n2", cFit, sFit))
-        val m = Caches.trackPersist(e.join(leaf, "vec_id"))
-        val a = m.select(col("ccell"), col("scell"), col("vec_id").as("query_id"),
-          col("embedding").as("qe"), col("n2").as("qn2"))
-        val c = m.select(col("ccell"), col("scell"), col("vec_id"),
-          col("embedding").as("ce"), col("n2").as("cn2"))
-        val dup = c.join(a, Seq("ccell", "scell"))
-          .filter(col("vec_id") < col("query_id"))
-          .withColumn("cos",
-            Vectors.cosineFrom(Vectors.dotExact(col("qe"), col("ce")), col("qn2"), col("cn2")))
-          .filter(col("cos") >= lit(0.4))
-          .groupBy("query_id")
-          .agg(
-            min(col("vec_id")).as("kept_by"),
-            count(lit(1)).as("n_dup"),
-            max(col("cos")).as("max_cos"))
-          .withColumnRenamed("query_id", "vec_id")
-        m.select(col("vec_id"))
-          .join(dup, Seq("vec_id"), "left")
-          .select(
-            col("vec_id"),
-            col("kept_by").isNull.cast("long").as("keep"),
-            col("kept_by"), col("n_dup"), col("max_cos"))
+        val e = withNorm(t(s, d, "embeddings"))
+        val m = routeHier(s, d, "raw", e, e)(withNorm(t(s, d, "embeddings")))
+        keepLedger(m, cellPairs(m, Seq("ccell", "scell"), _ < _, Nil))
       },
       Some(s"""WITH $normSql,
-           kparam_h AS (${graft.ml.IvfQuantizer.sqlHierK("embeddings", 64)}),
-           nh1 AS (SELECT vec_id, n2 FROM n),
-           ${graft.ml.IvfQuantizer.lloydSqlAtExpr(
-        "(SELECT k FROM kparam_h)", 1, 64, sampleEvery = 4, sfx = "h1", dimOffset = 0)},
-           gmap AS (SELECT vec_id, cell AS grp FROM assignedh1),
-           ${graft.ml.IvfQuantizer.lloydSqlGrouped(
-        "(SELECT k FROM kparam_h)", 1, 64, sampleEvery = 2, sfx = "h2",
-        gmapCte = "gmap", normCte = "n")},
-           m AS (SELECT a.vec_id, a.grp AS ccell, a.cell AS scell, e.embedding
-                 FROM assignedh2 a JOIN embeddings e ON e.vec_id = a.vec_id),
-           d AS (SELECT q.vec_id AS query_id, c.vec_id,
-                   ${Vectors.sqlDotExact("q.embedding", "c.embedding", "i.i")} AS dot
-                 FROM m q JOIN m c ON c.ccell = q.ccell AND c.scell = q.scell
-                      AND c.vec_id < q.vec_id,
-                      unnest(generate_series(1, 64)) AS i(i)
-                 GROUP BY 1, 2),
-           s AS (SELECT d.query_id, d.vec_id,
-                   d.dot / nullif(sqrt(nq.n2) * sqrt(nc.n2), CAST(0.0 AS DOUBLE)) AS cos
-                 FROM d JOIN n nq ON nq.vec_id = d.query_id
-                      JOIN n nc ON nc.vec_id = d.vec_id),
-           dup AS (SELECT query_id, CAST(min(vec_id) AS BIGINT) AS kept_by,
-                     CAST(count(*) AS BIGINT) AS n_dup, max(cos) AS max_cos
-                   FROM s WHERE cos >= CAST(0.4 AS DOUBLE) GROUP BY 1)
-           SELECT m.vec_id,
-             CAST(CASE WHEN dup.query_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS keep,
-             dup.kept_by, dup.n_dup, dup.max_cos
-           FROM m LEFT JOIN dup ON dup.query_id = m.vec_id""")),
+           ${hierRouteSql("embeddings", "n")},
+           ${cellPairSql(Seq("ccell", "scell"), "embeddings", "n", "<", Nil)},
+           $keepLedgerSql""")),
 
     QDef(
       "sim_semantic_dedup_whitened",
@@ -1087,57 +1133,14 @@ object SimilarityQ {
       // into the quantizer's src cache, once into the pair-stage m)
       (s, d) => {
         val e = Caches.trackPersist(whitenedResid(s, d))
-        val k = graft.ml.IvfQuantizer.adaptiveK(t(s, d, "embeddings").count(), 64)
-        val fit = ivfFitFor(d, "resid", k, 2, 4)(e)
-        val cells = graft.ml.IvfQuantizer.fitAssignFrom(
-          e, "vec_id", "embedding", "n2", fit)
-        val m = Caches.trackPersist(e.join(cells, "vec_id"))
-        val a = m.select(col("cell"), col("vec_id").as("query_id"),
-          col("embedding").as("qe"), col("n2").as("qn2"))
-        val c = m.select(col("cell"), col("vec_id"),
-          col("embedding").as("ce"), col("n2").as("cn2"))
-        val dup = c.join(a, Seq("cell"))
-          .filter(col("vec_id") < col("query_id"))
-          .withColumn("cos",
-            Vectors.cosineFrom(Vectors.dotExact(col("qe"), col("ce")), col("qn2"), col("cn2")))
-          .filter(col("cos") >= lit(0.4))
-          .groupBy("query_id")
-          .agg(
-            min(col("vec_id")).as("kept_by"),
-            count(lit(1)).as("n_dup"),
-            max(col("cos")).as("max_cos"))
-          .withColumnRenamed("query_id", "vec_id")
-        m.select(col("vec_id"))
-          .join(dup, Seq("vec_id"), "left")
-          .select(
-            col("vec_id"),
-            col("kept_by").isNull.cast("long").as("keep"),
-            col("kept_by"), col("n_dup"), col("max_cos"))
+        val m = routeFlat(s, d, "resid", e, e)(e)
+        keepLedger(m, cellPairs(m, Seq("cell"), _ < _, Nil))
       },
       Some(s"""WITH ${graft.ml.Pca.whitenSql("embeddings", 64, 6, 4, k = 2)},
            $residSql,
-           kparam AS (${graft.ml.IvfQuantizer.sqlAdaptiveK("embeddings", 64)}),
-           ${graft.ml.IvfQuantizer.lloydSqlAtExpr(
-        "(SELECT k FROM kparam)", 2, 64, sampleEvery = 4, sfx = "w",
-        dimOffset = 0, srcTable = "resid")},
-           m AS (SELECT a.vec_id, a.cell, r.embedding
-                 FROM assignedw a JOIN resid r ON r.vec_id = a.vec_id),
-           d AS (SELECT q.vec_id AS query_id, c.vec_id,
-                   ${Vectors.sqlDotExact("q.embedding", "c.embedding", "i.i")} AS dot
-                 FROM m q JOIN m c ON c.cell = q.cell AND c.vec_id < q.vec_id,
-                      unnest(generate_series(1, 64)) AS i(i)
-                 GROUP BY 1, 2),
-           s AS (SELECT d.query_id, d.vec_id,
-                   d.dot / nullif(sqrt(nq.n2) * sqrt(nc.n2), CAST(0.0 AS DOUBLE)) AS cos
-                 FROM d JOIN nw nq ON nq.vec_id = d.query_id
-                      JOIN nw nc ON nc.vec_id = d.vec_id),
-           dup AS (SELECT query_id, CAST(min(vec_id) AS BIGINT) AS kept_by,
-                     CAST(count(*) AS BIGINT) AS n_dup, max(cos) AS max_cos
-                   FROM s WHERE cos >= CAST(0.4 AS DOUBLE) GROUP BY 1)
-           SELECT m.vec_id,
-             CAST(CASE WHEN dup.query_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS keep,
-             dup.kept_by, dup.n_dup, dup.max_cos
-           FROM m LEFT JOIN dup ON dup.query_id = m.vec_id""")),
+           ${flatRouteSql("resid", "nw")},
+           ${cellPairSql(Seq("cell"), "resid", "nw", "<", Nil)},
+           $keepLedgerSql""")),
 
     QDef(
       "sim_semantic_dedup_whitened_hier",
@@ -1157,66 +1160,17 @@ object SimilarityQ {
       // adaptive-k centroid table itself stops broadcasting. Same
       // keep/attribution semantics, determinism and tie analysis as the
       // flat variant (see whitenedResid's scaladoc); both levels' fits are
-      // memoized per dataset (hierFits, tag "resid")
+      // memoized per dataset (hierFitFor, tag "resid")
       (s, d) => {
         val e = Caches.trackPersist(whitenedResid(s, d))
-        val k = graft.ml.IvfQuantizer.hierK(t(s, d, "embeddings").count(), 64)
-        val (cFit, sFit) = hierFitFor(d, "resid", k, 1, 4, 2)(e)
-        val leaf = Caches.trackPersist(graft.ml.IvfQuantizer.fitAssignHierFrom(
-          e, "vec_id", "embedding", "n2", cFit, sFit))
-        val m = Caches.trackPersist(e.join(leaf, "vec_id"))
-        val a = m.select(col("ccell"), col("scell"), col("vec_id").as("query_id"),
-          col("embedding").as("qe"), col("n2").as("qn2"))
-        val c = m.select(col("ccell"), col("scell"), col("vec_id"),
-          col("embedding").as("ce"), col("n2").as("cn2"))
-        val dup = c.join(a, Seq("ccell", "scell"))
-          .filter(col("vec_id") < col("query_id"))
-          .withColumn("cos",
-            Vectors.cosineFrom(Vectors.dotExact(col("qe"), col("ce")), col("qn2"), col("cn2")))
-          .filter(col("cos") >= lit(0.4))
-          .groupBy("query_id")
-          .agg(
-            min(col("vec_id")).as("kept_by"),
-            count(lit(1)).as("n_dup"),
-            max(col("cos")).as("max_cos"))
-          .withColumnRenamed("query_id", "vec_id")
-        m.select(col("vec_id"))
-          .join(dup, Seq("vec_id"), "left")
-          .select(
-            col("vec_id"),
-            col("kept_by").isNull.cast("long").as("keep"),
-            col("kept_by"), col("n_dup"), col("max_cos"))
+        val m = routeHier(s, d, "resid", e, e)(e)
+        keepLedger(m, cellPairs(m, Seq("ccell", "scell"), _ < _, Nil))
       },
       Some(s"""WITH ${graft.ml.Pca.whitenSql("embeddings", 64, 6, 4, k = 2)},
            $residSql,
-           kparam_h AS (${graft.ml.IvfQuantizer.sqlHierK("embeddings", 64)}),
-           nwh1 AS (SELECT vec_id, n2 FROM nw),
-           ${graft.ml.IvfQuantizer.lloydSqlAtExpr(
-        "(SELECT k FROM kparam_h)", 1, 64, sampleEvery = 4, sfx = "wh1",
-        dimOffset = 0, srcTable = "resid")},
-           gmapw AS (SELECT vec_id, cell AS grp FROM assignedwh1),
-           ${graft.ml.IvfQuantizer.lloydSqlGrouped(
-        "(SELECT k FROM kparam_h)", 1, 64, sampleEvery = 2, sfx = "wh2",
-        gmapCte = "gmapw", normCte = "nw", srcTable = "resid")},
-           m AS (SELECT a.vec_id, a.grp AS ccell, a.cell AS scell, r.embedding
-                 FROM assignedwh2 a JOIN resid r ON r.vec_id = a.vec_id),
-           d AS (SELECT q.vec_id AS query_id, c.vec_id,
-                   ${Vectors.sqlDotExact("q.embedding", "c.embedding", "i.i")} AS dot
-                 FROM m q JOIN m c ON c.ccell = q.ccell AND c.scell = q.scell
-                      AND c.vec_id < q.vec_id,
-                      unnest(generate_series(1, 64)) AS i(i)
-                 GROUP BY 1, 2),
-           s AS (SELECT d.query_id, d.vec_id,
-                   d.dot / nullif(sqrt(nq.n2) * sqrt(nc.n2), CAST(0.0 AS DOUBLE)) AS cos
-                 FROM d JOIN nw nq ON nq.vec_id = d.query_id
-                      JOIN nw nc ON nc.vec_id = d.vec_id),
-           dup AS (SELECT query_id, CAST(min(vec_id) AS BIGINT) AS kept_by,
-                     CAST(count(*) AS BIGINT) AS n_dup, max(cos) AS max_cos
-                   FROM s WHERE cos >= CAST(0.4 AS DOUBLE) GROUP BY 1)
-           SELECT m.vec_id,
-             CAST(CASE WHEN dup.query_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS keep,
-             dup.kept_by, dup.n_dup, dup.max_cos
-           FROM m LEFT JOIN dup ON dup.query_id = m.vec_id""")),
+           ${hierRouteSql("resid", "nw")},
+           ${cellPairSql(Seq("ccell", "scell"), "resid", "nw", "<", Nil)},
+           $keepLedgerSql""")),
 
     QDef(
       "sim_rrf_fusion",
@@ -1428,45 +1382,8 @@ object SimilarityQ {
       // ride per-endpoint windows whose rank filters sit directly over
       // them (WindowGroupLimit map-side pre-prune); pairs persist once and
       // feed all three consumers
-      (s, d) => {
-        val mk = 4
-        val e = t(s, d, "embeddings")
-          .withColumn("n2", Vectors.norm2Exact(col("embedding")))
-        val a = e.filter(pmod(col("vec_id"), lit(2)) === 0)
-          .select(col("label"), col("vec_id").as("src_id"),
-            col("embedding").as("ae"), col("n2").as("an2"))
-        val b = e.filter(pmod(col("vec_id"), lit(2)) === 1)
-          .select(col("label"), col("vec_id").as("tgt_id"),
-            col("embedding").as("be"), col("n2").as("bn2"))
-        val p = Caches.trackPersist(
-          a.join(b, "label")
-            .withColumn("cos", Vectors.cosineFrom(
-              Vectors.dotExact(col("ae"), col("be")), col("an2"), col("bn2")))
-            .select("label", "src_id", "tgt_id", "cos"))
-        val ka = p.withColumn("r", row_number().over(
-            Window.partitionBy("src_id").orderBy(col("cos").desc, col("tgt_id"))))
-          .filter(col("r") <= mk)
-          .groupBy("src_id").agg(Exact.dsumTrunc9(col("cos")).as("ka"))
-        val kb = p.withColumn("r", row_number().over(
-            Window.partitionBy("tgt_id").orderBy(col("cos").desc, col("src_id"))))
-          .filter(col("r") <= mk)
-          .groupBy("tgt_id").agg(Exact.dsumTrunc9(col("cos")).as("kb"))
-        // persisted: both argmax directions consume it — without the cache
-        // each would recompute the two k-NN sum aggregations
-        val m = Caches.trackPersist(
-          p.join(ka, "src_id").join(kb, "tgt_id")
-            .withColumn("margin",
-              col("cos") / ((col("ka") + col("kb")) / lit((2 * mk).toDouble))))
-        val fwd = m.withColumn("rf", row_number().over(
-            Window.partitionBy("src_id").orderBy(col("margin").desc, col("tgt_id"))))
-          .filter(col("rf") === 1)
-        val bwd = m.withColumn("rb", row_number().over(
-            Window.partitionBy("tgt_id").orderBy(col("margin").desc, col("src_id"))))
-          .filter(col("rb") === 1)
-          .select("src_id", "tgt_id")
-        fwd.join(bwd, Seq("src_id", "tgt_id"))
-          .select(col("src_id"), col("tgt_id"), col("label"), col("cos"), col("margin"))
-      },
+      (s, d) => marginMine(
+        t(s, d, "embeddings").withColumn("n2", Vectors.norm2Exact(col("embedding")))),
       Some(s"""WITH $normSql,
             a AS (SELECT label, vec_id AS src_id, embedding AS ae
                   FROM embeddings WHERE vec_id % 2 = 0),
@@ -1565,9 +1482,7 @@ object SimilarityQ {
           .select("query_id", "pick_idx", "vec_id", "mmr_score")
       },
       Some(s"""WITH cand AS (${exactSqlK(10)}),
-            nn AS (SELECT vec_id,
-                CAST(sum(CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE) AS DECIMAL(38,9))) AS DOUBLE) AS n2
-              FROM (SELECT vec_id, unnest(embedding) AS x FROM embeddings) GROUP BY 1),
+            ${normCte("nn")},
             ps AS (SELECT a.query_id, a.vec_id AS a_id, b.vec_id AS b_id,
                      ${Vectors.sqlDotExact("ea.embedding", "eb.embedding", "i.i")} AS dot
                    FROM cand a JOIN cand b
@@ -1728,10 +1643,7 @@ object SimilarityQ {
     * the recall audit.
     */
   private def ivfpqTopk(
-      s: org.apache.spark.sql.SparkSession, d: String,
-      qPred: org.apache.spark.sql.Column = col("vec_id") < 5) = {
-    import org.apache.spark.sql.types.DecimalType
-    val nSub = 8; val dSub = 8; val kk = 8; val se = 2
+      s: SparkSession, d: String, qPred: Column = col("vec_id") < 5) = {
     val e = withNorm(t(s, d, "embeddings"))
     // coarse routing (IVF): fit on the vec_id % 4 sample, assign all
     val rankedC = Caches.trackPersist(
@@ -1743,36 +1655,7 @@ object SimilarityQ {
     val cand = cellsC.join(broadcast(probesC), "ccell")
       .filter(col("vec_id") =!= col("query_id"))
       .select("query_id", "vec_id")
-    // PQ codes + per-query ADC tables (identical machinery to sim_pq)
-    val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-    val slices = (0 until nSub).map(sb =>
-      struct(lit(sb).as("sub"), slice(col("embedding"), sb * dSub + 1, dSub).as("sv")))
-    val es = emb
-      .select(col("vec_id"), explode(array(slices: _*)).as("e"))
-      .select(col("e.sub").as("sub"), col("vec_id"), col("e.sv").as("sv"))
-      .withColumn("sn2", Vectors.norm2Exact(col("sv")))
-    val codesP = Caches.trackPersist(
-      graft.ml.IvfQuantizer.fitAssignFrom(es, "vec_id", "sv", "sn2",
-        ivfFitFor(d, "pq8x8", kk, 1, se, grpCols = Seq("sub"))(es, "sv", "sn2")))
-    val compo = Caches.trackPersist(
-      emb.select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim0", "xf")))
-        .select(
-          col("vec_id"),
-          expr(s"dim0 div $dSub").cast("int").as("sub"),
-          pmod(col("dim0"), lit(dSub)).as("sdim"),
-          col("xf").cast("double").as("x")))
-    val cb = compo.join(codesP, Seq("vec_id", "sub"))
-      .groupBy("sub", "cell", "sdim")
-      .agg(sum(col("x").cast(DecimalType(38, 9))).cast("double").as("sx"))
-    val m = codesP.groupBy("sub", "cell").agg(count(lit(1)).as("m"))
-    val tbl = compo.filter(qPred)
-      .select(col("vec_id").as("query_id"), col("sub"), col("sdim"), col("x").as("qx"))
-      .join(cb, Seq("sub", "sdim"))
-      .groupBy("query_id", "sub", "cell")
-      .agg(sum((col("qx") * col("sx")).cast(DecimalType(38, 9))).cast("double").as("ds"))
-      .join(m, Seq("sub", "cell"))
-      .withColumn("term", col("ds") / col("m").cast("double"))
-      .select("query_id", "sub", "cell", "term")
+    val (codesP, tbl) = pqTables(s, d, qPred)
     // ADC scoring restricted to the routed candidates. Candidate-FIRST
     // join order: attach the bounded (query_id, vec_id) candidate list to
     // the 8 code rows per vector, THEN look each row's term up in the
@@ -1783,85 +1666,26 @@ object SimilarityQ {
     // × queries (8·n·n_q rows) before the candidate filter could bite —
     // at the sampled-audit query count that was the query's dominant
     // shuffle (guide §2.3: shuffle the bounded relation, not the product)
-    val pivots = (0 until nSub).map(sb =>
-      max(when(col("sub") === sb, col("term"))).as(s"t$sb"))
-    val wide = cand.join(codesP, Seq("vec_id"))
-      .join(broadcast(tbl), Seq("query_id", "sub", "cell"))
-      .groupBy("query_id", "vec_id")
-      .agg(pivots.head, pivots.tail: _*)
-    val score = (0 until nSub).map(sb => col(s"t$sb")).reduce(_ + _)
-    wide
-      .withColumn("score", score)
-      .withColumn(
-        "rnk",
-        row_number().over(
-          Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("vec_id")))
-          .cast("long"))
-      .filter(col("rnk") <= 3)
-      .select("query_id", "rnk", "vec_id", "score")
+    pqTop3(pqWide(cand.join(codesP, Seq("vec_id"))
+      .join(broadcast(tbl), Seq("query_id", "sub", "cell"))))
   }
 
   // lazy: declared after `defs`, which captures it during its own init
   private lazy val ivfpqSql: String = ivfpqSqlFor(c => s"$c < 5")
 
   private def ivfpqSqlFor(qWhere: String => String): String = {
-        val nSub = 8; val dSub = 8; val kk = 8; val se = 2
-        // full-vector norms for the coarse fit, under a non-colliding name
-        // (lloydSqlAt(sfx) reads n{sfx}; PQ sub-fits use ns0..ns7)
-        val coarseNorm =
-          """ncq AS (SELECT vec_id,
-               CAST(sum(CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE) AS DECIMAL(38,9))) AS DOUBLE) AS n2
-             FROM (SELECT vec_id, unnest(embedding) AS x FROM embeddings) GROUP BY 1)"""
-        val coarseFit = graft.ml.IvfQuantizer.lloydSqlAt(8, 2, 64, 4, "cq", 0)
-        val cands =
-          s"""candq AS (SELECT vec_id AS query_id, cell FROM cellrankscq
-                       WHERE ${qWhere("vec_id")} AND rn <= 2),
-             cp AS (SELECT c.query_id, a.vec_id FROM candq c
-                    JOIN assignedcq a ON a.cell = c.cell
-                    WHERE a.vec_id <> c.query_id)"""
-        val norms = (0 until nSub).map { sb =>
-          val off = sb * dSub
-          s"""ns$sb AS (SELECT vec_id,
-                CAST(sum(CAST(CAST(embedding[i.i + $off] AS DOUBLE)
-                  * CAST(embedding[i.i + $off] AS DOUBLE) AS DECIMAL(38,9))) AS DOUBLE) AS n2
-              FROM embeddings, unnest(generate_series(1, $dSub)) AS i(i) GROUP BY 1)"""
-        }.mkString(",\n")
-        val fits = (0 until nSub).map { sb =>
-          graft.ml.IvfQuantizer.lloydSqlAt(kk, 1, dSub, se, s"s$sb", sb * dSub)
-        }.mkString(",\n")
-        val perSub = (0 until nSub).map { sb =>
-          s"""cb$sb AS (SELECT a.cell, c.dim, CAST(sum(CAST(c.x AS DECIMAL(38,9))) AS DOUBLE) AS sx
-                FROM comps$sb c JOIN assigneds$sb a ON a.vec_id = c.vec_id GROUP BY 1, 2),
-              m$sb AS (SELECT cell, CAST(count(*) AS BIGINT) AS m FROM assigneds$sb GROUP BY 1),
-              tq$sb AS (SELECT q.vec_id AS query_id, cb.cell,
-                  CAST(sum(CAST(q.x * cb.sx AS DECIMAL(38,9))) AS DOUBLE) AS ds
-                FROM comps$sb q JOIN cb$sb cb ON cb.dim = q.dim
-                WHERE ${qWhere("q.vec_id")} GROUP BY 1, 2),
-              tm$sb AS (SELECT t.query_id, a.vec_id, t.ds / CAST(m.m AS DOUBLE) AS term
-                FROM assigneds$sb a JOIN tq$sb t ON t.cell = a.cell
-                     JOIN m$sb m ON m.cell = a.cell)"""
-        }.mkString(",\n")
-        val allUnion = (0 until nSub)
-          .map(sb => s"SELECT query_id, vec_id, $sb AS sub, term FROM tm$sb")
-          .mkString(" UNION ALL ")
-        val pivot = (0 until nSub)
-          .map(sb => s"max(CASE WHEN sub = $sb THEN term END) AS t$sb")
-          .mkString(", ")
-        val scoreExpr = (0 until nSub).map(sb => s"t$sb").reduce((a, b) => s"($a + $b)")
-        s"""WITH $coarseNorm,
-            $coarseFit,
-            $cands,
-            $norms,
-            $fits,
-            $perSub,
-            allt AS ($allUnion),
-            wide AS (SELECT query_id, vec_id, $pivot FROM allt
-                     JOIN cp USING (query_id, vec_id) GROUP BY 1, 2)
-            SELECT query_id, rnk, vec_id, score FROM (
-              SELECT query_id, vec_id, $scoreExpr AS score,
-                row_number() OVER (PARTITION BY query_id
-                  ORDER BY $scoreExpr DESC, vec_id) AS rnk
-              FROM wide)
-            WHERE rnk <= 3"""
+    val cands =
+      s"""candq AS (SELECT vec_id AS query_id, cell FROM cellrankscq
+                   WHERE ${qWhere("vec_id")} AND rn <= 2),
+         cp AS (SELECT c.query_id, a.vec_id FROM candq c
+                JOIN assignedcq a ON a.cell = c.cell
+                WHERE a.vec_id <> c.query_id)"""
+    // full-vector norms for the coarse fit under a non-colliding name
+    // (lloydSqlAt(sfx) reads n{sfx}; PQ sub-fits use ns0..ns7)
+    s"""WITH ${normCte("ncq")},
+        ${IvfQuantizer.lloydSqlAt(8, 2, 64, 4, "cq", 0)},
+        $cands,
+        ${pqTablesSql(qWhere)},
+        ${pqTop3Sql("allt JOIN cp USING (query_id, vec_id)", "")}"""
   }
 }

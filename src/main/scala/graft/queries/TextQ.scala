@@ -126,17 +126,8 @@ object TextQ {
       // t3 scoring itself is unchanged and the oracle refits inline
       (s, d) => Text.languageIdWith(
         t(s, d, "documents"), "doc_id", "text", Q.langProfiles(s, d)),
-      Some("""WITH tok AS (SELECT doc_id, lang, unnest(string_split(trim(text), ' ')) AS token FROM documents),
-              cnts AS (SELECT lang, token, count(*) AS cnt FROM tok GROUP BY 1, 2),
-              prof AS (SELECT lang AS profile_lang, token FROM
-                        (SELECT lang, token,
-                           row_number() OVER (PARTITION BY lang ORDER BY cnt DESC, token) AS rnk
-                         FROM cnts) WHERE rnk <= 20),
-              sc AS (SELECT t.doc_id, p.profile_lang, CAST(count(*) AS BIGINT) AS score
-                     FROM tok t JOIN prof p ON t.token = p.token GROUP BY 1, 2)
-              SELECT doc_id, profile_lang AS pred_lang, score FROM
-                (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, profile_lang) AS rn
-                 FROM sc) WHERE rn = 1""")),
+      Some(s"""WITH ${Text.languageIdSql(20)}
+              SELECT doc_id, pred_lang, score FROM lid""")),
 
     QDef(
       "m11_classification_metrics",
@@ -153,19 +144,9 @@ object TextQ {
           .join(pred, Seq("doc_id"), "left")
         Stats.classificationMetrics(scored, "actual", "pred_lang")
       },
-      Some("""WITH tok AS (SELECT doc_id, lang, unnest(string_split(trim(text), ' ')) AS token FROM documents),
-              cnts AS (SELECT lang, token, count(*) AS cnt FROM tok GROUP BY 1, 2),
-              prof AS (SELECT lang AS profile_lang, token FROM
-                        (SELECT lang, token,
-                           row_number() OVER (PARTITION BY lang ORDER BY cnt DESC, token) AS rnk
-                         FROM cnts) WHERE rnk <= 20),
-              sc AS (SELECT t.doc_id, p.profile_lang, CAST(count(*) AS BIGINT) AS score
-                     FROM tok t JOIN prof p ON t.token = p.token GROUP BY 1, 2),
-              pr AS (SELECT doc_id, profile_lang AS pred_lang FROM
-                      (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, profile_lang) AS rn
-                       FROM sc) WHERE rn = 1),
-              j AS (SELECT d.lang AS actual, pr.pred_lang
-                    FROM documents d LEFT JOIN pr ON pr.doc_id = d.doc_id),
+      Some(s"""WITH ${Text.languageIdSql(20)},
+              j AS (SELECT d.lang AS actual, lid.pred_lang
+                    FROM documents d LEFT JOIN lid ON lid.doc_id = d.doc_id),
               nt AS (SELECT actual AS class, CAST(count(*) AS BIGINT) AS n_true FROM j GROUP BY 1),
               np AS (SELECT pred_lang AS class, CAST(count(*) AS BIGINT) AS n_pred
                      FROM j WHERE pred_lang IS NOT NULL GROUP BY 1),
@@ -205,34 +186,14 @@ object TextQ {
           .select(col("y"), coalesce(col("score"), lit(0L)).as("s"))
         Stats.binaryAuc(scored, "y", "s")
       },
-      Some("""WITH tok AS (SELECT doc_id, lang, unnest(string_split(trim(text), ' ')) AS token FROM documents),
-              cnts AS (SELECT lang, token, count(*) AS cnt FROM tok GROUP BY 1, 2),
-              prof AS (SELECT lang AS profile_lang, token FROM
-                        (SELECT lang, token,
-                           row_number() OVER (PARTITION BY lang ORDER BY cnt DESC, token) AS rnk
-                         FROM cnts) WHERE rnk <= 20),
-              sc AS (SELECT t.doc_id, p.profile_lang, CAST(count(*) AS BIGINT) AS score
-                     FROM tok t JOIN prof p ON t.token = p.token GROUP BY 1, 2),
+      Some(s"""WITH ${Text.languageScoresSql(20)},
               scored AS (SELECT CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS y,
                            coalesce(s.score, CAST(0 AS BIGINT)) AS s
                          FROM documents d
                          LEFT JOIN (SELECT doc_id, score FROM sc WHERE profile_lang = 'en') s
                            ON s.doc_id = d.doc_id),
-              c AS (SELECT s, CAST(count(*) AS BIGINT) AS cnt, CAST(sum(y) AS BIGINT) AS pos
-                    FROM scored GROUP BY 1),
-              r AS (SELECT *, coalesce(sum(cnt) OVER (ORDER BY s
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), CAST(0 AS BIGINT)) AS below
-                    FROM c),
-              a AS (SELECT sum(CAST(pos AS HUGEINT) * (2 * CAST(below AS HUGEINT) + cnt + 1)) AS r2,
-                      CAST(sum(pos) AS BIGINT) AS n_pos,
-                      CAST(sum(cnt - pos) AS BIGINT) AS n_neg
-                    FROM r)
-              SELECT n_pos, n_neg,
-                CASE WHEN n_pos > 0 AND n_neg > 0
-                     THEN CAST(r2 - CAST(n_pos AS HUGEINT) * (n_pos + 1) AS DOUBLE)
-                          / CAST(CAST(n_pos AS HUGEINT) * n_neg * 2 AS DOUBLE)
-                     END AS auc
-              FROM a""")),
+              ${Stats.binaryAucSql("scored")}
+              SELECT n_pos, n_neg, auc FROM aucs""")),
 
     QDef(
       "m12b_auc_quantized",
@@ -254,21 +215,8 @@ object TextQ {
               scored AS (SELECT CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS y,
                            CAST(floor(q.quality_score * 1000) AS BIGINT) AS s
                          FROM qual q JOIN documents d ON d.doc_id = q.doc_id),
-              c AS (SELECT s, CAST(count(*) AS BIGINT) AS cnt, CAST(sum(y) AS BIGINT) AS pos
-                    FROM scored GROUP BY 1),
-              r AS (SELECT *, coalesce(sum(cnt) OVER (ORDER BY s
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), CAST(0 AS BIGINT)) AS below
-                    FROM c),
-              a AS (SELECT sum(CAST(pos AS HUGEINT) * (2 * CAST(below AS HUGEINT) + cnt + 1)) AS r2,
-                      CAST(sum(pos) AS BIGINT) AS n_pos,
-                      CAST(sum(cnt - pos) AS BIGINT) AS n_neg
-                    FROM r)
-              SELECT n_pos, n_neg,
-                CASE WHEN n_pos > 0 AND n_neg > 0
-                     THEN CAST(r2 - CAST(n_pos AS HUGEINT) * (n_pos + 1) AS DOUBLE)
-                          / CAST(CAST(n_pos AS HUGEINT) * n_neg * 2 AS DOUBLE)
-                     END AS auc
-              FROM a""")),
+              ${Stats.binaryAucSql("scored")}
+              SELECT n_pos, n_neg, auc FROM aucs""")),
 
     QDef(
       "m13_macro_auc",
@@ -293,37 +241,14 @@ object TextQ {
             coalesce(col("score"), lit(0L)).as("s"))
         Stats.macroAuc(scored, "class", "y", "s")
       },
-      Some("""WITH tok AS (SELECT doc_id, lang, unnest(string_split(trim(text), ' ')) AS token FROM documents),
-              cnts AS (SELECT lang, token, count(*) AS cnt FROM tok GROUP BY 1, 2),
-              prof AS (SELECT lang AS profile_lang, token FROM
-                        (SELECT lang, token,
-                           row_number() OVER (PARTITION BY lang ORDER BY cnt DESC, token) AS rnk
-                         FROM cnts) WHERE rnk <= 20),
-              sc AS (SELECT t.doc_id, p.profile_lang, CAST(count(*) AS BIGINT) AS score
-                     FROM tok t JOIN prof p ON t.token = p.token GROUP BY 1, 2),
+      Some(s"""WITH ${Text.languageScoresSql(20)},
               cls AS (SELECT DISTINCT lang AS class FROM documents),
               grid AS (SELECT c.class,
                          CASE WHEN d.lang = c.class THEN 1 ELSE 0 END AS y,
                          coalesce(s.score, CAST(0 AS BIGINT)) AS s
                        FROM documents d CROSS JOIN cls c
                        LEFT JOIN sc s ON s.doc_id = d.doc_id AND s.profile_lang = c.class),
-              c2 AS (SELECT class, s, CAST(count(*) AS BIGINT) AS cnt,
-                       CAST(sum(y) AS BIGINT) AS pos
-                     FROM grid GROUP BY 1, 2),
-              r AS (SELECT *, coalesce(sum(cnt) OVER (PARTITION BY class ORDER BY s
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), CAST(0 AS BIGINT)) AS below
-                    FROM c2),
-              a AS (SELECT class,
-                      sum(CAST(pos AS HUGEINT) * (2 * CAST(below AS HUGEINT) + cnt + 1)) AS r2,
-                      CAST(sum(pos) AS BIGINT) AS n_pos,
-                      CAST(sum(cnt - pos) AS BIGINT) AS n_neg
-                    FROM r GROUP BY 1),
-              per AS (SELECT class, n_pos, n_neg,
-                        CASE WHEN n_pos > 0 AND n_neg > 0
-                             THEN CAST(r2 - CAST(n_pos AS HUGEINT) * (n_pos + 1) AS DOUBLE)
-                                  / CAST(CAST(n_pos AS HUGEINT) * n_neg * 2 AS DOUBLE)
-                             END AS auc
-                      FROM a),
+              ${Stats.binaryAucSql("grid", Seq("class"))},
               mac AS (SELECT '*' AS class,
                         CAST(sum(n_pos) AS BIGINT) AS n_pos,
                         CAST(sum(n_neg) AS BIGINT) AS n_neg,
@@ -331,8 +256,8 @@ object TextQ {
                              THEN CAST(sum(CAST(floor(auc * CAST(1000000000 AS DOUBLE)) AS BIGINT)) AS DOUBLE)
                                   / (CAST(count(auc) AS DOUBLE) * CAST(1000000000 AS DOUBLE))
                              END AS auc
-                      FROM per)
-              SELECT class, n_pos, n_neg, auc FROM per
+                      FROM aucs)
+              SELECT class, n_pos, n_neg, auc FROM aucs
               UNION ALL SELECT class, n_pos, n_neg, auc FROM mac""")),
 
     QDef(
@@ -730,23 +655,8 @@ object TextQ {
                           / CAST(10000 AS DOUBLE) AS align_q
                       FROM align a JOIN documents d ON d.doc_id = a.doc_id
                       WHERE a.align_score IS NOT NULL),
-               r AS (SELECT source, align_q AS value,
-                       row_number() OVER (PARTITION BY source ORDER BY align_q) AS rn,
-                       count(*) OVER (PARTITION BY source) AS n
-                     FROM sq),
-               qs AS (SELECT CAST(q AS DOUBLE) AS q
-                      FROM (VALUES (0.1), (0.25), (0.5), (0.75), (0.9)) t(q)),
-               p AS (SELECT r.source, qs.q, r.value, r.rn,
-                       CAST(1.0 AS DOUBLE) + CAST(n - 1 AS DOUBLE) * qs.q AS pos
-                     FROM r CROSS JOIN qs)
-               SELECT source, q,
-                 min(CASE WHEN rn = CAST(floor(pos) AS BIGINT) THEN value END)
-                 + (min(CASE WHEN rn = CAST(ceil(pos) AS BIGINT) THEN value END)
-                    - min(CASE WHEN rn = CAST(floor(pos) AS BIGINT) THEN value END))
-                   * min(pos - floor(pos)) AS q_value
-               FROM p WHERE rn = CAST(floor(pos) AS BIGINT)
-                  OR rn = CAST(ceil(pos) AS BIGINT)
-               GROUP BY 1, 2""")),
+               ${Stats.exactQuantilesSql("sq", "source", "align_q", Seq(0.1, 0.25, 0.5, 0.75, 0.9))}
+               SELECT source, q, q_value FROM quant""")),
 
     QDef(
       "mm9_alignment_keep_calibrated",
@@ -787,22 +697,8 @@ object TextQ {
                           / CAST(10000 AS DOUBLE) AS align_q
                       FROM align a JOIN documents d ON d.doc_id = a.doc_id
                       WHERE a.align_score IS NOT NULL),
-               r AS (SELECT source, align_q AS value,
-                       row_number() OVER (PARTITION BY source ORDER BY align_q) AS rn,
-                       count(*) OVER (PARTITION BY source) AS n
-                     FROM sq),
-               p AS (SELECT r.source, r.value, r.rn,
-                       CAST(1.0 AS DOUBLE) + CAST(n - 1 AS DOUBLE)
-                         * CAST(0.1 AS DOUBLE) AS pos
-                     FROM r),
-               tau AS (SELECT source,
-                         min(CASE WHEN rn = CAST(floor(pos) AS BIGINT) THEN value END)
-                         + (min(CASE WHEN rn = CAST(ceil(pos) AS BIGINT) THEN value END)
-                            - min(CASE WHEN rn = CAST(floor(pos) AS BIGINT) THEN value END))
-                           * min(pos - floor(pos)) AS tau
-                       FROM p WHERE rn = CAST(floor(pos) AS BIGINT)
-                          OR rn = CAST(ceil(pos) AS BIGINT)
-                       GROUP BY 1)
+               ${Stats.exactQuantilesSql("sq", "source", "align_q", Seq(0.1))},
+               tau AS (SELECT source, q_value AS tau FROM quant)
                SELECT d.doc_id, d.source, a.align_score, tau.tau,
                  CAST(coalesce(a.align_score >= tau.tau, FALSE) AS BIGINT) AS keep
                FROM documents d
@@ -1339,14 +1235,7 @@ object TextQ {
           count(lit(1)).as("n_langs"),
           (-Exact.dsumTrunc9(col("h_term"))).as("lang_entropy"))
       },
-      Some(s"""WITH tok AS (SELECT doc_id, lang, unnest(string_split(trim(text), ' ')) AS token FROM documents),
-           cnts AS (SELECT lang, token, count(*) AS cnt FROM tok GROUP BY 1, 2),
-           prof AS (SELECT lang AS profile_lang, token FROM
-                     (SELECT lang, token,
-                        row_number() OVER (PARTITION BY lang ORDER BY cnt DESC, token) AS rnk
-                      FROM cnts) WHERE rnk <= 20),
-           sc AS (SELECT t.doc_id, p.profile_lang, CAST(count(*) AS BIGINT) AS score
-                  FROM tok t JOIN prof p ON t.token = p.token GROUP BY 1, 2),
+      Some(s"""WITH ${Text.languageScoresSql(20)},
            tt AS (SELECT doc_id, score, sum(score) OVER (PARTITION BY doc_id) AS t FROM sc),
            p2 AS (SELECT doc_id, CAST(score AS DOUBLE) / CAST(t AS DOUBLE) AS p FROM tt)
            SELECT doc_id, CAST(count(*) AS BIGINT) AS n_langs,

@@ -282,19 +282,6 @@ object Streaming {
       .select(col(idCol), col("n_bands"))
   }
 
-  /** Running (cumulative) per-key aggregate — the streaming analog of the
-    * reference's partial_fit scaler accumulation (A10): counts/sums update
-    * incrementally per micro-batch.
-    */
-  def runningStats(events: DataFrame, keyCol: String): DataFrame =
-    events
-      .groupBy(col(keyCol))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("value")).as("sum_value"),
-        min(col("value")).as("min_value"),
-        max(col("value")).as("max_value"))
-
   /** Input/state/output rows of [[tokenBudgetStream]] (top-level case
     * classes — Spark's state encoder cannot reflect method-local ones).
     */

@@ -6,6 +6,27 @@ import org.apache.spark.sql.functions._
 class DedupTextSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The exploded-rows MinHash formulation (shuffles on id) that
+    * `Dedup.minhashSignaturesLocal` is checked against: one md5 per
+    * shingle, h1/h2 the little-endian halves, minimum of (h1 + j·h2) mod
+    * 2⁶⁴ per j as a zero-padded 20-digit decimal. DECIMAL(38,0) arithmetic
+    * keeps the mod-2⁶⁴ values exact (h1 + 7·h2 < 2⁶⁷ ≪ 10³⁸).
+    */
+  private def minhashSignatures(
+      sh: org.apache.spark.sql.DataFrame, idCol: String, nHashes: Int) = {
+    def le64hex(off: Int) = {
+      val pairs = (7 to 0 by -1).map(i => s"substr(__md, ${off + 2 * i + 1}, 2)")
+      s"CAST(conv(concat(${pairs.mkString(", ")}), 16, 10) AS DECIMAL(38,0))"
+    }
+    val two64 = "CAST('18446744073709551616' AS DECIMAL(38,0))"
+    val withH = sh.withColumn("__md", md5(col("shingle")))
+      .withColumn("__h1", expr(le64hex(16)))
+      .withColumn("__h2", expr(le64hex(0)))
+    def mh(j: Int) =
+      lpad(min(expr(s"(__h1 + $j * __h2) % $two64")).cast("string"), 20, "0").as(s"mh_$j")
+    withH.groupBy(col(idCol)).agg(mh(0), (1 until nHashes).map(mh): _*)
+  }
+
   private val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog"),
     (2L, "the quick brown fox jumps over the lazy cat"), // near-dup of 1
@@ -30,7 +51,7 @@ class DedupTextSpec extends SparkSpec {
 
   test("array-local minhash signatures equal the exploded-groupBy formulation") {
     val sh = Text.shingleSet(docs, "doc_id", "text", 3)
-    val viaRows = Dedup.minhashSignatures(sh, "doc_id", 8).orderBy("doc_id").collect().toSeq
+    val viaRows = minhashSignatures(sh, "doc_id", 8).orderBy("doc_id").collect().toSeq
     val viaLocal = Dedup.minhashSignaturesLocal(docs, "doc_id", "text", 3, 8)
       .orderBy("doc_id").collect().toSeq
     assert(viaRows == viaLocal)

@@ -74,4 +74,17 @@ class SemanticDedupSpec extends graft.SparkSpec {
     // ledger must reach the same drop/keep/attribution verdicts
     checkLedger("sim_semantic_dedup_hier")
   }
+
+  // The whitened routings dedup the axis-removed residuals of the k = 2
+  // PCA fit. A numpy replay of that fit on this fixture (sample vec_id % 4,
+  // power iteration from e0, 6 rounds per component, one deflation) puts
+  // the planted pair's residual cosine at 0.9999 and every other pair's at
+  // most 0.21 (ids 4 and 48), so the same verdicts must come out.
+  test("the whitened flat routing drops the same planted near-duplicate") {
+    checkLedger("sim_semantic_dedup_whitened")
+  }
+
+  test("the whitened hierarchical routing drops the same planted near-duplicate") {
+    checkLedger("sim_semantic_dedup_whitened_hier")
+  }
 }
