@@ -190,6 +190,27 @@ object ProbeScale {
     ((System.nanoTime() - t0) / 1e9, s"family=$fam [labelled,clusters]=${r(0)}")
   }
 
+  /** Synthetic documents for the alignment probes: n docs (doc_id 0..n−1)
+    * of 20 tokens from a 50k vocabulary.
+    */
+  private def synthDocs(spark: SparkSession, n: Long): DataFrame =
+    spark.range(n)
+      .select(
+        col("id").as("doc_id"),
+        concat_ws(" ", transform(sequence(lit(0), lit(19)),
+          i => concat(lit("w"), pmod(hash(col("id"), i), lit(50000))))).as("text"))
+
+  /** n synthetic 64-dim embeddings hashed from their row id, keyed
+    * `vec_id = idStep·id`.
+    */
+  private def synthEmbeddings(spark: SparkSession, n: Long, idStep: Long = 1L): DataFrame =
+    spark.range(n)
+      .select(
+        (col("id") * idStep).as("vec_id"),
+        transform(sequence(lit(1), lit(64)),
+          i => (pmod(hash(col("id"), i, lit(7)), lit(1000)).cast("double") / 500.0 - 1.0)
+            .cast("float")).as("embedding"))
+
   /** The mm7 cross-modal alignment gate over synthetic paired tables: n
     * docs of 20 tokens from a 50k vocabulary, n 64-dim hash-derived
     * embeddings on the shared id. Claim under test: LINEAR in n — the
@@ -198,22 +219,10 @@ object ProbeScale {
     * agg each; nothing corpus × corpus anywhere.
     */
   private def align(spark: SparkSession, n: Long): (Double, String) = {
-    val docs = spark.range(n)
-      .select(
-        col("id").as("doc_id"),
-        concat_ws(" ", transform(sequence(lit(0), lit(19)),
-          i => concat(lit("w"), pmod(hash(col("id"), i), lit(50000))))).as("text"))
-      .localCheckpoint(true)
-    val embs = spark.range(n)
-      .select(
-        col("id").as("vec_id"),
-        transform(sequence(lit(1), lit(64)),
-          i => (pmod(hash(col("id"), i, lit(7)), lit(1000)).cast("double") / 500.0 - 1.0)
-            .cast("float")).as("embedding"))
-      .localCheckpoint(true)
+    val docs = synthDocs(spark, n).localCheckpoint(true)
+    val embs = synthEmbeddings(spark, n).localCheckpoint(true)
     val t0 = System.nanoTime()
-    val al = graft.ops.Multimodal.alignmentScores(
-      docs, embs, "doc_id", "text", "vec_id", "embedding", 64)
+    val al = graft.queries.TextQ.alignmentScores(docs, embs)
     val r = al.agg(
       count(lit(1)),
       sum(when(col("align_score") >= 0, 1L).otherwise(0L))).collect()
@@ -227,34 +236,20 @@ object ProbeScale {
     * n docs with ids 0..n−1, n embeddings keyed vec_id = 2·id — so only
     * EVEN doc ids find a paired embedding (n/2 pairs), half the docs have
     * no pair at all, and half the embeddings (vec_id ≥ n) match no doc.
-    * Runs the full mm7 ledger (docs LEFT JOIN scores, fail-closed keep).
-    * Claims under test: (1) the unpaired-doc path is the documented
+    * Runs the registered mm7 ledger (docs LEFT JOIN scores, fail-closed
+    * keep). Claims under test: (1) the unpaired-doc path is the documented
     * fail-closed NULL → keep=0, counted in the note; (2) cost stays the
     * parallel-id probe's — the dot is still one equi-join on the id
     * (co-partitioned/bucketed at 100 TB), and missing ids only SHRINK the
     * join output; nothing degenerates toward corpus × corpus.
     */
   private def alignMiss(spark: SparkSession, n: Long): (Double, String) = {
-    val docs = spark.range(n)
-      .select(
-        col("id").as("doc_id"),
-        concat_ws(" ", transform(sequence(lit(0), lit(19)),
-          i => concat(lit("w"), pmod(hash(col("id"), i), lit(50000))))).as("text"))
-      .localCheckpoint(true)
-    val embs = spark.range(n)
-      .select(
-        (col("id") * 2L).as("vec_id"),
-        transform(sequence(lit(1), lit(64)),
-          i => (pmod(hash(col("id"), i, lit(7)), lit(1000)).cast("double") / 500.0 - 1.0)
-            .cast("float")).as("embedding"))
-      .localCheckpoint(true)
+    import graft.queries.TextQ
+    val docs = synthDocs(spark, n).localCheckpoint(true)
+    val embs = synthEmbeddings(spark, n, idStep = 2L).localCheckpoint(true)
     val t0 = System.nanoTime()
-    val al = graft.ops.Multimodal.alignmentScores(
-      docs, embs, "doc_id", "text", "vec_id", "embedding", 64)
-    val ledger = docs.select(col("doc_id"))
-      .join(al, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("align_score") >= lit(0.0d), lit(false)).cast("long").as("keep"))
+    val ledger = TextQ.alignmentLedger(docs, TextQ.alignmentScores(docs, embs))
+      .select(col("doc_id"), TextQ.keepAt(lit(0.0d)))
     val r = ledger.agg(
       count(lit(1)), sum(col("keep")),
       sum(when(col("keep") === 0L, 1L).otherwise(0L))).collect()
@@ -273,12 +268,7 @@ object ProbeScale {
     * cost model, measured instead of argued.
     */
   private def ivfServe(spark: SparkSession, n: Long): (Double, String) = {
-    val e = spark.range(n)
-      .select(
-        col("id").as("vec_id"),
-        transform(sequence(lit(1), lit(64)),
-          i => (pmod(hash(col("id"), i, lit(7)), lit(1000)).cast("double") / 500.0 - 1.0)
-            .cast("float")).as("embedding"))
+    val e = synthEmbeddings(spark, n)
       .withColumn("n2", graft.ops.Vectors.norm2Exact(col("embedding")))
       .localCheckpoint(true)
     val t0 = System.nanoTime()
@@ -317,7 +307,7 @@ object ProbeScale {
     val seeds = nodes.filter(col("node_id") === 0L)
     val t0 = System.nanoTime()
     val pr = graft.ops.Graph.personalizedPagerankScaled(
-      pairs, nodes, seeds, "a", "b", "node_id", iters = 5, checkpointEvery = 2)
+      pairs, nodes, seeds, "a", "b", "node_id", iters = 5)
     val r = pr.agg(sum(col("rank_scaled")), max(col("rank_scaled"))).collect()
     graft.ops.Caches.releaseAll()
     pairs.unpersist(true); nodes.unpersist(true)

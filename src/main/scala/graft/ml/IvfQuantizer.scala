@@ -63,7 +63,7 @@ object IvfQuantizer {
 
   /** DuckDB scalar-subquery fragment mirroring [[adaptiveK]] — yields one
     * row `(k)`; use as a CTE body (`kparam AS (...)`) and reference it as
-    * `(SELECT k FROM kparam)` in [[lloydSqlAtExpr]]'s `kExpr`.
+    * `(SELECT k FROM kparam)` in [[lloydSql]]'s `kExpr`.
     */
   def sqlAdaptiveK(table: String, targetCell: Long, kmin: Int = 2): String =
     s"SELECT greatest($kmin, (count(*) + ${targetCell - 1}) // $targetCell) AS k FROM $table"
@@ -454,107 +454,49 @@ object IvfQuantizer {
     cent
   }
 
-  /** DuckDB CTE chain mirroring [[fitCollect]] + [[fitRankedFrom]]
-    * exactly: comp → cent0 → (ns_t, dots_t, ranked_t, a_t, cent_{t+1})* →
-    * `assigned(vec_id, cell)` (final rank 1) and `cellranks(vec_id, cell,
-    * rn)` (the full final
-    * ranking — probe sets come from rn ≤ nprobe). Expects a CTE
-    * `n(vec_id, n2)` with the exact squared norms in scope, and the table
-    * `embeddings(vec_id, embedding)` with `dims` components.
+  /** DuckDB CTE chain mirroring [[lloydFit]] + the final full-corpus
+    * ranking of [[fitRankedFrom]] exactly: comp → cent0 → (ns_t, dots_t,
+    * ranked_t, a_t, cent_{t+1})* → `assigned$sfx(vec_id, [grp,] cell)`
+    * (final rank 1) and `cellranks$sfx(vec_id, [grp,] cell, rn)` (the full
+    * final ranking — probe sets come from rn ≤ nprobe). Every CTE name
+    * carries `sfx`, so several fits compose in one WITH chain.
+    *
+    *   - `src` is any (vec_id, embedding) relation in scope — a CTE of
+    *     TRANSFORMED vectors (whitened residuals) fits the same chain; the
+    *     fit reads `dims` components starting at `dimOffset` (a
+    *     product-quantization slice).
+    *   - `norm` names the (vec_id, n2) CTE of the exact squared norms of
+    *     what is fitted (default `n$sfx`).
+    *   - `kExpr` is a SQL scalar: a literal, or an [[adaptiveK]] /
+    *     [[hierK]] scalar subquery such as `(SELECT k FROM kparam)`.
+    *   - `gmap` names a (vec_id, grp) CTE for a GROUPED fit (empty: no
+    *     group); every Lloyd CTE then carries `grp`.
+    *   - Seeds: the k lowest-id sample vectors — the id cutoff
+    *     `vec_id < kExpr·sampleEvery` on a dense corpus, or with
+    *     `seedPerGroup` each group's k lowest ids (row_number, exactly the
+    *     Spark rule).
     */
-  def lloydSql(k: Int, iters: Int, dims: Int, sampleEvery: Int = 1): String =
-    lloydSqlAt(k, iters, dims, sampleEvery, "", 0)
-
-  /** [[lloydSql]] generalized to a vector SLICE (product-quantization
-    * subspaces): reads `dims` components starting at `dimOffset`, and
-    * suffixes every CTE name with `sfx` so several fits compose in one
-    * WITH chain. Expects `n$sfx(vec_id, n2)` — the slice's exact squared
-    * norms — in scope; emits `assigned$sfx` / `cellranks$sfx` /
-    * `comp$sfx`.
-    */
-  def lloydSqlAt(
-      k: Int,
-      iters: Int,
-      dims: Int,
-      sampleEvery: Int,
-      sfx: String,
-      dimOffset: Int): String =
-    lloydSqlAtExpr(k.toString, iters, dims, sampleEvery, sfx, dimOffset)
-
-  /** [[lloydSqlAt]] with the cell count as a SQL scalar EXPRESSION instead
-    * of a compile-time literal — k only ever enters the chain through the
-    * seed cutoff `vec_id < k·sampleEvery`, so an [[adaptiveK]] scalar
-    * subquery (e.g. `(SELECT k FROM kparam)`) slots in directly and the
-    * rest of the Lloyd chain is k-agnostic.
-    */
-  def lloydSqlAtExpr(
+  def lloydSql(
       kExpr: String,
       iters: Int,
       dims: Int,
-      sampleEvery: Int,
-      sfx: String,
-      dimOffset: Int,
-      srcTable: String = "embeddings"): String = {
-    // srcTable may be any (vec_id, embedding) relation in scope — a CTE of
-    // TRANSFORMED vectors (whitened residuals, slices) fits the same chain
-    val sb = new StringBuilder
-    sb.append(s"""comp$sfx AS (SELECT vec_id, i.i AS dim, CAST(embedding[i.i + $dimOffset] AS DOUBLE) AS x
-           FROM $srcTable, unnest(generate_series(1, $dims)) AS i(i)),
-         fcomp$sfx AS (SELECT * FROM comp$sfx WHERE vec_id % $sampleEvery = 0),
-         cent${sfx}0 AS (SELECT vec_id AS cell, dim, CAST(CAST(x AS DECIMAL(38,9)) AS DOUBLE) AS s
-                   FROM fcomp$sfx WHERE vec_id < $kExpr * $sampleEvery)""")
-    for (t <- 0 to iters) {
-      // Lloyd passes (t < iters) scan only the fit sample; the final pass
-      // (t = iters) assigns the FULL corpus against the fitted centroids
-      val compT = if (t < iters) s"fcomp$sfx" else s"comp$sfx"
-      sb.append(s""",
-         ns$sfx$t AS (SELECT cell, CAST(sum(CAST(s * s AS DECIMAL(38,4))) AS DOUBLE) AS ns2
-                  FROM cent$sfx$t GROUP BY 1),
-         dots$sfx$t AS (SELECT c.vec_id, ct.cell, CAST(sum(CAST(c.x * ct.s AS DECIMAL(38,9))) AS DOUBLE) AS dot
-                    FROM $compT c JOIN cent$sfx$t ct ON ct.dim = c.dim GROUP BY 1, 2),
-         ranked$sfx$t AS (SELECT d.vec_id, d.cell, row_number() OVER (PARTITION BY d.vec_id ORDER BY
-                    d.dot / nullif(sqrt(n$sfx.n2) * sqrt(ns.ns2), CAST(0.0 AS DOUBLE)) DESC, d.cell) AS rn
-                  FROM dots$sfx$t d JOIN n$sfx ON n$sfx.vec_id = d.vec_id JOIN ns$sfx$t ns ON ns.cell = d.cell),
-         a$sfx$t AS (SELECT vec_id, cell FROM ranked$sfx$t WHERE rn = 1)""")
-      if (t < iters) sb.append(s""",
-         cent$sfx${t + 1} AS (SELECT a.cell, c.dim, CAST(sum(CAST(c.x AS DECIMAL(38,9))) AS DOUBLE) AS s
-                          FROM fcomp$sfx c JOIN a$sfx$t a ON a.vec_id = c.vec_id GROUP BY 1, 2)""")
-    }
-    sb.append(s""",
-         assigned$sfx AS (SELECT vec_id, CAST(cell AS BIGINT) AS cell FROM a$sfx$iters),
-         cellranks$sfx AS (SELECT vec_id, CAST(cell AS BIGINT) AS cell, CAST(rn AS BIGINT) AS rn
-                       FROM ranked$sfx$iters)""")
-    sb.toString
-  }
-
-  /** DuckDB CTE chain mirroring the GROUPED fit with PER-GROUP seeds
-    * (`fitCollect(grpCols, seedPerGroup = true)` — the level-2 stage of
-    * [[fitHierCollect]]): every Lloyd CTE carries the vector's group, the
-    * seeds are each group's k lowest-id fit-sample vectors (row_number,
-    * exactly the Spark rule), and the chain emits
-    * `assigned$sfx(vec_id, grp, cell)` / `cellranks$sfx`. Expects two CTEs
-    * in scope: `$gmapCte(vec_id, grp)` — the group of every vector (for
-    * the hierarchical fit: level 1's `assigned`) — and `$normCte(vec_id,
-    * n2)` with the exact squared norms. `kExpr` is a SQL scalar (literal
-    * or [[hierK]] subquery).
-    */
-  def lloydSqlGrouped(
-      kExpr: String,
-      iters: Int,
-      dims: Int,
-      sampleEvery: Int,
-      sfx: String,
-      gmapCte: String,
-      normCte: String,
-      srcTable: String = "embeddings"): String = {
-    // srcTable may be any (vec_id, embedding) relation in scope — a CTE of
-    // TRANSFORMED vectors (whitened residuals) fits the same chain
-    val sb = new StringBuilder
-    sb.append(s"""comp$sfx AS (SELECT gm.grp, e.vec_id, i.i AS dim, CAST(e.embedding[i.i] AS DOUBLE) AS x
-           FROM $srcTable e JOIN $gmapCte gm ON gm.vec_id = e.vec_id,
-                unnest(generate_series(1, $dims)) AS i(i)),
-         fcomp$sfx AS (SELECT * FROM comp$sfx WHERE vec_id % $sampleEvery = 0),
-         seed$sfx AS (SELECT grp, vec_id FROM (
+      sampleEvery: Int = 1,
+      sfx: String = "",
+      dimOffset: Int = 0,
+      src: String = "embeddings",
+      norm: String = "",
+      gmap: String = "",
+      seedPerGroup: Boolean = false): String = {
+    require(!seedPerGroup || gmap.nonEmpty, "seedPerGroup needs gmap")
+    val nrm = if (norm.isEmpty) s"n$sfx" else norm
+    // the group column in a select list, and in a join condition
+    def g(t: String) = if (gmap.isEmpty) "" else s"$t.grp, "
+    def gEq(a: String, b: String) = if (gmap.isEmpty) "" else s"$a.grp = $b.grp AND "
+    def by(n: Int) = (1 to n + (if (gmap.isEmpty) 0 else 1)).mkString(", ")
+    val gJoin = if (gmap.isEmpty) "" else s" JOIN $gmap gm ON gm.vec_id = e.vec_id"
+    val seeds =
+      if (seedPerGroup)
+        s"""seed$sfx AS (SELECT grp, vec_id FROM (
                  SELECT grp, vec_id,
                    row_number() OVER (PARTITION BY grp ORDER BY vec_id) AS srn
                  FROM (SELECT DISTINCT grp, vec_id FROM fcomp$sfx))
@@ -562,31 +504,43 @@ object IvfQuantizer {
          cent${sfx}0 AS (SELECT f.grp, f.vec_id AS cell, f.dim,
                    CAST(CAST(f.x AS DECIMAL(38,9)) AS DOUBLE) AS s
                  FROM fcomp$sfx f JOIN seed$sfx sd
-                   ON sd.grp = f.grp AND sd.vec_id = f.vec_id)""")
+                   ON sd.grp = f.grp AND sd.vec_id = f.vec_id)"""
+      else
+        s"""cent${sfx}0 AS (SELECT ${g("f")}f.vec_id AS cell, f.dim,
+                   CAST(CAST(f.x AS DECIMAL(38,9)) AS DOUBLE) AS s
+                 FROM fcomp$sfx f WHERE f.vec_id < $kExpr * $sampleEvery)"""
+    val sb = new StringBuilder
+    sb.append(s"""comp$sfx AS (SELECT ${g("gm")}e.vec_id, i.i AS dim,
+                CAST(e.embedding[i.i + $dimOffset] AS DOUBLE) AS x
+           FROM $src e$gJoin, unnest(generate_series(1, $dims)) AS i(i)),
+         fcomp$sfx AS (SELECT * FROM comp$sfx WHERE vec_id % $sampleEvery = 0),
+         $seeds""")
     for (t <- 0 to iters) {
+      // Lloyd passes (t < iters) scan only the fit sample; the final pass
+      // (t = iters) assigns the FULL corpus against the fitted centroids
       val compT = if (t < iters) s"fcomp$sfx" else s"comp$sfx"
       sb.append(s""",
-         ns$sfx$t AS (SELECT grp, cell, CAST(sum(CAST(s * s AS DECIMAL(38,4))) AS DOUBLE) AS ns2
-                  FROM cent$sfx$t GROUP BY 1, 2),
-         dots$sfx$t AS (SELECT c.grp, c.vec_id, ct.cell,
+         ns$sfx$t AS (SELECT ${g("ct")}ct.cell, CAST(sum(CAST(ct.s * ct.s AS DECIMAL(38,4))) AS DOUBLE) AS ns2
+                  FROM cent$sfx$t ct GROUP BY ${by(1)}),
+         dots$sfx$t AS (SELECT ${g("c")}c.vec_id, ct.cell,
                     CAST(sum(CAST(c.x * ct.s AS DECIMAL(38,9))) AS DOUBLE) AS dot
-                  FROM $compT c JOIN cent$sfx$t ct ON ct.grp = c.grp AND ct.dim = c.dim
-                  GROUP BY 1, 2, 3),
-         ranked$sfx$t AS (SELECT d.grp, d.vec_id, d.cell, row_number() OVER (PARTITION BY d.vec_id
+                  FROM $compT c JOIN cent$sfx$t ct ON ${gEq("ct", "c")}ct.dim = c.dim
+                  GROUP BY ${by(2)}),
+         ranked$sfx$t AS (SELECT ${g("d")}d.vec_id, d.cell, row_number() OVER (PARTITION BY d.vec_id
                     ORDER BY d.dot / nullif(sqrt(nn.n2) * sqrt(ns.ns2), CAST(0.0 AS DOUBLE)) DESC,
                       d.cell) AS rn
-                  FROM dots$sfx$t d JOIN $normCte nn ON nn.vec_id = d.vec_id
-                       JOIN ns$sfx$t ns ON ns.grp = d.grp AND ns.cell = d.cell),
-         a$sfx$t AS (SELECT grp, vec_id, cell FROM ranked$sfx$t WHERE rn = 1)""")
+                  FROM dots$sfx$t d JOIN $nrm nn ON nn.vec_id = d.vec_id
+                       JOIN ns$sfx$t ns ON ${gEq("ns", "d")}ns.cell = d.cell),
+         a$sfx$t AS (SELECT ${g("r")}r.vec_id, r.cell FROM ranked$sfx$t r WHERE r.rn = 1)""")
       if (t < iters) sb.append(s""",
-         cent$sfx${t + 1} AS (SELECT a.grp, a.cell, c.dim, CAST(sum(CAST(c.x AS DECIMAL(38,9))) AS DOUBLE) AS s
+         cent$sfx${t + 1} AS (SELECT ${g("a")}a.cell, c.dim, CAST(sum(CAST(c.x AS DECIMAL(38,9))) AS DOUBLE) AS s
                           FROM fcomp$sfx c JOIN a$sfx$t a
-                            ON a.grp = c.grp AND a.vec_id = c.vec_id GROUP BY 1, 2, 3)""")
+                            ON ${gEq("a", "c")}a.vec_id = c.vec_id GROUP BY ${by(2)})""")
     }
     sb.append(s""",
-         assigned$sfx AS (SELECT vec_id, grp, CAST(cell AS BIGINT) AS cell FROM a$sfx$iters),
-         cellranks$sfx AS (SELECT vec_id, grp, CAST(cell AS BIGINT) AS cell, CAST(rn AS BIGINT) AS rn
-                       FROM ranked$sfx$iters)""")
+         assigned$sfx AS (SELECT r.vec_id, ${g("r")}CAST(r.cell AS BIGINT) AS cell FROM a$sfx$iters r),
+         cellranks$sfx AS (SELECT r.vec_id, ${g("r")}CAST(r.cell AS BIGINT) AS cell, CAST(r.rn AS BIGINT) AS rn
+                       FROM ranked$sfx$iters r)""")
     sb.toString
   }
 }

@@ -60,7 +60,53 @@ object Dedup {
       textCol: String,
       k: Int,
       minJaccard: Double,
-      maxShingleDf: Int = Int.MaxValue): DataFrame = {
+      maxShingleDf: Int = Int.MaxValue): DataFrame =
+    sharedShingles(df, idCol, textCol, k, maxShingleDf)
+      .withColumn(
+        "jaccard",
+        col("shared").cast("double") / (col("na") + col("nb") - col("shared")).cast("double"))
+      .filter(col("jaccard") >= minJaccard)
+      .select("a_id", "b_id", "shared", "na", "nb", "jaccard")
+
+  /** Containment near-dup pairs — the ASYMMETRIC companion of
+    * [[jaccardPairs]]: containment(A⊆B) = |sh(A) ∩ sh(B)| / |sh(A)|.
+    * Jaccard misses the doc-inside-doc case (a tweet quoted inside a long
+    * article has Jaccard ≈ |A|/|B| ≈ 0 but containment(A) = 1), which is
+    * the dominant duplication mode for quoted/boilerplate-wrapped web text;
+    * production pipelines (CCNet-class) filter on max(cont_a, cont_b).
+    *
+    * Same inverted-index shape and df-cap scale story as [[jaccardPairs]]:
+    * one shingle-key equi-join bounded by `maxShingleDf`, one pair groupBy,
+    * two broadcast-size joins for set sizes. Returns (a_id, b_id, shared,
+    * na, nb, cont_a, cont_b) for pairs where max(cont_a, cont_b) ≥
+    * `minContainment`; integer counts + two closing divisions, so the
+    * DuckDB oracle is exact.
+    */
+  def containmentPairs(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      k: Int,
+      minContainment: Double,
+      maxShingleDf: Int = Int.MaxValue): DataFrame =
+    sharedShingles(df, idCol, textCol, k, maxShingleDf)
+      .withColumn("cont_a", col("shared").cast("double") / col("na").cast("double"))
+      .withColumn("cont_b", col("shared").cast("double") / col("nb").cast("double"))
+      .filter(greatest(col("cont_a"), col("cont_b")) >= minContainment)
+      .select("a_id", "b_id", "shared", "na", "nb", "cont_a", "cont_b")
+
+  /** The inverted-index pair count of [[jaccardPairs]] and
+    * [[containmentPairs]]: (a_id < b_id, shared, na, nb) for every pair
+    * of docs sharing a k-shingle, with shingles above the `maxShingleDf`
+    * doc-frequency cap dropped from every set before sizes and
+    * intersections.
+    */
+  private def sharedShingles(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      k: Int,
+      maxShingleDf: Int): DataFrame = {
     // 64-bit shingle KEYS, hashed natively in place (ShingleKeys codegen —
     // the composed string-building form was the measured bottleneck of the
     // whole scan): the inverted-index shuffle carries 8-byte keys instead
@@ -86,68 +132,12 @@ object Dedup {
         base.join(broadcast(hot), Seq("sk"), "left_anti")
       })
     val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("n_sh"))
-    val pairs = sh.as("a")
+    sh.as("a")
       .join(sh.as("b"), col("a.sk") === col("b.sk") && col(s"a.$idCol") < col(s"b.$idCol"))
       .groupBy(col(s"a.$idCol").as("a_id"), col(s"b.$idCol").as("b_id"))
       .agg(count(lit(1)).as("shared"))
-    pairs
       .join(sizes.withColumnRenamed(idCol, "a_id").withColumnRenamed("n_sh", "na"), "a_id")
       .join(sizes.withColumnRenamed(idCol, "b_id").withColumnRenamed("n_sh", "nb"), "b_id")
-      .withColumn(
-        "jaccard",
-        col("shared").cast("double") / (col("na") + col("nb") - col("shared")).cast("double"))
-      .filter(col("jaccard") >= minJaccard)
-      .select("a_id", "b_id", "shared", "na", "nb", "jaccard")
-  }
-
-  /** Containment near-dup pairs — the ASYMMETRIC companion of
-    * [[jaccardPairs]]: containment(A⊆B) = |sh(A) ∩ sh(B)| / |sh(A)|.
-    * Jaccard misses the doc-inside-doc case (a tweet quoted inside a long
-    * article has Jaccard ≈ |A|/|B| ≈ 0 but containment(A) = 1), which is
-    * the dominant duplication mode for quoted/boilerplate-wrapped web text;
-    * production pipelines (CCNet-class) filter on max(cont_a, cont_b).
-    *
-    * Same inverted-index shape and df-cap scale story as [[jaccardPairs]]:
-    * one shingle-key equi-join bounded by `maxShingleDf`, one pair groupBy,
-    * two broadcast-size joins for set sizes. Returns (a_id, b_id, shared,
-    * na, nb, cont_a, cont_b) for pairs where max(cont_a, cont_b) ≥
-    * `minContainment`; integer counts + two closing divisions, so the
-    * DuckDB oracle is exact.
-    */
-  def containmentPairs(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      k: Int,
-      minContainment: Double,
-      maxShingleDf: Int = Int.MaxValue): DataFrame = {
-    val allSh = Text.shingleKeySet(df, idCol, textCol, k)
-    // no sk pre-partition here either — the self-join broadcasts (see the
-    // jaccardPairs r15 note)
-    val sh = Caches.trackPersist(
-      if (maxShingleDf == Int.MaxValue) allSh
-      else {
-        val base = Caches.trackPersist(allSh)
-        val hot = base.groupBy(col("sk"))
-          .agg(count(lit(1)).as("__df"))
-          .filter(col("__df") > maxShingleDf)
-          .select("sk")
-        base.join(broadcast(hot), Seq("sk"), "left_anti")
-      })
-    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("n_sh"))
-    val pairs = sh.as("a")
-      .join(sh.as("b"), col("a.sk") === col("b.sk") && col(s"a.$idCol") < col(s"b.$idCol"))
-      .groupBy(col(s"a.$idCol").as("a_id"), col(s"b.$idCol").as("b_id"))
-      .agg(count(lit(1)).as("shared"))
-    val contA = col("shared").cast("double") / col("na").cast("double")
-    val contB = col("shared").cast("double") / col("nb").cast("double")
-    pairs
-      .join(sizes.withColumnRenamed(idCol, "a_id").withColumnRenamed("n_sh", "na"), "a_id")
-      .join(sizes.withColumnRenamed(idCol, "b_id").withColumnRenamed("n_sh", "nb"), "b_id")
-      .withColumn("cont_a", contA)
-      .withColumn("cont_b", contB)
-      .filter(greatest(col("cont_a"), col("cont_b")) >= minContainment)
-      .select("a_id", "b_id", "shared", "na", "nb", "cont_a", "cont_b")
   }
 
   /** MinHash signature via double hashing: ONE md5 per shingle, split into
@@ -441,22 +431,50 @@ object Dedup {
       idCol: String,
       textCol: String,
       k: Int,
-      broadcastBench: Boolean = true): DataFrame = {
-    val tSh = Text.shingleKeySet(train, idCol, textCol, k)
-    val bSh = Text.shingleKeySet(bench, idCol, textCol, k)
-      .withColumnRenamed(idCol, "__bid")
-    val hits = tSh.join(if (broadcastBench) broadcast(bSh) else bSh, "sk")
-      .groupBy(col(idCol))
-      .agg(
+      broadcastBench: Boolean = true): DataFrame =
+    flagContaminated(train, Text.shingleKeySet(train, idCol, textCol, k),
+      Text.shingleKeySet(bench, idCol, textCol, k).withColumnRenamed(idCol, "__bid"),
+      idCol, broadcastBench)
+
+  /** The hit table of the contamination checks: train shingle keys `tSh`
+    * join the benchmark keys `bSh` on `sk` (the bench side broadcast
+    * unless `broadcastBench = false`), `aggs` summarize each hit doc, and
+    * every row of `docs` survives the left join — a doc with no hit
+    * carries NULL aggregates for the caller to zero-fill.
+    */
+  private def benchHits(
+      docs: DataFrame,
+      tSh: DataFrame,
+      bSh: DataFrame,
+      idCol: String,
+      broadcastBench: Boolean,
+      aggs: Column*): DataFrame =
+    docs.join(
+      tSh.join(if (broadcastBench) broadcast(bSh) else bSh, "sk")
+        .groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*),
+      Seq(idCol), "left")
+
+  private def orZero(c: String): Column = coalesce(col(c), lit(0L))
+
+  /** The binary table of [[contaminationCheck]] and
+    * [[bloomContaminationCheck]] over train keys `tSh` and benchmark keys
+    * `bSh(__bid, sk)`: (id, n_shared_grams, n_bench_docs, contaminated)
+    * for every train doc, misses zero-filled.
+    */
+  private def flagContaminated(
+      train: DataFrame,
+      tSh: DataFrame,
+      bSh: DataFrame,
+      idCol: String,
+      broadcastBench: Boolean): DataFrame =
+    benchHits(train.select(col(idCol)), tSh, bSh, idCol, broadcastBench,
         countDistinct(col("sk")).as("n_shared_grams"),
         countDistinct(col("__bid")).as("n_bench_docs"))
-    train.select(col(idCol)).join(hits, Seq(idCol), "left")
       .select(
         col(idCol),
-        coalesce(col("n_shared_grams"), lit(0L)).as("n_shared_grams"),
-        coalesce(col("n_bench_docs"), lit(0L)).as("n_bench_docs"),
-        (coalesce(col("n_shared_grams"), lit(0L)) > 0).cast("long").as("contaminated"))
-  }
+        orZero("n_shared_grams").as("n_shared_grams"),
+        orZero("n_bench_docs").as("n_bench_docs"),
+        (orZero("n_shared_grams") > 0).cast("long").as("contaminated"))
 
   /** Graded sibling of [[contaminationCheck]]: instead of a binary
     * contaminated flag, score each train doc by the FRACTION of its
@@ -485,15 +503,12 @@ object Dedup {
     val tSh = Text.shingleKeySet(train, idCol, textCol, k)
     val bSh = Text.shingleKeySet(bench, idCol, textCol, k).select(col("sk")).distinct()
     val tot = tSh.groupBy(col(idCol)).agg(count(lit(1)).as("n_grams"))
-    val hits = tSh.join(if (broadcastBench) broadcast(bSh) else bSh, "sk")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_shared_grams"))
-    tot.join(hits, Seq(idCol), "left")
+    benchHits(tot, tSh, bSh, idCol, broadcastBench, count(lit(1)).as("n_shared_grams"))
       .select(
         col(idCol),
         col("n_grams"),
-        coalesce(col("n_shared_grams"), lit(0L)).as("n_shared_grams"),
-        (coalesce(col("n_shared_grams"), lit(0L)).cast("double") /
+        orZero("n_shared_grams").as("n_shared_grams"),
+        (orZero("n_shared_grams").cast("double") /
           col("n_grams").cast("double")).as("overlap_frac"))
   }
 
@@ -529,21 +544,10 @@ object Dedup {
       bCol: String,
       maxIters: Int = 50): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    // persist the caller's pair relation BEFORE symmetrizing: the fwd/rev
-    // union otherwise evaluates the (typically expensive, unpersisted)
-    // upstream pair pipeline once per branch — d7/d8's jaccardPairs chain
-    // and d14's band join ran TWICE inside the edge materialization job
-    // (guide §2.4: remove recomputed subtrees first)
-    val p0 = Caches.trackPersist(
-      pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst")))
-    // symmetric edge list, persisted AND pre-partitioned on dst: each
-    // round's min-pull joins edges on dst, so the cached hashpartitioning
-    // replaces a per-round edge-sized exchange (guide §2.4 — the one
-    // repartition at materialization amortizes over every round); the
-    // only edge-sized shuffle left per round is the groupBy-src transpose
-    val edges = Caches.trackPersist(
-      p0.union(p0.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-        .repartition(col("dst")))
+    // symmetric edge list pre-partitioned on dst: each round's min-pull
+    // joins edges on dst, so the only edge-sized shuffle left per round is
+    // the groupBy-src transpose
+    val edges = Graph.symmetricEdges(pairs, aCol, bCol, "dst")
     // seed with round 1's propagation for free: label(v) = min(v, min
     // neighbor) straight off the grouped edge list — grouped by DST so the
     // seed groupBy reuses the cached dst-partitioning with no exchange;
@@ -875,16 +879,6 @@ object Dedup {
       .reduce(_ && _)
     val fringe = tSh.crossJoin(broadcast(bloom)).filter(member).drop("__bloom")
 
-    val hits = fringe.join(if (broadcastBench) broadcast(bSh) else bSh, "sk")
-      .groupBy(col(idCol))
-      .agg(
-        countDistinct(col("sk")).as("n_shared_grams"),
-        countDistinct(col("__bid")).as("n_bench_docs"))
-    train.select(col(idCol)).join(hits, Seq(idCol), "left")
-      .select(
-        col(idCol),
-        coalesce(col("n_shared_grams"), lit(0L)).as("n_shared_grams"),
-        coalesce(col("n_bench_docs"), lit(0L)).as("n_bench_docs"),
-        (coalesce(col("n_shared_grams"), lit(0L)) > 0).cast("long").as("contaminated"))
+    flagContaminated(train, fringe, bSh, idCol, broadcastBench)
   }
 }

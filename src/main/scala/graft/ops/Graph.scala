@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -59,6 +59,27 @@ object Graph {
     s
   }
 
+  /** The symmetric edge list of an UNDIRECTED pair list: (src, dst) and
+    * (dst, src) for every pair, distinct, persisted and pre-partitioned on
+    * `partKey` (`src` or `dst`). The caller's pair relation is persisted
+    * BEFORE symmetrizing: the fwd/rev union otherwise evaluates the
+    * (typically expensive, unpersisted) upstream pair pipeline once per
+    * branch — measured on g1 at sf0.1, and on d7/d8/d14 inside
+    * [[Dedup.connectedComponents]]: the pair join/agg chain ran twice
+    * inside the edge materialization job (guide §2.4 — remove recomputed
+    * subtrees before removing shuffles). The pre-partitioning lets every
+    * round's join on `partKey` reuse the cached layout instead of
+    * re-exchanging the edge list once per round: one extra exchange at
+    * materialization, amortized over the rounds.
+    */
+  def symmetricEdges(pairs: DataFrame, aCol: String, bCol: String, partKey: String): DataFrame = {
+    val p0 = Caches.trackPersist(
+      pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst")))
+    Caches.trackPersist(
+      p0.union(p0.select(col("dst").as("src"), col("src").as("dst"))).distinct()
+        .repartition(col(partKey)))
+  }
+
   /** Fixed-iteration damped PageRank (d=0.85) over an UNDIRECTED pair list.
     * Every node in `nodes` gets a row; nodes with no incident edge hold the
     * base rank 0.15 (dangling mass is dropped, not redistributed — the
@@ -66,15 +87,7 @@ object Graph {
     * stated here as the contract). `scale` defaults to [[derivedScale]] of
     * the node count; an explicit value is validated against the same
     * overflow bound (and must mirror into any cross-engine oracle).
-    */
-  /** `checkpointEvery`: truncate the rank frame's lineage with an eager
-    * `localCheckpoint` every N iterations — the same per-round hygiene as
-    * [[Dedup.connectedComponents]]. At the default 5 iterations the
-    * nested plan is harmless, so 0 (off) is the default; long-iteration
-    * runs (≥ ~10) should pass 1 — without truncation Catalyst re-analyzes
-    * one nesting level per round and plan prep grows superlinearly (on a
-    * cluster with dynamic allocation, swap for reliable `checkpoint`).
-    * Checkpointing changes no values, only the plan boundary.
+    * Emits (id, rank_scaled).
     */
   def pagerankScaled(
       pairs: DataFrame,
@@ -83,68 +96,9 @@ object Graph {
       bCol: String,
       idCol: String,
       iters: Int = 5,
-      scale: Option[Long] = None,
-      checkpointEvery: Int = 0): DataFrame = {
-    // persist the caller's pair relation BEFORE symmetrizing: the fwd/rev
-    // union otherwise evaluates the (typically expensive, unpersisted)
-    // upstream pair pipeline once per branch — measured on g1 at sf0.1:
-    // the jaccardPairs join/agg chain ran twice inside the edge
-    // materialization job (guide §2.4 — remove recomputed subtrees before
-    // removing shuffles)
-    val p0 = Caches.trackPersist(
-      pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst")))
-    // the edge list is PRE-PARTITIONED on src before persisting (guide
-    // §2.4: two operations keyed the same way share one exchange): every
-    // iteration joins edges on src, so the cached hashpartitioning makes
-    // the per-round contribution join reuse the layout instead of
-    // re-exchanging the edge list once per iteration — the only edge-sized
-    // shuffle left per round is the unavoidable transpose (groupBy dst).
-    // The repartition costs ONE extra exchange at materialization,
-    // amortized over `iters` rounds; deg inherits the partitioning for
-    // free (groupBy src over a src-partitioned cache plans no exchange)
-    val edges = Caches.trackPersist(
-      p0.union(p0.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-        .repartition(col("src")))
-    val deg = Caches.trackPersist(
-      edges.groupBy("src").agg(count(lit(1)).as("deg")))
-    // referenced once per iteration plus the seed — persist, don't rescan;
-    // partitioned on id so the per-round resurrect join (ids ⋈ contrib,
-    // contrib already partitioned by id from its groupBy) is exchange-free
-    val ids = Caches.trackPersist(
-      nodes.select(col(idCol).cast("long").as("id")).repartition(col("id")))
-    val n = math.max(ids.count(), 1L)
-    val sc = scale.getOrElse(derivedScale(n))
-    require(
-      sc >= 100 && sc % 100 == 0 && sc <= Long.MaxValue / 85L / n,
-      s"scale $sc overflows 85*n*scale at n=$n (max ${Long.MaxValue / 85L / n}); " +
-        "use derivedScale or pass a smaller scale")
-    val base = 15L * sc / 100 // 0.15, exact: sc is a multiple of 100
-    var ranks = ids.withColumn("rank_scaled", lit(sc))
-    (1 to iters).foreach { i =>
-      // per-SOURCE contribution first (rank DIV deg depends only on the
-      // node): the deg join runs over the node-sized rank frame, not once
-      // per edge — identical integers per edge, node-sized shuffle bytes
-      // (guide §2.3 "shuffle fewer bytes"); both deg and edges read their
-      // cached src-partitioning, so the only exchanges in this round are
-      // the node-sized ranks relocation and the edge-sized transpose
-      val srcC = deg
-        .join(ranks.select(col("id").as("src"), col("rank_scaled")), "src")
-        .select(col("src"), expr("rank_scaled DIV deg").as("c"))
-      val contrib = edges
-        .join(srcC, "src")
-        .select(col("dst").as("id"), col("c"))
-        .groupBy("id")
-        .agg(sum(col("c")).as("s"))
-      ranks = ids
-        .join(contrib, Seq("id"), "left")
-        .select(
-          col("id"),
-          (lit(base) + expr("85 * coalesce(s, 0L) DIV 100")).as("rank_scaled"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters)
-        ranks = ranks.localCheckpoint()
-    }
-    ranks
-  }
+      scale: Option[Long] = None): DataFrame =
+    rankRounds(pairs, aCol, bCol, nodes.select(col(idCol).cast("long").as("id")),
+      iters, scale, v => lit(v))._2
 
   /** PERSONALIZED PageRank — [[pagerankScaled]] with the teleport mass
     * concentrated on a SEED set instead of spread uniformly: rank flows
@@ -167,41 +121,58 @@ object Graph {
       bCol: String,
       idCol: String,
       iters: Int = 5,
-      scale: Option[Long] = None,
-      checkpointEvery: Int = 0): DataFrame = {
-    // same pre-symmetrization persist + src pre-partitioning as
-    // [[pagerankScaled]] — one upstream evaluation, and the per-round
-    // contribution join reads the cached layout instead of re-exchanging
-    // the edge list every iteration
-    val p0 = Caches.trackPersist(
-      pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst")))
-    val edges = Caches.trackPersist(
-      p0.union(p0.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-        .repartition(col("src")))
-    val deg = Caches.trackPersist(edges.groupBy("src").agg(count(lit(1)).as("deg")))
+      scale: Option[Long] = None): DataFrame = {
     val seedIds = seeds.select(col(idCol).cast("long").as("id")).distinct()
       .withColumn("__s", lit(1L))
-    // (id, is_seed) — referenced once per iteration plus the seed frame;
-    // id-partitioned so the per-round resurrect join is exchange-free
-    // (see pagerankScaled)
-    val ids = Caches.trackPersist(
+    val (ids, ranks) = rankRounds(pairs, aCol, bCol,
       nodes.select(col(idCol).cast("long").as("id"))
         .join(seedIds, Seq("id"), "left")
-        .select(col("id"), coalesce(col("__s"), lit(0L)).as("is_seed"))
-        .repartition(col("id")))
+        .select(col("id"), coalesce(col("__s"), lit(0L)).as("is_seed")),
+      iters, scale, v => when(col("is_seed") === 1L, lit(v)).otherwise(lit(0L)))
+    ids.join(ranks, "id").select(col("id"), col("is_seed"), col("rank_scaled"))
+  }
+
+  /** The round loop of both PageRanks over `nodes0(id, …)`: `mass(v)` is
+    * a node's share of the amount `v` — its initial rank is `mass(scale)`
+    * and its base term `mass(0.15·scale)` (every node for plain PageRank,
+    * the seeds for the personalized one). Returns the persisted,
+    * id-partitioned node frame and the final (id, rank_scaled).
+    *
+    * Each round is one node-sized deg join (rank DIV deg depends only on
+    * the source, so identical integers per edge ride node-sized shuffle
+    * bytes — guide §2.3), one join against the src-partitioned edge cache
+    * and the edge-sized transpose (groupBy dst); the node frame is
+    * id-partitioned, so the per-round resurrect join (ids ⋈ contrib,
+    * contrib already partitioned by id from its groupBy) is exchange-free.
+    * Lineage is cut with an eager `localCheckpoint` after every round but
+    * the last — the per-round hygiene of [[Dedup.connectedComponents]]:
+    * without it Catalyst re-analyzes one nesting level per round and plan
+    * preparation grows superlinearly (on a cluster with dynamic
+    * allocation, swap for reliable `checkpoint`). The cut changes no
+    * values, only the plan boundary.
+    */
+  private def rankRounds(
+      pairs: DataFrame,
+      aCol: String,
+      bCol: String,
+      nodes0: DataFrame,
+      iters: Int,
+      scale: Option[Long],
+      mass: Long => Column): (DataFrame, DataFrame) = {
+    val edges = symmetricEdges(pairs, aCol, bCol, "src")
+    // deg inherits the partitioning for free (groupBy src over a
+    // src-partitioned cache plans no exchange)
+    val deg = Caches.trackPersist(edges.groupBy("src").agg(count(lit(1)).as("deg")))
+    val ids = Caches.trackPersist(nodes0.repartition(col("id")))
     val n = math.max(ids.count(), 1L)
     val sc = scale.getOrElse(derivedScale(n))
     require(
       sc >= 100 && sc % 100 == 0 && sc <= Long.MaxValue / 85L / n,
       s"scale $sc overflows 85*n*scale at n=$n (max ${Long.MaxValue / 85L / n}); " +
         "use derivedScale or pass a smaller scale")
-    val base = when(col("is_seed") === 1L, lit(15L * sc / 100)).otherwise(lit(0L))
-    var ranks = ids.select(
-      col("id"),
-      when(col("is_seed") === 1L, lit(sc)).otherwise(lit(0L)).as("rank_scaled"))
+    val base = mass(15L * sc / 100) // 0.15, exact: sc is a multiple of 100
+    var ranks = ids.select(col("id"), mass(sc).as("rank_scaled"))
     (1 to iters).foreach { i =>
-      // node-sized deg join + src-partitioned edge join — see
-      // pagerankScaled (identical per-edge integers, fewer shuffled bytes)
       val srcC = deg
         .join(ranks.select(col("id").as("src"), col("rank_scaled")), "src")
         .select(col("src"), expr("rank_scaled DIV deg").as("c"))
@@ -212,13 +183,30 @@ object Graph {
         .agg(sum(col("c")).as("s"))
       ranks = ids
         .join(contrib, Seq("id"), "left")
-        .select(
-          col("id"),
-          (base + expr("85 * coalesce(s, 0L) DIV 100")).as("rank_scaled"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters)
-        ranks = ranks.localCheckpoint()
+        .select(col("id"), (base + expr("85 * coalesce(s, 0L) DIV 100")).as("rank_scaled"))
+      if (i < iters) ranks = ranks.localCheckpoint()
     }
-    ids.join(ranks, "id").select(col("id"), col("is_seed"), col("rank_scaled"))
+    (ids, ranks)
+  }
+
+  /** Oracle twin of the PageRank round loop at the canonical [[Scale]],
+    * over an edge CTE `e(src, dst)` (symmetric, distinct) and a node CTE
+    * `n0(id, is_seed)`: CTEs `dg(src, d)` and `r0` … `r$iters` (id, r).
+    * Every node is a seed for plain PageRank.
+    */
+  def pagerankSql(iters: Int): String = {
+    val rounds = (1 to iters).map { i =>
+      s"""r$i AS (SELECT n0.id,
+            CAST(n0.is_seed * ${15L * Scale / 100} + 85 * coalesce(c.s, 0) // 100 AS BIGINT) AS r
+          FROM n0 LEFT JOIN (
+            SELECT e.dst AS id, sum(p.r // dg.d) AS s
+            FROM e JOIN r${i - 1} p ON p.id = e.src
+                 JOIN dg ON dg.src = e.src
+            GROUP BY 1) c ON c.id = n0.id)"""
+    }
+    (s"""dg AS (SELECT src, CAST(count(*) AS BIGINT) AS d FROM e GROUP BY 1),
+        r0 AS (SELECT id, CAST(is_seed * $Scale AS BIGINT) AS r FROM n0)""" +: rounds)
+      .mkString(",\n")
   }
 
   /** Exact triangle census over an UNDIRECTED distinct pair list

@@ -108,6 +108,22 @@ object Segments {
       sum(isNew).over(w.rowsBetween(Window.unboundedPreceding, 0)) - 1)
   }
 
+  /** Oracle twin of [[gapSessions]] over an events-shaped relation `src`
+    * ordered by (ts_us, event_id): CTEs `b` (the new-session flag `chg`)
+    * and `sx` (every `b` row with its 0-based BIGINT `session_idx`). `b`
+    * keeps `parts`, event_id, ts_us and `carry`.
+    */
+  def gapSessionsSql(src: String, parts: Seq[String], gapUs: Long, carry: Seq[String] = Nil): String = {
+    val keys = parts.mkString(", ")
+    s"""b AS (SELECT $keys, event_id, ts_us${carry.map(c => s", $c").mkString},
+           CASE WHEN lag(ts_us) OVER w IS NULL
+                  OR ts_us - lag(ts_us) OVER w > $gapUs THEN 1 ELSE 0 END AS chg
+         FROM $src WINDOW w AS (PARTITION BY $keys ORDER BY ts_us, event_id)),
+       sx AS (SELECT *, CAST(sum(chg) OVER (PARTITION BY $keys
+                ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) - 1 AS BIGINT) AS session_idx
+              FROM b)"""
+  }
+
   /** Generated dense grid of buckets per key over [minMs, maxMs] — the
     * padding lattice for J3-style out-of-range handling (every window must
     * exist even where no samples fell; ref `utils.py:66-73`).

@@ -145,27 +145,30 @@ object Stats {
           min(col("__frac"))).as("q_value"))
   }
 
-  /** Oracle twin of [[exactQuantiles]] keyed on one column, over a
-    * relation `src(key, value)` of non-NULL values: row_number ranks per
-    * key, then the linear interpolation at `1 + (n − 1)·q`, ending in the
-    * CTE `quant(key, q, q_value)`.
+  /** Oracle twin of [[exactQuantiles]] keyed on one column, over the
+    * non-NULL values of `value` in `src`: row_number ranks per key, then
+    * the linear interpolation at `1 + (n − 1)·q`, ending in the CTE
+    * `quant$sfx(key, q, q_value)`. Every CTE name carries `sfx`, so
+    * several quantile sets compose in one WITH chain; a keyless caller
+    * passes a constant key column.
     */
-  def exactQuantilesSql(src: String, key: String, value: String, qs: Seq[Double]): String = {
+  def exactQuantilesSql(
+      src: String, key: String, value: String, qs: Seq[Double], sfx: String = ""): String = {
     val lo = "min(CASE WHEN rn = CAST(floor(pos) AS BIGINT) THEN value END)"
-    s"""r AS (SELECT $key, $value AS value,
+    s"""r$sfx AS (SELECT $key, $value AS value,
                row_number() OVER (PARTITION BY $key ORDER BY $value) AS rn,
                count(*) OVER (PARTITION BY $key) AS n
-             FROM $src),
-        qs AS (SELECT CAST(q AS DOUBLE) AS q
+             FROM $src WHERE $value IS NOT NULL),
+        qs$sfx AS (SELECT CAST(q AS DOUBLE) AS q
                FROM (VALUES ${qs.map(q => s"($q)").mkString(", ")}) t(q)),
-        p AS (SELECT r.$key, qs.q, r.value, r.rn,
+        p$sfx AS (SELECT r.$key, qs.q, r.value, r.rn,
                 CAST(1.0 AS DOUBLE) + CAST(n - 1 AS DOUBLE) * qs.q AS pos
-              FROM r CROSS JOIN qs),
-        quant AS (SELECT $key, q,
+              FROM r$sfx r CROSS JOIN qs$sfx qs),
+        quant$sfx AS (SELECT $key, q,
                     $lo
                     + (min(CASE WHEN rn = CAST(ceil(pos) AS BIGINT) THEN value END) - $lo)
                       * min(pos - floor(pos)) AS q_value
-                  FROM p WHERE rn = CAST(floor(pos) AS BIGINT)
+                  FROM p$sfx WHERE rn = CAST(floor(pos) AS BIGINT)
                      OR rn = CAST(ceil(pos) AS BIGINT)
                   GROUP BY 1, 2)"""
   }

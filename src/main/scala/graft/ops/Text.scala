@@ -32,17 +32,13 @@ object Text {
   private def spread(df: DataFrame, idCol: String): DataFrame =
     Spread.byKey(df, col(idCol))
 
-  /** (id, shingle) rows, de-duplicated per doc — the unit of Jaccard math. */
-  def shingleSet(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
-    spread(df, idCol)
-      .filter(size(tokens(col(textCol))) >= k)
-      .select(col(idCol), explode(array_distinct(shingles(tokens(col(textCol)), k))).as("shingle"))
-
-  /** (id, sk) rows: per-doc-distinct 64-bit shingle KEYS — the fast form of
-    * [[shingleSet]] for consumers that only need the equality relation
-    * (inverted-index joins): one native pass hashes each k-token window in
-    * place ([[graft.functions.ShingleKeys]]), never building the shingle
-    * strings. Same 64-bit collision contract as hashing the strings.
+  /** (id, sk) rows: per-doc-distinct 64-bit shingle KEYS of the docs with
+    * at least k tokens — the unit of Jaccard math, for consumers that only
+    * need the equality relation (inverted-index joins): one native pass
+    * hashes each k-token window in place ([[graft.functions.ShingleKeys]]),
+    * never building the shingle strings [[shingles]] returns. Same 64-bit
+    * collision contract as hashing the strings (`DedupTextSpec` checks the
+    * equality relation against the string shingle set).
     */
   def shingleKeySet(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
     spread(df, idCol)
@@ -375,6 +371,21 @@ object Text {
         count(lit(1)).as("n_tokens"),
         (Exact.dsumTrunc9(col("__lp")) / count(lit(1)).cast("double")).as("avg_logprob"))
   }
+
+  /** Oracle twin of [[unigramLogProb]] over `documents`: CTEs `tok`,
+    * `vocab`, `tot`, `lp` and `ulp(doc_id, n_tokens, avg_logprob)`.
+    */
+  val unigramLogProbSql: String =
+    s"""tok AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS token
+               FROM documents),
+        vocab AS (SELECT token, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY 1),
+        tot AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM vocab),
+        lp AS (SELECT tok.doc_id,
+                 ln(CAST(v.c AS DOUBLE) / CAST(tot.t AS DOUBLE)) AS lp
+               FROM tok JOIN vocab v ON v.token = tok.token CROSS JOIN tot),
+        ulp AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+                  ${Exact.sqlDsumTrunc9("lp")} / CAST(count(*) AS DOUBLE) AS avg_logprob
+                FROM lp GROUP BY 1)"""
 
   /** Corpus-trained BIGRAM LM fluency score — [[unigramLogProb]]'s
     * sequential big sibling: per doc, the mean `ln P(wᵢ | wᵢ₋₁)` over its

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
@@ -11,15 +12,42 @@ import graft.ops._
 object DedupQ {
   import Q._
 
-  /** Oracle CTE `name`: distinct (doc_id, shingle) 3-word shingles, from
-    * an arbitrary documents-shaped relation (the d15b sampled audit swaps
-    * in a hash-sampled CTE).
+  /** Oracle CTE `name`: distinct (doc_id, shingle) `k`-word shingles,
+    * from an arbitrary documents-shaped relation (the d15b sampled audit
+    * swaps in a hash-sampled CTE).
     */
-  private def shSqlFrom(rel: String, name: String = "sh") =
+  private def shSqlFrom(rel: String, name: String = "sh", k: Int = 3) = {
+    val shingle = (0 until k).map(j => if (j == 0) "toks[i]" else s"toks[i+$j]").mkString(" || ' ' || ")
     s"""$name AS (SELECT DISTINCT doc_id, shingle FROM (
-         SELECT doc_id, toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS shingle
+         SELECT doc_id, $shingle AS shingle
          FROM (SELECT doc_id, string_split(trim(text), ' ') AS toks FROM $rel),
-              unnest(generate_series(1, len(toks) - 2)) AS u(i)))"""
+              unnest(generate_series(1, len(toks) - ${k - 1})) AS u(i)))"""
+  }
+
+  /** Oracle CTEs of the benchmark-contamination checks: `k`-word
+    * shingles split into train `tsh` (doc_id % `mod` ≠ 0) and benchmark
+    * `bsh` rows.
+    */
+  private def benchSplitSql(k: Int, mod: Int) =
+    s"""${shSqlFrom("documents", "g", k)},
+        tsh AS (SELECT * FROM g WHERE doc_id % $mod <> 0),
+        bsh AS (SELECT * FROM g WHERE doc_id % $mod = 0)"""
+
+  /** Oracle twin of [[graft.ops.Dedup.contaminationCheck]] (and of its
+    * bloom-prefiltered form, which returns the same table).
+    */
+  private def contaminationSql(k: Int, mod: Int) =
+    s"""WITH ${benchSplitSql(k, mod)},
+        h AS (SELECT t.doc_id,
+                CAST(count(DISTINCT t.shingle) AS BIGINT) AS n_shared_grams,
+                CAST(count(DISTINCT b.doc_id) AS BIGINT) AS n_bench_docs
+              FROM tsh t JOIN bsh b ON b.shingle = t.shingle GROUP BY 1)
+        SELECT d.doc_id,
+          coalesce(h.n_shared_grams, 0) AS n_shared_grams,
+          coalesce(h.n_bench_docs, 0) AS n_bench_docs,
+          CAST(CASE WHEN coalesce(h.n_shared_grams, 0) > 0 THEN 1 ELSE 0 END AS BIGINT) AS contaminated
+        FROM (SELECT doc_id FROM documents WHERE doc_id % $mod <> 0) d
+        LEFT JOIN h ON h.doc_id = d.doc_id"""
 
   private val shSql = shSqlFrom("documents")
 
@@ -31,6 +59,22 @@ object DedupQ {
     * the documented UNCAPPED exact baseline. Same recipe as d6's gram cap.
     */
   private val shCapDf = 50
+
+  /** The token-mixture input of mix_token_budget and mix_shards:
+    * (doc_id, lang, n_tokens).
+    */
+  private def docTokens(s: SparkSession, d: String): DataFrame =
+    t(s, d, "documents").select(
+      col("doc_id"), col("lang"), size(Text.tokens(col("text"))).cast("long").as("n_tokens"))
+
+  /** Oracle twin of [[docTokens]]: CTE `g(doc_id, lang, n_tokens, u)`
+    * with `u` the docs' 24-bit deal-order hash.
+    */
+  private val docTokensSql =
+    s"""g AS (SELECT doc_id, lang,
+           CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n_tokens,
+           ${Sampling.sqlHashU24("doc_id")} AS u
+         FROM documents)"""
 
   /** Oracle CTEs: [[shSql]]'s relation with shingles above [[shCapDf]]
     * dropped from every set BEFORE sizes and intersections — the exact
@@ -122,7 +166,7 @@ object DedupQ {
     * same-cluster pair agrees 8/8; every cross-cluster pair agrees exactly
     * as its rep pair does).
     */
-  private def lshClusters(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  private def lshClusters(docs: DataFrame): DataFrame = {
     val sig = Dedup.minhashSignaturesLocal(docs, "doc_id", "text", 3, 8)
     val members = Caches.trackPersist(Dedup.sigClusterMembers(sig, "doc_id", 8))
     val repPairs = Dedup.lshRepCandidates(members, "doc_id", 8, 4)
@@ -175,7 +219,7 @@ object DedupQ {
     * connected components → (doc_id, cluster_id), singletons labelling
     * themselves. Oracle twin: [[ccSql]]'s `lab`.
     */
-  private def dupClusters(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  private def dupClusters(docs: DataFrame): DataFrame = {
     val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5, maxShingleDf = shCapDf)
       .select("a_id", "b_id")
     val comp = Dedup.connectedComponents(pairs, "a_id", "b_id")
@@ -190,7 +234,7 @@ object DedupQ {
     * audit baseline, a deterministic hash-mod sample for the at-scale
     * form).
     */
-  private def lshPairRecall(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  private def lshPairRecall(docs: DataFrame): DataFrame = {
     val truth = Caches.trackPersist(
       Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5).select("a_id", "b_id"))
     val sig = Dedup.minhashSignaturesLocal(docs, "doc_id", "text", 3, 8)
@@ -406,23 +450,7 @@ object DedupQ {
           docs.filter(col("doc_id") % 97 === 0),
           "doc_id", "text", 5)
       },
-      Some("""WITH g5 AS (SELECT DISTINCT doc_id, shingle FROM (
-                 SELECT doc_id,
-                   toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3] || ' ' || toks[i+4] AS shingle
-                 FROM (SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
-                      unnest(generate_series(1, len(toks) - 4)) AS u(i))),
-              tsh AS (SELECT * FROM g5 WHERE doc_id % 97 <> 0),
-              bsh AS (SELECT * FROM g5 WHERE doc_id % 97 = 0),
-              h AS (SELECT t.doc_id,
-                      CAST(count(DISTINCT t.shingle) AS BIGINT) AS n_shared_grams,
-                      CAST(count(DISTINCT b.doc_id) AS BIGINT) AS n_bench_docs
-                    FROM tsh t JOIN bsh b ON b.shingle = t.shingle GROUP BY 1)
-              SELECT d.doc_id,
-                coalesce(h.n_shared_grams, 0) AS n_shared_grams,
-                coalesce(h.n_bench_docs, 0) AS n_bench_docs,
-                CAST(CASE WHEN coalesce(h.n_shared_grams, 0) > 0 THEN 1 ELSE 0 END AS BIGINT) AS contaminated
-              FROM (SELECT doc_id FROM documents WHERE doc_id % 97 <> 0) d
-              LEFT JOIN h ON h.doc_id = d.doc_id""")),
+      Some(contaminationSql(5, 97))),
 
     QDef(
       "d13_overlap_frac",
@@ -438,16 +466,11 @@ object DedupQ {
             "doc_id", "text", 5)
           .withColumn("flagged", (col("overlap_frac") >= 0.2).cast("long"))
       },
-      Some("""WITH g5 AS (SELECT DISTINCT doc_id, shingle FROM (
-                 SELECT doc_id,
-                   toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3] || ' ' || toks[i+4] AS shingle
-                 FROM (SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
-                      unnest(generate_series(1, len(toks) - 4)) AS u(i))),
-              tsh AS (SELECT * FROM g5 WHERE doc_id % 97 <> 0),
-              bsh AS (SELECT DISTINCT shingle FROM g5 WHERE doc_id % 97 = 0),
+      Some(s"""WITH ${benchSplitSql(5, 97)},
               tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams FROM tsh GROUP BY 1),
               h AS (SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_shared
-                    FROM tsh t JOIN bsh b ON b.shingle = t.shingle GROUP BY 1)
+                    FROM tsh t JOIN (SELECT DISTINCT shingle FROM bsh) b
+                      ON b.shingle = t.shingle GROUP BY 1)
               SELECT tot.doc_id, tot.n_grams,
                 CAST(coalesce(h.n_shared, 0) AS BIGINT) AS n_shared_grams,
                 CAST(coalesce(h.n_shared, 0) AS DOUBLE) / CAST(tot.n_grams AS DOUBLE) AS overlap_frac,
@@ -487,18 +510,9 @@ object DedupQ {
       // the few-hot-keys regime where a direct ordered window serializes);
       // the oracle runs the direct window, bit-identical by integer
       // associativity
-      (s, d) => {
-        val docs = t(s, d, "documents")
-        Sampling.tokenBudgetLedger(
-          docs.select(
-            col("doc_id"), col("lang"),
-            size(Text.tokens(col("text"))).cast("long").as("n_tokens")),
-          "doc_id", "lang", "n_tokens", 2000L)
-      },
-      Some(s"""WITH g AS (SELECT doc_id, lang,
-                  CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n_tokens,
-                  ${Sampling.sqlHashU24("doc_id")} AS u
-                FROM documents)
+      (s, d) => Sampling.tokenBudgetLedger(
+        docTokens(s, d), "doc_id", "lang", "n_tokens", 2000L),
+      Some(s"""WITH $docTokensSql
               SELECT doc_id, lang, n_tokens,
                 CAST(sum(n_tokens) OVER (PARTITION BY lang ORDER BY u, doc_id
                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
@@ -739,26 +753,13 @@ object DedupQ {
         // diverge from the oracle — pinning turns that into the plan-time
         // overflow require instead (the Graph scaladoc's mirror contract)
         Graph.pagerankScaled(pairs, docs, "a_id", "b_id", "doc_id", iters = 5,
-          scale = Some(Graph.Scale), checkpointEvery = 1)
+          scale = Some(Graph.Scale))
           .withColumnRenamed("id", "doc_id")
       },
-      Some {
-        val rounds = (1 to 5).map { i =>
-          s"""r$i AS (SELECT n0.id,
-                CAST(150000000000 + 85 * coalesce(c.s, 0) // 100 AS BIGINT) AS r
-              FROM n0 LEFT JOIN (
-                SELECT e.dst AS id, sum(p.r // dg.d) AS s
-                FROM e JOIN r${i - 1} p ON p.id = e.src
-                     JOIN dg ON dg.src = e.src
-                GROUP BY 1) c ON c.id = n0.id)"""
-        }.mkString(",\n")
-        s"""WITH $shCappedSql, ${jaccardEdgeSql()},
-            dg AS (SELECT src, CAST(count(*) AS BIGINT) AS d FROM e GROUP BY 1),
-            n0 AS (SELECT doc_id AS id FROM documents),
-            r0 AS (SELECT id, CAST(1000000000000 AS BIGINT) AS r FROM n0),
-            $rounds
-            SELECT id AS doc_id, r AS rank_scaled FROM r5"""
-      }),
+      Some(s"""WITH $shCappedSql, ${jaccardEdgeSql()},
+               n0 AS (SELECT doc_id AS id, CAST(1 AS BIGINT) AS is_seed FROM documents),
+               ${Graph.pagerankSql(5)}
+               SELECT id AS doc_id, r AS rank_scaled FROM r5""")),
 
     QDef(
       "g2_triangles",
@@ -848,32 +849,15 @@ object DedupQ {
           .select("a_id", "b_id")
         Graph.personalizedPagerankScaled(
           pairs, docs, docs.filter(pmod(col("doc_id"), lit(50)) === 0),
-          "a_id", "b_id", "doc_id", iters = 5, scale = Some(Graph.Scale),
-          checkpointEvery = 1)
+          "a_id", "b_id", "doc_id", iters = 5, scale = Some(Graph.Scale))
           .withColumnRenamed("id", "doc_id")
       },
-      Some {
-        val rounds = (1 to 5).map { i =>
-          s"""r$i AS (SELECT n0.id,
-                CAST(CASE WHEN n0.id % 50 = 0 THEN 150000000000 ELSE 0 END
-                  + 85 * coalesce(c.s, 0) // 100 AS BIGINT) AS r
-              FROM n0 LEFT JOIN (
-                SELECT e.dst AS id, sum(p.r // dg.d) AS s
-                FROM e JOIN r${i - 1} p ON p.id = e.src
-                     JOIN dg ON dg.src = e.src
-                GROUP BY 1) c ON c.id = n0.id)"""
-        }.mkString(",\n")
-        s"""WITH $shCappedSql, ${jaccardEdgeSql()},
-            dg AS (SELECT src, CAST(count(*) AS BIGINT) AS d FROM e GROUP BY 1),
-            n0 AS (SELECT doc_id AS id FROM documents),
-            r0 AS (SELECT id, CAST(CASE WHEN id % 50 = 0 THEN 1000000000000 ELSE 0 END
-                     AS BIGINT) AS r FROM n0),
-            $rounds
-            SELECT id AS doc_id,
-              CAST(CASE WHEN id % 50 = 0 THEN 1 ELSE 0 END AS BIGINT) AS is_seed,
-              r AS rank_scaled
-            FROM r5"""
-      }),
+      Some(s"""WITH $shCappedSql, ${jaccardEdgeSql()},
+               n0 AS (SELECT doc_id AS id,
+                        CAST(CASE WHEN doc_id % 50 = 0 THEN 1 ELSE 0 END AS BIGINT) AS is_seed
+                      FROM documents),
+               ${Graph.pagerankSql(5)}
+               SELECT id AS doc_id, is_seed, r AS rank_scaled FROM r5 JOIN n0 USING (id)""")),
 
     QDef(
       "g4_lpa",
@@ -924,24 +908,7 @@ object DedupQ {
           docs.filter(col("doc_id") % 89 === 0),
           "doc_id", "text", 7)
       },
-      Some("""WITH g7 AS (SELECT DISTINCT doc_id, shingle FROM (
-                 SELECT doc_id,
-                   toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3]
-                     || ' ' || toks[i+4] || ' ' || toks[i+5] || ' ' || toks[i+6] AS shingle
-                 FROM (SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
-                      unnest(generate_series(1, len(toks) - 6)) AS u(i))),
-              tsh AS (SELECT * FROM g7 WHERE doc_id % 89 <> 0),
-              bsh AS (SELECT * FROM g7 WHERE doc_id % 89 = 0),
-              h AS (SELECT t.doc_id,
-                      CAST(count(DISTINCT t.shingle) AS BIGINT) AS n_shared_grams,
-                      CAST(count(DISTINCT b.doc_id) AS BIGINT) AS n_bench_docs
-                    FROM tsh t JOIN bsh b ON b.shingle = t.shingle GROUP BY 1)
-              SELECT d.doc_id,
-                coalesce(h.n_shared_grams, 0) AS n_shared_grams,
-                coalesce(h.n_bench_docs, 0) AS n_bench_docs,
-                CAST(CASE WHEN coalesce(h.n_shared_grams, 0) > 0 THEN 1 ELSE 0 END AS BIGINT) AS contaminated
-              FROM (SELECT doc_id FROM documents WHERE doc_id % 89 <> 0) d
-              LEFT JOIN h ON h.doc_id = d.doc_id"""),
+      Some(contaminationSql(7, 89)),
     ),
 
     QDef(
@@ -1039,14 +1006,8 @@ object DedupQ {
       // (strata × 256 parallelism — the mix_token_budget shape); the
       // oracle's direct row_number is bit-identical. Full ledger out.
       (s, d) => Sampling.shardAssign(
-        t(s, d, "documents").select(
-          col("doc_id"), col("lang"),
-          size(Text.tokens(col("text"))).cast("long").as("n_tokens")),
-        "doc_id", "lang", "n_tokens", nShards = 8),
-      Some(s"""WITH g AS (SELECT doc_id, lang,
-                  CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n_tokens,
-                  ${Sampling.sqlHashU24("doc_id")} AS u
-                FROM documents)
+        docTokens(s, d), "doc_id", "lang", "n_tokens", nShards = 8),
+      Some(s"""WITH $docTokensSql
                SELECT doc_id, lang, n_tokens,
                  (CAST(row_number() OVER (PARTITION BY lang ORDER BY u, doc_id)
                    AS BIGINT) - 1) % 8 AS shard

@@ -27,6 +27,27 @@ object EventsQ {
     */
   private val cutoffUs = 1705363200000000L
 
+  /** The OHLC candle per (event_type, day) — the oracle of `w22_ohlc`
+    * and of its incremental twin `ivm_ohlc_merge`: open/close are the
+    * first/last values in (ts, event_id) order, high/low the max/min.
+    */
+  private val ohlcSql =
+    s"""WITH ev AS ($evSql),
+        q AS (SELECT event_type, ts_us - ts_us % $usPerDay AS bucket_us,
+                ts_us, event_id, value
+              FROM ev WHERE value IS NOT NULL),
+        r AS (SELECT *,
+                row_number() OVER (PARTITION BY event_type, bucket_us
+                  ORDER BY ts_us, event_id) AS rna,
+                row_number() OVER (PARTITION BY event_type, bucket_us
+                  ORDER BY ts_us DESC, event_id DESC) AS rnd
+              FROM q)
+        SELECT event_type, bucket_us, CAST(count(*) AS BIGINT) AS n,
+          max(CASE WHEN rna = 1 THEN value END) AS open,
+          max(value) AS high, min(value) AS low,
+          max(CASE WHEN rnd = 1 THEN value END) AS close
+        FROM r GROUP BY 1, 2"""
+
   val defs: Seq[QDef] = Seq(
     QDef(
       "merge_upsert",
@@ -165,21 +186,8 @@ object EventsQ {
           .select("user_id", "event_id", "value", "med", "mad", "rz"),
       Some {
         def medianSql(src: String, v: String, out: String) =
-          s"""r_$out AS (SELECT user_id, $v,
-                row_number() OVER (PARTITION BY user_id ORDER BY $v) AS rn,
-                count(*) OVER (PARTITION BY user_id) AS n
-                FROM $src WHERE $v IS NOT NULL),
-              p_$out AS (SELECT user_id, $v, rn,
-                CAST(1.0 AS DOUBLE) + CAST(n - 1 AS DOUBLE) * CAST(0.5 AS DOUBLE) AS pos
-                FROM r_$out),
-              $out AS (SELECT user_id,
-                min(CASE WHEN rn = CAST(floor(pos) AS BIGINT) THEN $v END)
-                + (min(CASE WHEN rn = CAST(ceil(pos) AS BIGINT) THEN $v END)
-                   - min(CASE WHEN rn = CAST(floor(pos) AS BIGINT) THEN $v END))
-                  * min(pos - floor(pos)) AS $out
-                FROM p_$out
-                WHERE rn = CAST(floor(pos) AS BIGINT) OR rn = CAST(ceil(pos) AS BIGINT)
-                GROUP BY 1)"""
+          s"""${Stats.exactQuantilesSql(src, "user_id", v, Seq(0.5), s"_$out")},
+              $out AS (SELECT user_id, q_value AS $out FROM quant_$out)"""
         s"""WITH ev AS ($evSql),
             ${medianSql("ev", "value", "med")},
             d AS (SELECT ev.user_id, event_id, value, med.med,
@@ -563,21 +571,7 @@ object EventsQ {
             min(col("value")).as("low"),
             max(when(col("rnd") === 1, col("value"))).as("close"))
       },
-      Some(s"""WITH ev AS ($evSql),
-               q AS (SELECT event_type, ts_us - ts_us % $usPerDay AS bucket_us,
-                       ts_us, event_id, value
-                     FROM ev WHERE value IS NOT NULL),
-               r AS (SELECT *,
-                       row_number() OVER (PARTITION BY event_type, bucket_us
-                         ORDER BY ts_us, event_id) AS rna,
-                       row_number() OVER (PARTITION BY event_type, bucket_us
-                         ORDER BY ts_us DESC, event_id DESC) AS rnd
-                     FROM q)
-               SELECT event_type, bucket_us, CAST(count(*) AS BIGINT) AS n,
-                 max(CASE WHEN rna = 1 THEN value END) AS open,
-                 max(value) AS high, min(value) AS low,
-                 max(CASE WHEN rnd = 1 THEN value END) AS close
-               FROM r GROUP BY 1, 2""")),
+      Some(ohlcSql)),
 
     QDef(
       "w24_concurrency",
@@ -606,15 +600,7 @@ object EventsQ {
           tiebreak = Seq(col("user_id"), col("session_idx")))
       },
       Some(s"""WITH ev AS ($evSql),
-               b AS (SELECT user_id, event_type, event_id, ts_us,
-                       CASE WHEN lag(ts_us) OVER w IS NULL
-                              OR ts_us - lag(ts_us) OVER w > 1800000000 THEN 1 ELSE 0 END AS chg
-                     FROM ev WINDOW w AS (PARTITION BY user_id, event_type
-                       ORDER BY ts_us, event_id)),
-               sx AS (SELECT *, CAST(sum(chg) OVER (PARTITION BY user_id, event_type
-                        ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) - 1 AS BIGINT)
-                        AS session_idx
-                      FROM b),
+               ${Segments.gapSessionsSql("ev", Seq("user_id", "event_type"), 30L * 60L * 1000000L)},
                sess AS (SELECT user_id, event_type, session_idx,
                           min(ts_us) AS start_us, max(ts_us) AS end_us
                         FROM sx GROUP BY 1, 2, 3),
@@ -657,22 +643,8 @@ object EventsQ {
                        CAST(ts_us - lag(ts_us) OVER (PARTITION BY user_id, event_type
                          ORDER BY ts_us, event_id) AS DOUBLE) AS gap_us
                      FROM ev),
-               r AS (SELECT event_type, gap_us AS value,
-                       row_number() OVER (PARTITION BY event_type ORDER BY gap_us) AS rn,
-                       count(*) OVER (PARTITION BY event_type) AS n
-                     FROM g WHERE gap_us IS NOT NULL),
-               qs AS (SELECT CAST(q AS DOUBLE) AS q
-                      FROM (VALUES (0.5), (0.9), (0.99)) t(q)),
-               p AS (SELECT r.event_type, qs.q, r.value, r.rn,
-                       CAST(1.0 AS DOUBLE) + CAST(n - 1 AS DOUBLE) * qs.q AS pos
-                     FROM r CROSS JOIN qs)
-               SELECT event_type, q,
-                 min(CASE WHEN rn = CAST(floor(pos) AS BIGINT) THEN value END)
-                 + (min(CASE WHEN rn = CAST(ceil(pos) AS BIGINT) THEN value END)
-                    - min(CASE WHEN rn = CAST(floor(pos) AS BIGINT) THEN value END))
-                   * min(pos - floor(pos)) AS q_value
-               FROM p WHERE rn = CAST(floor(pos) AS BIGINT) OR rn = CAST(ceil(pos) AS BIGINT)
-               GROUP BY 1, 2""")),
+               ${Stats.exactQuantilesSql("g", "event_type", "gap_us", Seq(0.5, 0.9, 0.99))}
+               SELECT event_type, q, q_value FROM quant""")),
 
     QDef(
       "m18_ab_ztest",
@@ -977,21 +949,7 @@ object EventsQ {
         Incremental.ohlcFinalize(merged)
           .select("event_type", "bucket_us", "n", "open", "high", "low", "close")
       },
-      Some(s"""WITH ev AS ($evSql),
-               q AS (SELECT event_type, ts_us - ts_us % $usPerDay AS bucket_us,
-                       ts_us, event_id, value
-                     FROM ev WHERE value IS NOT NULL),
-               r AS (SELECT *,
-                       row_number() OVER (PARTITION BY event_type, bucket_us
-                         ORDER BY ts_us, event_id) AS rna,
-                       row_number() OVER (PARTITION BY event_type, bucket_us
-                         ORDER BY ts_us DESC, event_id DESC) AS rnd
-                     FROM q)
-               SELECT event_type, bucket_us, CAST(count(*) AS BIGINT) AS n,
-                 max(CASE WHEN rna = 1 THEN value END) AS open,
-                 max(value) AS high, min(value) AS low,
-                 max(CASE WHEN rnd = 1 THEN value END) AS close
-               FROM r GROUP BY 1, 2""")),
+      Some(ohlcSql)),
 
     QDef(
       "w23_transitions",
@@ -1091,28 +1049,13 @@ object EventsQ {
       Some {
         val anchorUs = 1706745600000000L
         def qcte(metric: String, pfx: String) =
-          s"""r_$pfx AS (SELECT $metric AS value,
-                row_number() OVER (ORDER BY $metric) AS rn,
-                count(*) OVER () AS n
-              FROM u2),
-              p_$pfx AS (SELECT value, rn,
-                CAST(1.0 AS DOUBLE) + CAST(n - 1 AS DOUBLE) * qq.q AS pos, qq.q
-              FROM r_$pfx, (SELECT CAST(q AS DOUBLE) AS q
-                FROM (VALUES (0.2), (0.4), (0.6), (0.8)) t(q)) qq),
-              q_$pfx AS (SELECT q,
-                min(CASE WHEN rn = CAST(floor(pos) AS BIGINT) THEN value END)
-                + (min(CASE WHEN rn = CAST(ceil(pos) AS BIGINT) THEN value END)
-                   - min(CASE WHEN rn = CAST(floor(pos) AS BIGINT) THEN value END))
-                  * min(pos - floor(pos)) AS q_value
-              FROM p_$pfx
-              WHERE rn = CAST(floor(pos) AS BIGINT) OR rn = CAST(ceil(pos) AS BIGINT)
-              GROUP BY 1),
+          s"""${Stats.exactQuantilesSql("u2", "g", metric, Seq(0.2, 0.4, 0.6, 0.8), s"_$pfx")},
               t_$pfx AS (SELECT
                 max(CASE WHEN q = 0.2 THEN q_value END) AS ${pfx}2,
                 max(CASE WHEN q = 0.4 THEN q_value END) AS ${pfx}4,
                 max(CASE WHEN q = 0.6 THEN q_value END) AS ${pfx}6,
                 max(CASE WHEN q = 0.8 THEN q_value END) AS ${pfx}8
-              FROM q_$pfx)"""
+              FROM quant_$pfx)"""
         def up(m: String, pfx: String) =
           s"""(CAST(1 AS BIGINT)
               + (CASE WHEN $m > ${pfx}2 THEN 1 ELSE 0 END)
@@ -1126,21 +1069,14 @@ object EventsQ {
               + (CASE WHEN $m < ${pfx}6 THEN 1 ELSE 0 END)
               + (CASE WHEN $m < ${pfx}8 THEN 1 ELSE 0 END))"""
         s"""WITH ev AS ($evSql),
-            b AS (SELECT user_id, event_id, ts_us, value,
-                    CASE WHEN lag(ts_us) OVER w IS NULL
-                           OR ts_us - lag(ts_us) OVER w > 1800000000 THEN 1 ELSE 0 END AS chg
-                  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-            sx AS (SELECT *, CAST(sum(chg) OVER (PARTITION BY user_id
-                     ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) - 1 AS BIGINT)
-                     AS session_idx
-                   FROM b),
+            ${Segments.gapSessionsSql("ev", Seq("user_id"), 30L * 60L * 1000000L, Seq("value"))},
             u AS (SELECT user_id, max(ts_us) AS last_ts,
                     CAST(count(DISTINCT session_idx) AS BIGINT) AS n_sessions,
                     floor(${Exact.sqlDsum("value")} * CAST(100 AS DOUBLE))
                       / CAST(100 AS DOUBLE) AS monetary
                   FROM sx GROUP BY 1),
             u2 AS (SELECT user_id, ($anchorUs - last_ts) // $usPerDay AS recency_days,
-                     n_sessions, monetary FROM u),
+                     n_sessions, monetary, 0 AS g FROM u),
             ${qcte("CAST(recency_days AS DOUBLE)", "r")},
             ${qcte("CAST(n_sessions AS DOUBLE)", "f")},
             ${qcte("monetary", "m")}

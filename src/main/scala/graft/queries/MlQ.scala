@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ml.{Encoders, Ensemble, Impute}
 import graft.ops.{Exact, Stats}
@@ -13,6 +14,39 @@ object MlQ {
   import Q._
 
   private val eventTypes = Seq("click", "error", "purchase", "signup", "view")
+
+  /** The masked-channel repair of m5b and m10: dim 1 of every 5th vector
+    * is refitted from dim 2 by closed-form OLS ([[Impute.ols1Repair]]) on
+    * the other rows; (vec_id, e_1 repaired, e_2, e_1_orig).
+    */
+  private def ols1Repaired(s: SparkSession, d: String): DataFrame = {
+    val e = t(s, d, "embeddings").select(
+      col("vec_id"),
+      element_at(col("embedding"), 1).cast("double").as("e_1"),
+      element_at(col("embedding"), 2).cast("double").as("e_2"))
+    Impute.ols1Repair(
+      e.withColumn("e_1_orig", col("e_1")),
+      "e_1", "e_2",
+      trainFilter = col("vec_id") % 5 =!= 0,
+      fixPredicate = col("vec_id") % 5 === 0)
+  }
+
+  /** Oracle twin of [[ols1Repaired]]'s fit: CTEs `tr`, `s`, `p` and
+    * `p2(slope, icept)` over exact decimal sums.
+    */
+  private val ols1FitSql =
+    """tr AS (SELECT CAST(embedding[2] AS DOUBLE) AS x,
+               CAST(embedding[1] AS DOUBLE) AS y
+             FROM embeddings WHERE vec_id % 5 <> 0),
+       s AS (SELECT CAST(count(*) AS DOUBLE) AS n,
+              CAST(sum(CAST(x AS DECIMAL(38,9))) AS DOUBLE) AS sx,
+              CAST(sum(CAST(y AS DECIMAL(38,9))) AS DOUBLE) AS sy,
+              CAST(sum(CAST(x * y AS DECIMAL(38,9))) AS DOUBLE) AS sxy,
+              CAST(sum(CAST(x * x AS DECIMAL(38,9))) AS DOUBLE) AS sxx
+             FROM tr),
+       p AS (SELECT n, sx, sy,
+              (n * sxy - sx * sy) / (n * sxx - sx * sx) AS slope FROM s),
+       p2 AS (SELECT slope, (sy - slope * sx) / n AS icept FROM p)"""
 
   val defs: Seq[QDef] = Seq(
     QDef(
@@ -64,30 +98,8 @@ object MlQ {
       // exact decimal sums — slope/intercept/prediction are identical IEEE
       // double expressions in both engines, so this row hash-matches where
       // the MLlib multi-feature fit (m5) is rows-only by contract
-      (s, d) => {
-        val e = t(s, d, "embeddings").select(
-          col("vec_id"),
-          element_at(col("embedding"), 1).cast("double").as("e_1"),
-          element_at(col("embedding"), 2).cast("double").as("e_2"))
-        Impute.ols1Repair(
-          e.withColumn("e_1_orig", col("e_1")),
-          "e_1", "e_2",
-          trainFilter = col("vec_id") % 5 =!= 0,
-          fixPredicate = col("vec_id") % 5 === 0)
-          .select("vec_id", "e_1_orig", "e_1")
-      },
-      Some("""WITH tr AS (SELECT CAST(embedding[2] AS DOUBLE) AS x,
-                     CAST(embedding[1] AS DOUBLE) AS y
-                   FROM embeddings WHERE vec_id % 5 <> 0),
-              s AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-                     CAST(sum(CAST(x AS DECIMAL(38,9))) AS DOUBLE) AS sx,
-                     CAST(sum(CAST(y AS DECIMAL(38,9))) AS DOUBLE) AS sy,
-                     CAST(sum(CAST(x * y AS DECIMAL(38,9))) AS DOUBLE) AS sxy,
-                     CAST(sum(CAST(x * x AS DECIMAL(38,9))) AS DOUBLE) AS sxx
-                    FROM tr),
-              p AS (SELECT n, sx, sy,
-                     (n * sxy - sx * sy) / (n * sxx - sx * sx) AS slope FROM s),
-              p2 AS (SELECT slope, (sy - slope * sx) / n AS icept FROM p)
+      (s, d) => ols1Repaired(s, d).select("vec_id", "e_1_orig", "e_1"),
+      Some(s"""WITH $ols1FitSql
               SELECT vec_id, CAST(embedding[1] AS DOUBLE) AS e_1_orig,
                 CASE WHEN vec_id % 5 = 0
                      THEN p2.slope * CAST(embedding[2] AS DOUBLE) + p2.icept
@@ -102,31 +114,10 @@ object MlQ {
       // KNOWN channel, so ground truth exists). All sums scale-9 truncated
       // fixed point — engine-exact where rounding casts would tie-break
       // differently (see Stats.regressionMetrics scaladoc)
-      (s, d) => {
-        val e = t(s, d, "embeddings").select(
-          col("vec_id"),
-          element_at(col("embedding"), 1).cast("double").as("e_1"),
-          element_at(col("embedding"), 2).cast("double").as("e_2"))
-        val repaired = graft.ml.Impute.ols1Repair(
-          e.withColumn("e_1_orig", col("e_1")),
-          "e_1", "e_2",
-          trainFilter = col("vec_id") % 5 =!= 0,
-          fixPredicate = col("vec_id") % 5 === 0)
-          .filter(col("vec_id") % 5 === 0)
-        Stats.regressionMetrics(repaired, Nil, "e_1_orig", "e_1")
-      },
-      Some(s"""WITH tr AS (SELECT CAST(embedding[2] AS DOUBLE) AS x,
-                      CAST(embedding[1] AS DOUBLE) AS y
-                    FROM embeddings WHERE vec_id % 5 <> 0),
-               s AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-                      CAST(sum(CAST(x AS DECIMAL(38,9))) AS DOUBLE) AS sx,
-                      CAST(sum(CAST(y AS DECIMAL(38,9))) AS DOUBLE) AS sy,
-                      CAST(sum(CAST(x * y AS DECIMAL(38,9))) AS DOUBLE) AS sxy,
-                      CAST(sum(CAST(x * x AS DECIMAL(38,9))) AS DOUBLE) AS sxx
-                     FROM tr),
-               p AS (SELECT n, sx, sy,
-                      (n * sxy - sx * sy) / (n * sxx - sx * sx) AS slope FROM s),
-               p2 AS (SELECT slope, (sy - slope * sx) / n AS icept FROM p),
+      (s, d) =>
+        Stats.regressionMetrics(
+          ols1Repaired(s, d).filter(col("vec_id") % 5 === 0), Nil, "e_1_orig", "e_1"),
+      Some(s"""WITH $ols1FitSql,
                rep AS (SELECT CAST(embedding[1] AS DOUBLE) AS y,
                         p2.slope * CAST(embedding[2] AS DOUBLE) + p2.icept AS yp
                        FROM embeddings, p2 WHERE vec_id % 5 = 0),

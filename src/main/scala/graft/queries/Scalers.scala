@@ -74,26 +74,12 @@ object Scalers {
       (s, d) =>
         Scaling.scale(events(s, d), Seq("event_type"), "value", "robust", "scaled")
           .select("event_id", "value", "scaled"),
-      Some("""WITH r AS (SELECT event_type, value AS x,
-                row_number() OVER (PARTITION BY event_type ORDER BY value) AS rn,
-                count(*) OVER (PARTITION BY event_type) AS n
-                FROM events WHERE value IS NOT NULL),
-              qs AS (SELECT CAST(q AS DOUBLE) AS q FROM (VALUES (0.25), (0.5), (0.75)) t(q)),
-              p AS (SELECT r.event_type, qs.q, r.x, r.rn,
-                      CAST(1.0 AS DOUBLE) + CAST(n - 1 AS DOUBLE) * qs.q AS pos
-                    FROM r CROSS JOIN qs),
-              qv AS (SELECT event_type, q,
-                       min(CASE WHEN rn = CAST(floor(pos) AS BIGINT) THEN x END)
-                       + (min(CASE WHEN rn = CAST(ceil(pos) AS BIGINT) THEN x END)
-                          - min(CASE WHEN rn = CAST(floor(pos) AS BIGINT) THEN x END))
-                         * min(pos - floor(pos)) AS q_value
-                     FROM p WHERE rn = CAST(floor(pos) AS BIGINT) OR rn = CAST(ceil(pos) AS BIGINT)
-                     GROUP BY 1, 2),
+      Some(s"""WITH ${Stats.exactQuantilesSql("events", "event_type", "value", Seq(0.25, 0.5, 0.75))},
               s AS (SELECT event_type,
                       min(CASE WHEN q = CAST(0.5 AS DOUBLE) THEN q_value END) AS ctr,
                       min(CASE WHEN q = CAST(0.75 AS DOUBLE) THEN q_value END)
                       - min(CASE WHEN q = CAST(0.25 AS DOUBLE) THEN q_value END) AS scl
-                    FROM qv GROUP BY 1)
+                    FROM quant GROUP BY 1)
               SELECT event_id, value,
                 CASE WHEN s.scl = CAST(0.0 AS DOUBLE) OR s.scl IS NULL
                      THEN value - s.ctr ELSE (value - s.ctr) / s.scl END AS scaled

@@ -249,8 +249,8 @@ object SimilarityQ {
   private def flatRouteSql(src: String, norm: String): String = {
     val sfx = norm.stripPrefix("n")
     s"""kparam AS (${IvfQuantizer.sqlAdaptiveK("embeddings", 64)}),
-           ${IvfQuantizer.lloydSqlAtExpr(
-      "(SELECT k FROM kparam)", 2, 64, sampleEvery = 4, sfx = sfx, dimOffset = 0, srcTable = src)},
+           ${IvfQuantizer.lloydSql(
+      "(SELECT k FROM kparam)", 2, 64, sampleEvery = 4, sfx = sfx, src = src, norm = norm)},
            leaf AS (SELECT vec_id, cell FROM assigned$sfx)"""
   }
 
@@ -258,14 +258,13 @@ object SimilarityQ {
   private def hierRouteSql(src: String, norm: String): String = {
     val sfx = norm.stripPrefix("n")
     s"""kparam_h AS (${IvfQuantizer.sqlHierK("embeddings", 64)}),
-           n${sfx}h1 AS (SELECT vec_id, n2 FROM $norm),
-           ${IvfQuantizer.lloydSqlAtExpr(
-      "(SELECT k FROM kparam_h)", 1, 64, sampleEvery = 4, sfx = s"${sfx}h1",
-      dimOffset = 0, srcTable = src)},
+           ${IvfQuantizer.lloydSql(
+      "(SELECT k FROM kparam_h)", 1, 64, sampleEvery = 4, sfx = s"${sfx}h1", src = src,
+      norm = norm)},
            gmap$sfx AS (SELECT vec_id, cell AS grp FROM assigned${sfx}h1),
-           ${IvfQuantizer.lloydSqlGrouped(
-      "(SELECT k FROM kparam_h)", 1, 64, sampleEvery = 2, sfx = s"${sfx}h2",
-      gmapCte = s"gmap$sfx", normCte = norm, srcTable = src)},
+           ${IvfQuantizer.lloydSql(
+      "(SELECT k FROM kparam_h)", 1, 64, sampleEvery = 2, sfx = s"${sfx}h2", src = src,
+      norm = norm, gmap = s"gmap$sfx", seedPerGroup = true)},
            leaf AS (SELECT vec_id, grp AS ccell, cell AS scell FROM assigned${sfx}h2)"""
   }
 
@@ -405,7 +404,7 @@ object SimilarityQ {
           FROM embeddings, unnest(generate_series(1, $pqDims)) AS i(i) GROUP BY 1)"""
     }.mkString(",\n")
     val fits = (0 until pqSubs).map { sb =>
-      IvfQuantizer.lloydSqlAt(8, 1, pqDims, 2, s"s$sb", sb * pqDims)
+      IvfQuantizer.lloydSql("8", 1, pqDims, 2, s"s$sb", sb * pqDims)
     }.mkString(",\n")
     val perSub = (0 until pqSubs).map { sb =>
       s"""cb$sb AS (SELECT a.cell, c.dim, CAST(sum(CAST(c.x AS DECIMAL(38,9))) AS DOUBLE) AS sx
@@ -566,7 +565,7 @@ object SimilarityQ {
 
   private def ivfSqlK(k: Int) =
     s"""WITH $normSql,
-        ${graft.ml.IvfQuantizer.lloydSql(8, 2, 64, sampleEvery = 4)},
+        ${graft.ml.IvfQuantizer.lloydSql("8", 2, 64, sampleEvery = 4)},
         q AS (SELECT cr.vec_id AS query_id, cr.cell, e.embedding AS qe
               FROM cellranks cr JOIN embeddings e ON e.vec_id = cr.vec_id
               WHERE cr.vec_id < 5 AND cr.rn <= 2),
@@ -687,7 +686,7 @@ object SimilarityQ {
         Sampling.stratifiedSample(cells, "vec_id", Seq("cell"), 20)
       },
       Some(s"""WITH $normSql,
-               ${graft.ml.IvfQuantizer.lloydSql(8, 2, 64, sampleEvery = 4)}
+               ${graft.ml.IvfQuantizer.lloydSql("8", 2, 64, sampleEvery = 4)}
                SELECT cell, vec_id FROM (
                  SELECT cell, vec_id,
                    row_number() OVER (PARTITION BY cell
@@ -1622,7 +1621,7 @@ object SimilarityQ {
             (col("proto_rank") * 4 > col("__n")).cast("long").as("kept"))
       },
       Some(s"""WITH $normSql,
-               ${graft.ml.IvfQuantizer.lloydSql(8, 2, 64, sampleEvery = 4)},
+               ${graft.ml.IvfQuantizer.lloydSql("8", 2, 64, sampleEvery = 4)},
                coss AS (SELECT a.vec_id, a.cell,
                           d.dot / nullif(sqrt(n.n2) * sqrt(ns.ns2), CAST(0.0 AS DOUBLE)) AS cos
                         FROM assigned a
@@ -1681,9 +1680,9 @@ object SimilarityQ {
                 JOIN assignedcq a ON a.cell = c.cell
                 WHERE a.vec_id <> c.query_id)"""
     // full-vector norms for the coarse fit under a non-colliding name
-    // (lloydSqlAt(sfx) reads n{sfx}; PQ sub-fits use ns0..ns7)
+    // (PQ sub-fits use ns0..ns7)
     s"""WITH ${normCte("ncq")},
-        ${IvfQuantizer.lloydSqlAt(8, 2, 64, 4, "cq", 0)},
+        ${IvfQuantizer.lloydSql("8", 2, 64, 4, "cq", norm = "ncq")},
         $cands,
         ${pqTablesSql(qWhere)},
         ${pqTop3Sql("allt JOIN cp USING (query_id, vec_id)", "")}"""

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
@@ -64,6 +65,54 @@ object TextQ {
                    CAST(sum(y) AS BIGINT) AS pos,
                    CAST(sum(y) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS frac_pos
                  FROM cb0 GROUP BY 1)"""
+
+  /** The mm7–mm9 inputs: documents (doc_id, text, source) and their
+    * [[alignmentScores]] against the paired embeddings.
+    */
+  private def alignment(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val docs = t(s, d, "documents").select(col("doc_id"), col("text"), col("source"))
+    (docs, alignmentScores(docs, t(s, d, "embeddings").select(col("vec_id"), col("embedding"))))
+  }
+
+  /** (doc_id, align_score): the exact cosine between each doc's 64-dim
+    * signed hashed bag-of-words vector and its embedding on the shared
+    * id ([[Multimodal.alignmentScores]]).
+    */
+  private[graft] def alignmentScores(docs: DataFrame, embs: DataFrame): DataFrame =
+    Multimodal.alignmentScores(docs, embs, "doc_id", "text", "vec_id", "embedding", dims = 64)
+
+  /** The mm7 ledger: every doc of `docs(doc_id, text, …)` with its score
+    * from `al` (NULL when it has no paired embedding or a zero norm); the
+    * text column is dropped.
+    */
+  private[graft] def alignmentLedger(docs: DataFrame, al: DataFrame): DataFrame =
+    docs.drop("text").join(al, Seq("doc_id"), "left")
+
+  /** The gate's fail-closed keep flag at threshold `tau`: a NULL score or
+    * a NULL threshold never passes.
+    */
+  private[graft] def keepAt(tau: Column): Column =
+    coalesce(col("align_score") >= tau, lit(false)).cast("long").as("keep")
+
+  /** mm8/mm9's calibration input: (source, align_q), the score quantized
+    * to a 1e-4 grid (floor is engine-exact on identical doubles).
+    */
+  private def alignGrid(docs: DataFrame, al: DataFrame): DataFrame =
+    docs.select("doc_id", "source").join(al, "doc_id")
+      .select(
+        col("source"),
+        (floor(col("align_score") * lit(10000.0d)) / lit(10000.0d)).as("align_q"))
+
+  /** Oracle twin of [[alignGrid]]: the alignment CTEs and `sq(source,
+    * align_q)`.
+    */
+  private val alignGridSql =
+    s"""${Multimodal.sqlAlignment(64)},
+        sq AS (SELECT d.source,
+                 floor(a.align_score * CAST(10000 AS DOUBLE))
+                   / CAST(10000 AS DOUBLE) AS align_q
+               FROM align a JOIN documents d ON d.doc_id = a.doc_id
+               WHERE a.align_score IS NOT NULL)"""
 
   /** Rounds for the registered BPE fit/encode pair — MUST be declared
     * before `defs` (the oracle strings are built eagerly at object init;
@@ -609,15 +658,9 @@ object TextQ {
       // equi-join on the id (bucket both sides at 100 TB), calibration
       // of τ is mm8's job — nothing corpus × corpus anywhere
       (s, d) => {
-        val docs = t(s, d, "documents").select(col("doc_id"), col("text"), col("source"))
-        val al = Multimodal.alignmentScores(
-          docs, t(s, d, "embeddings").select(col("vec_id"), col("embedding")),
-          "doc_id", "text", "vec_id", "embedding", dims = 64)
-        docs.select("doc_id", "source").join(al, Seq("doc_id"), "left")
-          .select(
-            col("doc_id"), col("source"), col("align_score"),
-            coalesce(col("align_score") >= lit(0.0d), lit(false))
-              .cast("long").as("keep"))
+        val (docs, al) = alignment(s, d)
+        alignmentLedger(docs, al)
+          .select(col("doc_id"), col("source"), col("align_score"), keepAt(lit(0.0d)))
       },
       Some(s"""WITH ${Multimodal.sqlAlignment(64)}
                SELECT d.doc_id, d.source, a.align_score,
@@ -636,25 +679,11 @@ object TextQ {
       // distinct values per source at ANY corpus size, vs all-distinct
       // raw cosines), then p10/p25/p50/p75/p90 per source
       (s, d) => {
-        val al = Multimodal.alignmentScores(
-          t(s, d, "documents").select(col("doc_id"), col("text")),
-          t(s, d, "embeddings").select(col("vec_id"), col("embedding")),
-          "doc_id", "text", "vec_id", "embedding", dims = 64)
-        val sq = t(s, d, "documents").select(col("doc_id"), col("source"))
-          .join(al, "doc_id")
-          .select(
-            col("source"),
-            (floor(col("align_score") * lit(10000.0d)) / lit(10000.0d))
-              .as("align_q"))
-        Stats.exactQuantiles(sq, Seq("source"), "align_q",
+        val (docs, al) = alignment(s, d)
+        Stats.exactQuantiles(alignGrid(docs, al), Seq("source"), "align_q",
           Seq(0.1, 0.25, 0.5, 0.75, 0.9))
       },
-      Some(s"""WITH ${Multimodal.sqlAlignment(64)},
-               sq AS (SELECT d.source,
-                        floor(a.align_score * CAST(10000 AS DOUBLE))
-                          / CAST(10000 AS DOUBLE) AS align_q
-                      FROM align a JOIN documents d ON d.doc_id = a.doc_id
-                      WHERE a.align_score IS NOT NULL),
+      Some(s"""WITH $alignGridSql,
                ${Stats.exactQuantilesSql("sq", "source", "align_q", Seq(0.1, 0.25, 0.5, 0.75, 0.9))}
                SELECT source, q, q_value FROM quant""")),
 
@@ -673,30 +702,14 @@ object TextQ {
       // (no scored docs). Determinism: the quantile is the proven mm8
       // value; the comparison is one boolean on bit-identical doubles
       (s, d) => {
-        val docs = t(s, d, "documents").select(col("doc_id"), col("text"), col("source"))
-        val al = Multimodal.alignmentScores(
-          docs, t(s, d, "embeddings").select(col("vec_id"), col("embedding")),
-          "doc_id", "text", "vec_id", "embedding", dims = 64)
-        val sq = docs.select("doc_id", "source").join(al, "doc_id")
-          .select(
-            col("source"),
-            (floor(col("align_score") * lit(10000.0d)) / lit(10000.0d))
-              .as("align_q"))
-        val tau = Stats.exactQuantiles(sq, Seq("source"), "align_q", Seq(0.1))
+        val (docs, al) = alignment(s, d)
+        val tau = Stats.exactQuantiles(alignGrid(docs, al), Seq("source"), "align_q", Seq(0.1))
           .select(col("source"), col("q_value").as("tau"))
-        docs.select("doc_id", "source").join(al, Seq("doc_id"), "left")
+        alignmentLedger(docs, al)
           .join(broadcast(tau), Seq("source"), "left")
-          .select(
-            col("doc_id"), col("source"), col("align_score"), col("tau"),
-            coalesce(col("align_score") >= col("tau"), lit(false))
-              .cast("long").as("keep"))
+          .select(col("doc_id"), col("source"), col("align_score"), col("tau"), keepAt(col("tau")))
       },
-      Some(s"""WITH ${Multimodal.sqlAlignment(64)},
-               sq AS (SELECT d.source,
-                        floor(a.align_score * CAST(10000 AS DOUBLE))
-                          / CAST(10000 AS DOUBLE) AS align_q
-                      FROM align a JOIN documents d ON d.doc_id = a.doc_id
-                      WHERE a.align_score IS NOT NULL),
+      Some(s"""WITH $alignGridSql,
                ${Stats.exactQuantilesSql("sq", "source", "align_q", Seq(0.1))},
                tau AS (SELECT source, q_value AS tau FROM quant)
                SELECT d.doc_id, d.source, a.align_score, tau.tau,
@@ -721,19 +734,9 @@ object TextQ {
           .select(col("doc_id"), col("avg_logprob"))
         Stats.spearman(q.join(u, "doc_id"), "quality_score", "avg_logprob")
       },
-      Some(s"""WITH ${Text.qualitySql()},
-               tok AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS token
-                       FROM documents),
-               vocab AS (SELECT token, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY 1),
-               tot AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM vocab),
-               lp AS (SELECT tok.doc_id,
-                        ln(CAST(v.c AS DOUBLE) / CAST(tot.t AS DOUBLE)) AS lp
-                      FROM tok JOIN vocab v ON v.token = tok.token CROSS JOIN tot),
-               ul AS (SELECT doc_id,
-                        ${graft.ops.Exact.sqlDsumTrunc9("lp")} / CAST(count(*) AS DOUBLE) AS y
-                      FROM lp GROUP BY 1),
-               xy AS (SELECT q.quality_score AS x, ul.y
-                      FROM qual q JOIN ul ON ul.doc_id = q.doc_id),
+      Some(s"""WITH ${Text.qualitySql()}, ${Text.unigramLogProbSql},
+               xy AS (SELECT q.quality_score AS x, u.avg_logprob AS y
+                      FROM qual q JOIN ulp u ON u.doc_id = q.doc_id),
                rxc AS (SELECT x AS v, CAST(count(*) AS BIGINT) AS cnt FROM xy GROUP BY 1),
                rx2 AS (SELECT v, 2 * coalesce(sum(cnt) OVER (ORDER BY v
                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), CAST(0 AS BIGINT))
@@ -1011,16 +1014,8 @@ object TextQ {
       // log-probability per doc. MathLn for libm parity, dsumTrunc9 for an
       // order-independent sum of the per-token log-probs
       (s, d) => Text.unigramLogProb(t(s, d, "documents"), "doc_id", "text"),
-      Some(s"""WITH tok AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS token
-                            FROM documents),
-               vocab AS (SELECT token, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY 1),
-               tot AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM vocab),
-               lp AS (SELECT tok.doc_id,
-                        ln(CAST(v.c AS DOUBLE) / CAST(tot.t AS DOUBLE)) AS lp
-                      FROM tok JOIN vocab v ON v.token = tok.token CROSS JOIN tot)
-               SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-                 ${Exact.sqlDsumTrunc9("lp")} / CAST(count(*) AS DOUBLE) AS avg_logprob
-               FROM lp GROUP BY 1""")),
+      Some(s"""WITH ${Text.unigramLogProbSql}
+               SELECT doc_id, n_tokens, avg_logprob FROM ulp""")),
 
     QDef(
       "t16_bigram_logprob",
@@ -1339,18 +1334,9 @@ object TextQ {
           .groupBy("lang", "ppl_bucket")
           .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"))
       },
-      Some(s"""WITH tok AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS token
-                            FROM documents),
-               vocab AS (SELECT token, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY 1),
-               tot AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM vocab),
-               lp AS (SELECT tok.doc_id,
-                        ln(CAST(v.c AS DOUBLE) / CAST(tot.t AS DOUBLE)) AS lp
-                      FROM tok JOIN vocab v ON v.token = tok.token CROSS JOIN tot),
-               sc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-                        ${Exact.sqlDsumTrunc9("lp")} / CAST(count(*) AS DOUBLE) AS avg_logprob
-                      FROM lp GROUP BY 1),
+      Some(s"""WITH ${Text.unigramLogProbSql},
                j AS (SELECT sc.doc_id, sc.n_tokens, sc.avg_logprob, d.lang
-                     FROM sc JOIN documents d ON d.doc_id = sc.doc_id),
+                     FROM ulp sc JOIN documents d ON d.doc_id = sc.doc_id),
                r AS (SELECT lang, n_tokens,
                        CAST(row_number() OVER (PARTITION BY lang
                          ORDER BY avg_logprob DESC, doc_id) AS BIGINT) AS rk,

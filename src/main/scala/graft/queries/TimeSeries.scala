@@ -282,13 +282,7 @@ object TimeSeries {
             min("ts_us").as("start_us"),
             max("ts_us").as("end_us")),
       Some(s"""WITH ev AS ($evSql),
-               b AS (SELECT user_id, event_id, ts_us,
-                       CASE WHEN lag(ts_us) OVER w IS NULL
-                              OR ts_us - lag(ts_us) OVER w > 1800000000 THEN 1 ELSE 0 END AS chg
-                     FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-               sx AS (SELECT *, CAST(sum(chg) OVER (PARTITION BY user_id
-                        ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) - 1 AS BIGINT) AS session_idx
-                      FROM b)
+               ${Segments.gapSessionsSql("ev", Seq("user_id"), 30L * 60L * 1000000L)}
                SELECT user_id, session_idx, CAST(count(*) AS BIGINT) AS n_events,
                  min(ts_us) AS start_us, max(ts_us) AS end_us
                FROM sx GROUP BY 1, 2""")),
@@ -512,13 +506,7 @@ object TimeSeries {
       },
       Some(s"""WITH ev AS ($evSql),
                f AS (SELECT * FROM ev WHERE event_type IN ('view', 'click')),
-               b AS (SELECT user_id, event_id, ts_us,
-                       CASE WHEN lag(ts_us) OVER w IS NULL
-                              OR ts_us - lag(ts_us) OVER w > 1800000000 THEN 1 ELSE 0 END AS chg
-                     FROM f WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-               sx AS (SELECT *, CAST(sum(chg) OVER (PARTITION BY user_id
-                        ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) - 1 AS BIGINT) AS session_idx
-                      FROM b),
+               ${Segments.gapSessionsSql("f", Seq("user_id"), 30L * 60L * 1000000L)},
                sess AS (SELECT user_id, session_idx, min(ts_us) AS start_us, max(ts_us) AS end_us
                         FROM sx GROUP BY 1, 2),
                p AS (SELECT user_id, ts_us, value FROM ev WHERE event_type = 'purchase')
@@ -562,21 +550,8 @@ object TimeSeries {
       "a11_quantiles",
       (s, d) =>
         Stats.exactQuantiles(events(s, d), Seq("event_type"), "value", Seq(0.25, 0.5, 0.75)),
-      Some("""WITH r AS (SELECT event_type, value,
-                row_number() OVER (PARTITION BY event_type ORDER BY value) AS rn,
-                count(*) OVER (PARTITION BY event_type) AS n
-                FROM events WHERE value IS NOT NULL),
-              qs AS (SELECT CAST(q AS DOUBLE) AS q FROM (VALUES (0.25), (0.5), (0.75)) t(q)),
-              p AS (SELECT r.event_type, qs.q, r.value, r.rn,
-                      CAST(1.0 AS DOUBLE) + CAST(n - 1 AS DOUBLE) * qs.q AS pos
-                    FROM r CROSS JOIN qs)
-              SELECT event_type, q,
-                min(CASE WHEN rn = CAST(floor(pos) AS BIGINT) THEN value END)
-                + (min(CASE WHEN rn = CAST(ceil(pos) AS BIGINT) THEN value END)
-                   - min(CASE WHEN rn = CAST(floor(pos) AS BIGINT) THEN value END))
-                  * min(pos - floor(pos)) AS q_value
-              FROM p WHERE rn = CAST(floor(pos) AS BIGINT) OR rn = CAST(ceil(pos) AS BIGINT)
-              GROUP BY 1, 2""")),
+      Some(s"""WITH ${Stats.exactQuantilesSql("events", "event_type", "value", Seq(0.25, 0.5, 0.75))}
+               SELECT event_type, q, q_value FROM quant""")),
 
     QDef(
       "p17_winsorize",
@@ -587,25 +562,11 @@ object TimeSeries {
         Cleaning.winsorize(
           events(s, d).select("event_type", "event_id", "value"),
           Seq("event_type"), "value", 0.05, 0.95, "winsorized"),
-      Some("""WITH r AS (SELECT event_type, value,
-                row_number() OVER (PARTITION BY event_type ORDER BY value) AS rn,
-                count(*) OVER (PARTITION BY event_type) AS n
-                FROM events WHERE value IS NOT NULL),
-              qs AS (SELECT CAST(q AS DOUBLE) AS q FROM (VALUES (0.05), (0.95)) t(q)),
-              p AS (SELECT r.event_type, qs.q, r.value, r.rn,
-                      CAST(1.0 AS DOUBLE) + CAST(n - 1 AS DOUBLE) * qs.q AS pos
-                    FROM r CROSS JOIN qs),
-              qv AS (SELECT event_type, q,
-                      min(CASE WHEN rn = CAST(floor(pos) AS BIGINT) THEN value END)
-                      + (min(CASE WHEN rn = CAST(ceil(pos) AS BIGINT) THEN value END)
-                         - min(CASE WHEN rn = CAST(floor(pos) AS BIGINT) THEN value END))
-                        * min(pos - floor(pos)) AS q_value
-                    FROM p WHERE rn = CAST(floor(pos) AS BIGINT) OR rn = CAST(ceil(pos) AS BIGINT)
-                    GROUP BY 1, 2),
+      Some(s"""WITH ${Stats.exactQuantilesSql("events", "event_type", "value", Seq(0.05, 0.95))},
               b AS (SELECT event_type,
                      min(CASE WHEN q = CAST(0.05 AS DOUBLE) THEN q_value END) AS lo,
                      min(CASE WHEN q = CAST(0.95 AS DOUBLE) THEN q_value END) AS hi
-                    FROM qv GROUP BY 1)
+                    FROM quant GROUP BY 1)
               SELECT e.event_type, e.event_id, e.value,
                 CASE WHEN e.value IS NULL THEN NULL
                      ELSE least(greatest(e.value, b.lo), b.hi) END AS winsorized
@@ -660,16 +621,10 @@ object TimeSeries {
             max("ts_us").as("end_us"))
           .select("user_id", "start_us", "end_us", "n_events"),
       Some(s"""WITH ev AS ($evSql),
-               b AS (SELECT user_id, event_id, ts_us,
-                       CASE WHEN lag(ts_us) OVER w IS NULL
-                              OR ts_us - lag(ts_us) OVER w > 1800000000 THEN 1 ELSE 0 END AS chg
-                     FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-               sx AS (SELECT *, sum(chg) OVER (PARTITION BY user_id
-                        ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) AS sid
-                      FROM b)
+               ${Segments.gapSessionsSql("ev", Seq("user_id"), 30L * 60L * 1000000L)}
                SELECT user_id, min(ts_us) AS start_us, max(ts_us) AS end_us,
                  CAST(count(*) AS BIGINT) AS n_events
-               FROM sx GROUP BY user_id, sid""")),
+               FROM sx GROUP BY user_id, session_idx""")),
 
     QDef(
       "w15_calendar_agg",

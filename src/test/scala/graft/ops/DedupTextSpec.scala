@@ -27,6 +27,17 @@ class DedupTextSpec extends SparkSpec {
     withH.groupBy(col(idCol)).agg(mh(0), (1 until nHashes).map(mh): _*)
   }
 
+  /** (id, shingle) rows, de-duplicated per doc, for the docs with at
+    * least k tokens — the string form of `Text.shingleKeySet`, kept here
+    * as the reference the key set and the minhash signatures are checked
+    * against.
+    */
+  private def shingleSet(
+      df: org.apache.spark.sql.DataFrame, idCol: String, textCol: String, k: Int) =
+    df.filter(size(Text.tokens(col(textCol))) >= k)
+      .select(col(idCol),
+        explode(array_distinct(Text.shingles(Text.tokens(col(textCol)), k))).as("shingle"))
+
   private val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog"),
     (2L, "the quick brown fox jumps over the lazy cat"), // near-dup of 1
@@ -50,7 +61,7 @@ class DedupTextSpec extends SparkSpec {
   }
 
   test("array-local minhash signatures equal the exploded-groupBy formulation") {
-    val sh = Text.shingleSet(docs, "doc_id", "text", 3)
+    val sh = shingleSet(docs, "doc_id", "text", 3)
     val viaRows = minhashSignatures(sh, "doc_id", 8).orderBy("doc_id").collect().toSeq
     val viaLocal = Dedup.minhashSignaturesLocal(docs, "doc_id", "text", 3, 8)
       .orderBy("doc_id").collect().toSeq
@@ -196,7 +207,7 @@ class DedupTextSpec extends SparkSpec {
   }
 
   test("shingleKeySet: same equality relation as the string shingle set") {
-    val ss = Text.shingleSet(docs, "doc_id", "text", 3)
+    val ss = shingleSet(docs, "doc_id", "text", 3)
       .as[(Long, String)].collect().groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val ks = Text.shingleKeySet(docs, "doc_id", "text", 3)
       .as[(Long, Long)].collect().groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap

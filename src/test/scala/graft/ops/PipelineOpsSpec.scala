@@ -214,20 +214,28 @@ class PipelineOpsSpec extends SparkSpec {
     ppr.foreach { case (id, (_, got)) => assert(got == r(id), s"node $id: $got != ${r(id)}") }
   }
 
-  test("pagerankScaled: checkpointEvery truncates lineage without changing values") {
-    val pairs = Seq((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L)).toDF("a", "b")
+  test("pagerankScaled: 12 cut rounds == a plain-Scala scaled-integer reference") {
+    val pairs = Seq((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L), (3L, 4L)).toDF("a", "b")
     val nodes = Seq(1L, 2L, 3L, 4L, 5L, 6L).toDF("id0")
-    val plain = Graph.pagerankScaled(pairs, nodes, "a", "b", "id0", iters = 12)
-      .orderBy("id").as[(Long, Long)].collect().toSeq
+    val got = Graph.pagerankScaled(pairs, nodes, "a", "b", "id0", iters = 12)
+    val rows = got.as[(Long, Long)].collect().toMap
+    // the rounds before the last were cut: a LogicalRDD scan leaf
+    // replaces the nested join tower
+    assert(got.queryExecution.optimizedPlan.toString.contains("LogicalRDD"))
     Caches.releaseAll()
-    val ckpt = Graph.pagerankScaled(pairs, nodes, "a", "b", "id0", iters = 12,
-      checkpointEvery = 1)
-    val ckptRows = ckpt.orderBy("id").as[(Long, Long)].collect().toSeq
-    assert(ckptRows == plain)
-    // the checkpoint actually bounds the plan: the iterated join tower is
-    // gone (a LogicalRDD scan leaf replaces the nested lineage)
-    assert(ckpt.queryExecution.optimizedPlan.toString.contains("LogicalRDD"))
-    Caches.releaseAll()
+    // scaled-integer reference: rank DIV deg per edge, base + 85·Σ DIV 100
+    val und = Seq((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L), (3L, 4L))
+    val edges = und ++ und.map(_.swap)
+    val deg = edges.groupBy(_._1).map { case (s, es) => s -> es.size.toLong }
+    val sc = Graph.Scale
+    var r = (1L to 6L).map(_ -> sc).toMap
+    for (_ <- 1 to 12) {
+      val sums = edges.groupBy(_._2).map { case (dst, es) =>
+        dst -> es.map { case (s, _) => r(s) / deg(s) }.sum
+      }
+      r = r.keys.map(id => id -> (15L * sc / 100 + 85L * sums.getOrElse(id, 0L) / 100L)).toMap
+    }
+    assert(rows == r)
   }
 
   test("pagerankScaled survives a 10^6-node component: scale derives from n, no overflow") {

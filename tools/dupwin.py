@@ -2,8 +2,10 @@
 """Count duplicated lines in Scala sources.
 
 A window is 5 consecutive lines, each stripped of surrounding whitespace.
-A window counts when at least 4 of its lines are code lines (not a
-comment line starting with //, /* or *) longer than 12 characters. A line
+A window counts when at least 4 of its lines are code lines longer than
+12 characters. A comment line (starting with //, /* or *) and a `package`
+or `import` header line are not code: the shared headers of a package's
+files are not copies. A line
 is duplicated when it lies in a counted window whose text occurs more than
 once anywhere under the root. Prints the total, then one line per file
 with duplicated lines, most first.
@@ -20,7 +22,7 @@ MIN_LEN = 12
 
 
 def is_code(line):
-    return len(line) > MIN_LEN and not line.startswith(("//", "/*", "*"))
+    return len(line) > MIN_LEN and not line.startswith(("//", "/*", "*", "package ", "import "))
 
 
 def scan(root):
